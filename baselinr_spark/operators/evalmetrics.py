@@ -802,10 +802,11 @@ def conformal_keep_threshold(
     corpus, the guarantee is about the GOOD docs you'd wrongly drop —
     the quantity a filter recipe actually budgets.
 
-    Returns ONE row: (alpha, n_cal, k, threshold, total_docs,
-    kept_docs, kept_frac). threshold is NULL when k > n (calibration
-    set too small for the requested coverage) — then every document
-    is kept.
+    Returns one row: (alpha, n_cal, k, threshold, total_docs,
+    kept_docs, kept_frac), or zero rows when `df` is empty (matching
+    the DuckDB twin's GROUP BY). threshold is NULL when k > n
+    (calibration set too small for the requested coverage) — then
+    every document is kept.
 
     Scale design: the calibration cohort is seed-set-sized by
     construction, so its count and its k-th order statistic

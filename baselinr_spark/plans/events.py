@@ -134,6 +134,17 @@ def _normalize_type_py(t: str) -> str:
     return _TYPE_SYNONYMS.get(t, t)
 
 
+def _naive_utc(ts):
+    """Snapshot timestamp as naive UTC, the form write_schema_snapshot
+    writes; tz-aware ones (older Spark-written snapshots) are converted
+    to UTC, never to the host's local zone, so both kinds compare."""
+    if ts.tzinfo is None:
+        return ts
+    import datetime as _dt
+
+    return ts.astimezone(_dt.timezone.utc).replace(tzinfo=None)
+
+
 def schema_change_events(
     spark: SparkSession, schema_dir: str, run_id: str
 ) -> DataFrame:
@@ -163,14 +174,11 @@ def schema_change_events(
         return _finish(empty, run_id, "schema_change")
     rows = tbl.to_pylist()
 
-    def _naive(ts):
-        return ts.astimezone(None).replace(tzinfo=None) if ts.tzinfo else ts
-
     latest: dict[str, object] = {}
     for r in rows:
         if r["run_id"] == run_id or r["ts"] is None:
             continue
-        ts = _naive(r["ts"])
+        ts = _naive_utc(r["ts"])
         if r["run_id"] not in latest or ts > latest[r["run_id"]]:
             latest[r["run_id"]] = ts
     if not latest:

@@ -22,8 +22,10 @@ planner.py:140-225) provided by the processed-partition manifest.
 
 from __future__ import annotations
 
+import contextlib
 import datetime as dt
 import json
+import logging
 import os
 import time
 import uuid
@@ -37,6 +39,8 @@ from ..functions.langid import CLASSES
 from ..operators import profiling
 from ..operators.drift import psi_pairwise_lag
 from ..sources import catalog, manifest
+
+_log = logging.getLogger(__name__)
 
 #: reference partial-profiling cap: max partitions per run
 #: (/root/reference/baselinr/config/schema.py:898)
@@ -360,56 +364,124 @@ def _needed_metric_partitions(metrics_dir: str, chunk_strs: list[str]) -> list[s
     return sorted(needed)
 
 
-def _chunk_bytes(input_path: str, chunk) -> int:
-    """On-disk bytes of the chunk's dt partitions (drives the AQE advisory
-    partition size). Driver-side directory stat — O(files), no Spark job."""
-    total = 0
-    for p in chunk:
-        d = os.path.join(input_path, f"dt={p}")
-        if not os.path.isdir(d):
-            continue
-        for root, _, files in os.walk(d):
-            for f in files:
-                try:
-                    total += os.path.getsize(os.path.join(root, f))
-                except OSError:
-                    pass
-    return total
+#: Spark's default for each conf run_pipeline overrides, restored as an
+#: explicit value when the caller had not set the key
+_CONF_DEFAULTS = {
+    "spark.sql.files.maxPartitionBytes": str(128 << 20),
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes": str(64 << 20),
+    "spark.sql.shuffle.partitions": "200",
+    "spark.sql.adaptive.enabled": "true",
+}
 
 
-def _resolve_skew_mode(input_path: str, chunk, par: int) -> str:
-    """skew_mode='auto': pick scan-split balancing when the layout can
-    actually be split finely enough, else fall back to the rebalance
-    shuffle. Parquet scan splits cannot be smaller than a row group, so
-    the decisive stat is the largest per-row-group granule (file bytes /
-    row groups) and whether the chunk yields enough granules to smooth
-    waves across `par` slots. Driver-side footer reads — O(files), no
-    data scan (same contract as the incremental planner's estimates)."""
+@contextlib.contextmanager
+def _session_conf(spark: SparkSession, conf: dict):
+    """Apply SQL conf overrides for the body and restore the caller's
+    values even when the body raises, so other queries on a shared
+    session keep their configuration."""
+    prior = {k: spark.conf.get(k, _CONF_DEFAULTS[k]) for k in conf}
     try:
-        import pyarrow.parquet as pq
-    except ImportError:  # pragma: no cover
-        return "rebalance"
-    max_granule = 0
-    n_granules = 0
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in prior.items():
+            spark.conf.set(k, v)
+
+
+def split_partition_bytes(nbytes: int, par: int) -> int:
+    """spark.sql.files.maxPartitionBytes for skew_mode='split' over an
+    input of `nbytes` on `par` slots: ~12 waves per core (the last-wave
+    tail idles fewer cores), capped at 128 MB. The floor min(4 MB,
+    nbytes/(3·par)) keeps >= 3 waves on small inputs, and 256 KB is the
+    absolute minimum.
+
+    Every task of the fused UDF stage pays a fixed Python cost. On a
+    4-vCPU host at local[4], an identity pandas_udf over the 76 files
+    (3.4 MB) of a 2k-doc pages warehouse took 4.9-5.3 s as 76 tasks and
+    0.4-0.5 s as 4, i.e. ~250 ms of slot time per task. The kernels cost
+    ~700 µs/doc, so a 4 MB split (~1.6 s of work at 1.75 KB/doc) keeps
+    the fixed cost under ~15%, while a 256 KB split is mostly fixed cost
+    — and a split under openCostInBytes (512 KB) plus a file's size
+    holds that one file."""
+    lo = max(256 << 10, min(4 << 20, nbytes // (3 * par)))
+    return max(lo, min(128 << 20, nbytes // (12 * par)))
+
+
+#: skew_mode='auto' picks split only when the split floor nbytes/(3·par)
+#: reaches this (see _resolve_skew_mode)
+_AUTO_SPLIT_MIN_BYTES = 2 << 20
+
+
+def _chunk_layout(input_path: str, chunk) -> tuple[int, list, str]:
+    """One driver-side walk of the chunk's dt partitions — O(files), no
+    Spark job. Returns (on-disk bytes, [(parquet path, bytes)], error):
+    `error` names the first file that could not be stat'ed ('' if none);
+    such a file is logged and left out of the byte total."""
+    total, parquet, error = 0, [], ""
     for p in chunk:
         d = os.path.join(input_path, f"dt={p}")
-        if not os.path.isdir(d):
-            continue
         for root, _, files in os.walk(d):
             for f in files:
-                if not f.endswith(".parquet"):
-                    continue
                 full = os.path.join(root, f)
                 try:
-                    rgs = max(pq.ParquetFile(full).metadata.num_row_groups, 1)
-                    max_granule = max(max_granule,
-                                      os.path.getsize(full) // rgs)
-                    n_granules += rgs
-                except Exception:
-                    return "rebalance"  # unreadable footer → play safe
-    if n_granules >= 4 * par and max_granule <= (64 << 20):
-        return "split"
-    return "rebalance"
+                    size = os.path.getsize(full)
+                except OSError as e:
+                    _log.warning("chunk sizing: cannot stat %s: %s", full, e)
+                    error = error or f"cannot stat {full}: {e}"
+                    continue
+                total += size
+                if f.endswith(".parquet"):
+                    parquet.append((full, size))
+    return total, parquet, error
+
+
+def _resolve_skew_mode(layout: tuple[int, list, str], par: int) -> tuple[str, str]:
+    """skew_mode='auto' for a chunk with `layout` (from _chunk_layout) on
+    `par` slots. Returns (mode, reason); the reason is '' for split.
+
+    Split pays only when every split carries enough work to amortise the
+    fixed per-task Python cost (split_partition_bytes). So a chunk under
+    3·par·2 MB, where split's floor would be under 2 MB, takes the AQE
+    rebalance, which packs it into a few byte-balanced tasks (1 MB
+    advisory floor) that each write one dt dir. Measured on a 4-vCPU host
+    at local[4] over 76-file pages warehouses (run_pipeline wall, warm
+    session): rebalance won at 10k docs (15 MB: 9.3-10.5 s vs 10.9-11.6
+    s), was about even at 15k (22 MB: 10.3-14.1 s vs 11.2-12.0 s) and
+    lost at 20k (29 MB: 13.5-14.3 s vs
+    11.3-11.8 s), so the gate sits at 24 MB for par=4. At and above
+    3·par·4 MB the split floor sits at its 4 MB cap, and the mode and the
+    split bytes are what the footers alone decided before the gate.
+
+    Past the gate the parquet footers decide: scan splits cannot be
+    smaller than a row group, so split needs >= 4·par row groups and no
+    row-group granule (file bytes / row groups) over 64 MB. Footers are
+    read only past the byte gate, driver-side. A file that cannot be
+    stat'ed, or whose footer cannot be read, falls back to rebalance; it
+    is logged and named in the reason."""
+    nbytes, files, error = layout
+    if error:
+        return "rebalance", error
+    gate = 3 * par * _AUTO_SPLIT_MIN_BYTES
+    if nbytes < gate:
+        return "rebalance", f"chunk {nbytes} B below split gate {gate} B"
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    max_granule = n_granules = 0
+    for full, size in files:
+        try:
+            rgs = max(pq.ParquetFile(full).metadata.num_row_groups, 1)
+        except (OSError, pa.ArrowInvalid) as e:
+            _log.warning("skew_mode auto: unreadable footer %s: %s", full, e)
+            return "rebalance", f"unreadable footer {full}: {e}"
+        max_granule = max(max_granule, size // rgs)
+        n_granules += rgs
+    if n_granules < 4 * par:
+        return "rebalance", f"{n_granules} row groups < 4·par ({4 * par})"
+    if max_granule > (64 << 20):
+        return "rebalance", f"row-group granule {max_granule} B > 64 MB"
+    return "split", ""
 
 
 def run_pipeline(
@@ -508,65 +580,34 @@ def run_pipeline(
 
     for ci, chunk in enumerate(chunks):
         t0 = time.time()
+        par = spark.sparkContext.defaultParallelism
+        layout = _chunk_layout(input_path, chunk)
+        nbytes = layout[0]
         chunk_skew = skew_mode
         if skew_mode == "auto":
-            chunk_skew = _resolve_skew_mode(
-                input_path, chunk, spark.sparkContext.defaultParallelism
-            )
-            summary.setdefault("skew_mode_used", {})[",".join(chunk)] = chunk_skew
-        prior_split = spark.conf.get(
-            "spark.sql.files.maxPartitionBytes", str(128 << 20)
-        )
+            chunk_skew, why = _resolve_skew_mode(layout, par)
+            key = ",".join(chunk)
+            summary.setdefault("skew_mode_used", {})[key] = chunk_skew
+            summary.setdefault("skew_mode_reason", {})[key] = why
+        # Both modes size the fused-UDF stage by bytes, and every task
+        # writes into ONE dt dir, so file count ≈ task count, not tasks ×
+        # dts (file commit is driver-serial).
+        # - split: scan splits of split_partition_bytes and ZERO shuffle;
+        #   at 100 TB the rebalance shuffle is ~2x the input in disk +
+        #   network. Splits never cross dt: the input is dt-partitioned.
+        # - rebalance: ONE AQE REBALANCE by dt. Zipf-skewed days are
+        #   skew-split and small days coalesced to the advisory size:
+        #   ~12 waves/core (the UDF stage scaled 0.90 with 12 waves vs
+        #   0.69 with 2-4), at most 128 MB, and at least 1 MB, so a small
+        #   chunk runs as a few tasks rather than one Python task, with
+        #   its fixed ~250 ms of slot time, per small input file.
+        conf = {
+            "spark.sql.adaptive.advisoryPartitionSizeInBytes":
+                str(max(1 << 20, min(128 << 20, nbytes // (12 * par)))),
+        }
         if chunk_skew == "split":
-            # scan-split balancing: with a well-laid-out warehouse
-            # (bounded file sizes, splittable row groups — what Iceberg's
-            # target-file-size maintenance guarantees at scale) sizing the
-            # INPUT splits to ~12 waves/core yields the same byte-balanced
-            # UDF stage as the rebalance shuffle with ZERO shuffle — at
-            # 100 TB that shuffle is ~2x the input in disk+network, the
-            # single largest avoidable cost in the job. Each split belongs
-            # to exactly one dt (input is dt-partitioned), so the dynamic
-            # partition overwrite still writes one file per task into one
-            # dt dir. Use rebalance mode for pathological layouts (many
-            # tiny unsplittable skewed files).
-            par0 = spark.sparkContext.defaultParallelism
-            nbytes = _chunk_bytes(input_path, chunk)
-            # floor: small inputs would otherwise clamp to so few splits
-            # that the UDF stage runs ~1 wave with stragglers doing 2x
-            # duty; guarantee >=3 waves before giving up on balance, but
-            # never go below 256 KB (per-task overhead swamps compute).
-            # At real scale nbytes/(12*par) >> 4 MB and the floor is inert.
-            lo = max(256 << 10, min(4 << 20, nbytes // (3 * par0)))
-            split = max(lo, min(128 << 20, nbytes // (12 * par0)))
-            spark.conf.set("spark.sql.files.maxPartitionBytes", str(split))
-        pages = spark.read.parquet(input_path).filter(
-            F.col("dt").cast("string").isin(chunk)
-        )
-        # prune to the columns the filter actually consumes BEFORE the
-        # shuffle — the raw `html` blob is as large as `text` and is never
-        # read downstream, so carrying it through would double shuffle bytes
-        pages = pages.select("url", "warc_ts", "text", "dt")
-        chunk_frac = fractions.get(chunk[0])
-        if chunk_frac is not None:
-            # cost-cap downgrade: deterministic hash sample (reference
-            # fallback_strategy='sample', incremental/planner.py:287-289)
-            # — a plain filter below the shuffle, reproducible across
-            # runs so resume/backfill see the same sampled cohort
-            from ..operators.profiling import hash_sample
-
-            pages = hash_sample(pages, "url", chunk_frac)
-        # ONE size-aware shuffle: AQE REBALANCE by dt. The zipf-skewed days
-        # are split into ~advisory-sized tasks (skew-split) and small days
-        # coalesced, so the expensive UDF stage is byte-balanced — the
-        # size-awareness a fixed (dt, salt) key lacks (measured round 1: one
-        # straggler with ~40% of the data) — while every output task writes
-        # into ONE dt dir, keeping file count ≈ task count instead of
-        # tasks × dts (file-commit time is driver-serial and was eating
-        # scaling efficiency). Advisory size targets ~12 waves per core —
-        # measured: the UDF stage scales at 0.90 with 12 waves vs 0.69 with
-        # 2-4 (last-wave tail idles cores); the 128 MB cap keeps real-scale
-        # file sizes sane where waves are plentiful anyway.
-        par = spark.sparkContext.defaultParallelism
+            conf["spark.sql.files.maxPartitionBytes"] = str(
+                split_partition_bytes(nbytes, par))
         # fingerprint the inputs BEFORE reading them: a backfill landing
         # while the chunk is processing must be detected by the NEXT
         # reprocess_changed run, so the manifest must record what was
@@ -575,25 +616,29 @@ def run_pipeline(
             p: change_detection.partition_fingerprint(input_path, p)
             for p in chunk
         }
-        adv = max(1 << 20, min(128 << 20,
-                               _chunk_bytes(input_path, chunk) // (12 * par)))
-        prior_adv = spark.conf.get(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes", str(64 << 20)
-        )
-        spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", str(adv))
-        try:
+        with _session_conf(spark, conf):
+            pages = spark.read.parquet(input_path).filter(
+                F.col("dt").cast("string").isin(chunk)
+            )
+            # prune to the columns the filter actually consumes BEFORE the
+            # shuffle — the raw `html` blob is as large as `text` and is
+            # never read downstream, so carrying it would double shuffle
+            # bytes
+            pages = pages.select("url", "warc_ts", "text", "dt")
+            chunk_frac = fractions.get(chunk[0])
+            if chunk_frac is not None:
+                # cost-cap downgrade: deterministic hash sample (reference
+                # fallback_strategy='sample', incremental/planner.py:287-289)
+                # — a plain filter below the shuffle, reproducible across
+                # runs so resume/backfill see the same sampled cohort
+                from ..operators.profiling import hash_sample
+
+                pages = hash_sample(pages, "url", chunk_frac)
             if chunk_skew != "split":
                 pages = pages.hint("rebalance", "dt")
             docs = transform_pages(spark, pages, cfg, run_id,
                                    scrub_mode=scrub_mode)
             catalog.write_partitioned(docs, docs_dir, "dt")
-        finally:
-            # restore the caller's sizes even when the transform or write
-            # raises, so other queries on this shared session keep their
-            # configuration
-            spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-                           prior_adv)
-            spark.conf.set("spark.sql.files.maxPartitionBytes", prior_split)
         t0 = _tick("transform_write", t0)
 
         # Post-transform phases operate on metadata-scale frames (metric
@@ -605,11 +650,11 @@ def run_pipeline(
         # restored before the next chunk's transform. Parameterised via
         # SPARK_GRAFT_META_SHUFFLE for clusters where cohort counts are
         # genuinely large.
-        prior_parts = spark.conf.get("spark.sql.shuffle.partitions", "200")
-        prior_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-        meta_parts = os.environ.get("SPARK_GRAFT_META_SHUFFLE", "8")
-        spark.conf.set("spark.sql.shuffle.partitions", meta_parts)
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        meta_conf = {
+            "spark.sql.shuffle.partitions":
+                os.environ.get("SPARK_GRAFT_META_SHUFFLE", "8"),
+            "spark.sql.adaptive.enabled": "false",
+        }
 
         # metrics from the written output (columnar projection; avoids
         # recomputing UDF scores and avoids caching the full text at scale).
@@ -617,7 +662,7 @@ def run_pipeline(
         # (scalars+buckets, histogram) re-scan cheap columnar parquet,
         # and a persist costs a full materialization job plus cache
         # memory — measured 1-4s SLOWER than the double scan at 1M docs.
-        try:
+        with _session_conf(spark, meta_conf):
             docs_back = spark.read.parquet(docs_dir).filter(
                 F.col("dt").cast("string").isin(chunk)
             ).select("dt", "keep", "drop_reasons", "lang", "perplexity",
@@ -759,9 +804,6 @@ def run_pipeline(
                 ],
             )
             _tick("manifest", t0)
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prior_parts)
-            spark.conf.set("spark.sql.adaptive.enabled", prior_aqe)
         summary["partitions_processed"].extend(chunk)
         summary["doc_count"] += sum(v[0] for v in counts.values())
         summary["kept_count"] += sum(v[1] for v in counts.values())

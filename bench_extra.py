@@ -91,7 +91,9 @@ def mode_stages(n_docs: int = 100000) -> None:
     from baselinr_spark.functions import textfeat
     from baselinr_spark.functions.scoring import make_scoring_udf
     from baselinr_spark.sources.pages import PAGES_LAYOUT_VERSION, write_pages_warehouse
-    from baselinr_spark.plans.pipeline import transform_pages, run_pipeline
+    from baselinr_spark.plans.pipeline import (
+        run_pipeline, split_partition_bytes, transform_pages,
+    )
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark = _build(cpus)
@@ -108,9 +110,7 @@ def mode_stages(n_docs: int = 100000) -> None:
         os.path.getsize(os.path.join(r, f))
         for r, _, fs in os.walk(pages_dir) for f in fs
     )
-    par0 = spark.sparkContext.defaultParallelism
-    lo = max(256 << 10, min(4 << 20, nbytes // (3 * par0)))
-    split = max(lo, min(128 << 20, nbytes // (12 * par0)))
+    split = split_partition_bytes(nbytes, spark.sparkContext.defaultParallelism)
     spark.conf.set("spark.sql.files.maxPartitionBytes", str(split))
 
     cfg = DEFAULT_CONFIG

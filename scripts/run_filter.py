@@ -56,11 +56,15 @@ def main() -> int:
                          "sample")
     ap.add_argument("--skew-mode", default="auto",
                     choices=["auto", "rebalance", "split"],
-                    help="UDF-stage balancing: 'auto' (default) probes the "
-                         "chunk's parquet footers and picks shuffle-free "
-                         "scan-split sizing when the layout is bounded and "
-                         "splittable, else the AQE REBALANCE shuffle — the "
-                         "same choice the benchmark path exercises")
+                    help="UDF-stage balancing: 'auto' (default) takes the "
+                         "AQE REBALANCE shuffle for a chunk under "
+                         "3 x cores x 2 MB (a few byte-balanced Python "
+                         "tasks instead of one per small file); above that "
+                         "it probes the parquet footers and picks "
+                         "shuffle-free scan-split sizing when the layout "
+                         "is bounded and splittable, else rebalance. The "
+                         "choice and its reason are in the summary's "
+                         "skew_mode_used / skew_mode_reason")
     ap.add_argument("--warmup", action="store_true",
                     help="run one partition into a throwaway dir first "
                          "(JIT + python-worker warmup; excluded from "

@@ -103,6 +103,10 @@ def test_summary(pipeline_result):
     assert summary["doc_count"] == len(labels)
     assert summary["kept_count"] == int(docs["keep"].sum())
     assert summary["partitions_skipped"] == 0
+    # the fixture warehouse is far below auto's split gate (3·par·2 MB):
+    # one byte-balanced rebalance, not one Python task per small file
+    assert set(summary["skew_mode_used"].values()) == {"rebalance"}
+    assert all("gate" in why for why in summary["skew_mode_reason"].values())
 
 
 def test_event_taxonomy_bad_partition(spark, tmp_path_factory):

@@ -56,8 +56,9 @@ def test_max_partitions_cap(spark, warehouse, out_root):
 
 def test_skew_mode_split_parity(spark, warehouse, out_root, tmp_path_factory):
     """skew_mode='split' (shuffle-free scan-split balancing) must produce
-    the identical docs table as the default rebalance-shuffle mode."""
-    run_pipeline(spark, warehouse, out_root, run_id="r-reb")
+    the identical docs table as the rebalance-shuffle mode."""
+    run_pipeline(spark, warehouse, out_root, run_id="r-reb",
+                 skew_mode="rebalance")
     split_root = str(tmp_path_factory.mktemp("split"))
     run_pipeline(spark, warehouse, split_root, run_id="r-split",
                  skew_mode="split")
