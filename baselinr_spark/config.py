@@ -89,15 +89,3 @@ RULE_NAMES: tuple[str, ...] = (
 )
 
 DEFAULT_CONFIG = FilterConfig()
-
-
-@dataclass(frozen=True)
-class PipelineConfig:
-    """End-to-end job configuration (paths are directories of the local
-    'warehouse': partitioned parquet emulating Iceberg tables; see
-    sources/catalog.py for the Iceberg fallback rationale)."""
-
-    input_path: str = ""
-    output_root: str = ""
-    filter: FilterConfig = field(default_factory=FilterConfig)
-    partition_col: str = "dt"  # derived as date(warc_ts) — days() transform

@@ -1,4 +1,4 @@
-"""fastText-style language identification as an Arrow-batched pandas UDF.
+"""fastText-style language identification kernel for the fused scoring UDF.
 
 Model: multinomial naive-Bayes over hashed character trigrams (2^16
 buckets), trained at build time on the deterministic synthetic training
@@ -12,7 +12,8 @@ Execution model (north star requirement: broadcast model + Arrow batches,
 no per-row Python):
 - the weight matrix is built once on the driver (deterministic),
   broadcast via SparkContext.broadcast,
-- the pandas UDF lazily dereferences the broadcast per executor,
+- the fused scoring UDF (functions/scoring.py) dereferences the
+  broadcast per executor,
 - scoring is numpy-vectorized per document: text bytes → 24-bit trigram
   codes → multiplicative-hash buckets → bincount → one matmul per doc.
 """
@@ -22,22 +23,12 @@ from __future__ import annotations
 from functools import lru_cache
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from . import synthlang as sl
 
 N_BUCKETS = 1 << 16
 _KNUTH = np.uint64(2654435761)
 CLASSES: tuple[str, ...] = sl.LANGS + (sl.UNKNOWN_LANG,)
-
-LANGID_SCHEMA = T.StructType(
-    [
-        T.StructField("lang_pred", T.StringType()),
-        T.StructField("lang_conf", T.DoubleType()),
-    ]
-)
 
 
 def _trigram_buckets(text: str) -> np.ndarray:
@@ -149,16 +140,3 @@ def score_text(text: str | None, weights: np.ndarray | None = None) -> tuple[str
     so the scalar spec and the batched UDF path are bit-identical."""
     preds, confs = langid_batch([text], weights)
     return preds[0], float(confs[0])
-
-
-def make_langid_udf(spark):
-    """Build + broadcast the model, return a pandas UDF producing a
-    struct<lang_pred:string, lang_conf:double>."""
-    bc = spark.sparkContext.broadcast(build_model())
-
-    @F.pandas_udf(LANGID_SCHEMA)
-    def langid_udf(texts: pd.Series) -> pd.DataFrame:
-        preds, confs = langid_batch(list(texts), bc.value)
-        return pd.DataFrame({"lang_pred": preds, "lang_conf": confs})
-
-    return langid_udf

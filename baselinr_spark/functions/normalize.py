@@ -35,7 +35,7 @@ as extraction (functions/extract.py) and the heuristic rules.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # step 1: zero-width + BOM
@@ -92,12 +92,6 @@ def normalize_text_expr(text: Column) -> Column:
     for pat, rep in REGEX_STEPS:
         s = F.regexp_replace(s, pat, rep)
     return F.trim(s)
-
-
-def normalize_docs(
-    df: DataFrame, text_col: str = "text", out_col: str = "norm_text"
-) -> DataFrame:
-    return df.withColumn(out_col, normalize_text_expr(F.col(text_col)))
 
 
 def _sql_str(text: str) -> str:

@@ -1,4 +1,4 @@
-"""KenLM-style hashed n-gram perplexity scorer as a pandas UDF.
+"""KenLM-style hashed n-gram perplexity kernel for the fused scoring UDF.
 
 Model: word-level n-gram LM (orders 1..3; the table layout supports any
 order) with stupid backoff (alpha=0.4), counts hashed by crc32 into an
@@ -11,7 +11,8 @@ out at a floor probability, so gibberish scores orders of magnitude above
 in-vocabulary prose.
 
 Execution: table built once on the driver (deterministic), broadcast;
-pandas UDF dereferences per executor; scoring loops words in CPython but
+the fused scoring UDF (functions/scoring.py) dereferences it per
+executor; scoring loops words in CPython but
 only inside Arrow batches (no per-row serde).
 """
 
@@ -24,8 +25,6 @@ from functools import lru_cache
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from . import synthlang as sl
 
@@ -333,14 +332,3 @@ def perplexity_batch(texts, model=None) -> list[float]:
         pos += n
         out.append(exp(-lp / n))
     return out
-
-
-def make_perplexity_udf(spark):
-    bc = spark.sparkContext.broadcast(build_model())
-
-    @F.pandas_udf(T.DoubleType())
-    def perplexity_udf(texts: pd.Series) -> pd.Series:
-        return pd.Series(perplexity_batch(list(texts), bc.value),
-                         dtype="float64")
-
-    return perplexity_udf

@@ -1,12 +1,11 @@
 """Fused model-scoring pandas UDF: langid + perplexity + word/line
-features (+ optional scrub) in ONE Arrow round trip.
+features + PII/toxicity scrub in ONE Arrow round trip.
 
-Running langid, perplexity and scrub as separate pandas UDFs ships the
-full ``text`` column across the JVM↔Python boundary three times per
-direction. At 100 TB that triples Arrow serialization and Python-worker
-batch overhead for no benefit — the scorers are independent
-per-document functions over the same input. This fused UDF applies all
-of them in one pass and returns a struct, so the text crosses once.
+The scorers are independent per-document functions over the same input,
+so running them as separate UDFs would ship the full ``text`` column
+across the JVM↔Python boundary once per scorer and direction. This UDF
+applies all of them in one pass and returns a struct, so the text
+crosses once.
 
 The WORD/LINE features (n_words, mean_word_length, stopword_fraction,
 n_lines, dup_line_fraction) moved here in round 6: their JVM forms —
@@ -15,20 +14,22 @@ even as codegen regexps — cost ~180 µs/doc·core for the anchored
 every char position), while a Python split + set-membership pass over
 text that is ALREADY on this side of the boundary costs ~25 µs/doc.
 ``feature_batch`` replicates the exact textfeat/with_features
-semantics (Java-\\s tokenization, space-only trim for lines, same
-division order); parity with `textfeat.with_features` is asserted by
-tests over the corpus and whitespace/unicode edges. n_chars and
-symbol_ratio stay JVM-side (plain length/regexp_replace — cheap, and
-symbol counting is faster there).
+semantics (Java-\\s tokenization, ASCII-only case folding, space-only
+trim for lines, same division order); parity with
+`textfeat.with_features` is asserted by tests over the corpus and
+whitespace/unicode edges. n_chars and symbol_ratio stay JVM-side (plain
+length/regexp_replace — cheap, and symbol counting is faster there).
 
-Semantics are identical to the individual UDFs in ``langid.py`` /
-``perplexity.py`` / ``scrub.py`` (same model objects, same pure-python
-inner functions the oracle uses); tests assert parity.
+Each score comes from the same pure-python kernel the oracle uses
+(``langid.langid_batch``, ``perplexity.perplexity_batch``,
+``scrub.scrub_python``) over the same broadcast models; tests assert
+parity.
 """
 
 from __future__ import annotations
 
 import re
+import string
 
 import pandas as pd
 from pyspark.sql import functions as F
@@ -44,6 +45,9 @@ from .scrub import scrub_python
 #: Java regex \s — ASCII-only [ \t\n\x0B\f\r]; python's \s would also
 #: split on unicode whitespace and diverge from the JVM tokenization
 _WS = re.compile(r"[ \t\n\x0B\f\r]+")
+#: A-Z → a-z only: Java (?i) without UNICODE_CASE folds ASCII letters
+#: only, so e.g. U+212A KELVIN SIGN must not fold to 'k' here either
+_ASCII_LOWER = str.maketrans(string.ascii_uppercase, string.ascii_lowercase)
 
 SCORING_SCHEMA = T.StructType([
     T.StructField("lang_pred", T.StringType()),
@@ -57,8 +61,6 @@ SCORING_SCHEMA = T.StructType([
     T.StructField("scrubbed_text", T.StringType()),
 ])
 
-SCORING_SCHEMA_NOSCRUB = T.StructType(SCORING_SCHEMA.fields[:-1])
-
 FEATURE_FIELDS = (
     "n_words", "mean_word_length", "stopword_fraction",
     "n_lines", "dup_line_fraction",
@@ -71,15 +73,15 @@ def feature_batch(texts, stopset) -> dict:
 
       words             = non-empty [Java-\\s]+-split substrings
       mean_word_length  = sum(len(w)) / n_words        (0.0 if none)
-      stopword_fraction = #(lower(w) in stopset) / n_words
+      stopword_fraction = #(ascii_lower(w) in stopset) / n_words
       lines             = space-trimmed non-empty '\\n' segments
       dup_line_fraction = 1 - n_distinct/n_lines       (0.0 if none)
 
-    Stopword hits are counted on the lowered text's tokens: lowercasing
-    never creates or removes a [Java-\\s] separator, so token k of
-    lower(t) is lower(token k of t) and the count equals the per-word
-    lower(w)∈set form. Null/empty text → zeros, matching the JVM
-    coalesce('') path."""
+    Stopword hits are counted on the folded text's tokens: folding
+    A-Z never creates or removes a [Java-\\s] separator, so token k of
+    fold(t) is fold(token k of t) and the count equals the per-word
+    fold(w)∈set form. Only A-Z are folded, like the JVM's (?i).
+    Null/empty text → zeros, matching the JVM coalesce('') path."""
     n_words = []
     mwl = []
     swf = []
@@ -99,7 +101,8 @@ def feature_batch(texts, stopset) -> dict:
         if nw:
             mwl.append(sum(map(len, ws)) / nw)
             ns = 0
-            for w in _WS.split(t.lower()):
+            low = t.translate(_ASCII_LOWER)
+            for w in _WS.split(low):
                 if w in stopset:
                     ns += 1
             swf.append(ns / nw)
@@ -119,13 +122,12 @@ def feature_batch(texts, stopset) -> dict:
     }
 
 
-def make_scoring_udf(spark, include_scrub: bool = True):
+def make_scoring_udf(spark):
     bc_lid = spark.sparkContext.broadcast(build_langid_model())
     bc_ppl = spark.sparkContext.broadcast(build_ppl_model())
     stopset = frozenset(sl.all_stopwords())
-    schema = SCORING_SCHEMA if include_scrub else SCORING_SCHEMA_NOSCRUB
 
-    @F.pandas_udf(schema)
+    @F.pandas_udf(SCORING_SCHEMA)
     def scoring_udf(texts: pd.Series) -> pd.DataFrame:
         tl = list(texts)
         # langid + perplexity are both vectorized over the whole Arrow
@@ -136,17 +138,16 @@ def make_scoring_udf(spark, include_scrub: bool = True):
         langs, confs = langid_batch(tl, bc_lid.value)
         out = {"lang_pred": langs, "lang_conf": confs, "perplexity": ppls}
         out.update(feature_batch(tl, stopset))
-        if include_scrub:
-            # most documents carry no PII, so the scrub is the identity:
-            # return NULL for them and let the caller coalesce with the
-            # original column JVM-side — the unchanged text then never
-            # crosses the Python→JVM boundary a second time (guide §4:
-            # minimize bytes over the Arrow channel). scrubbed == text
-            # → NULL → coalesce restores text: byte-identical output.
-            out["scrubbed_text"] = [
-                s if s != t else None
-                for s, t in zip((scrub_python(t) for t in tl), tl)
-            ]
+        # most documents carry no PII, so the scrub is the identity:
+        # return NULL for them and let the caller coalesce with the
+        # original column JVM-side — the unchanged text then never
+        # crosses the Python→JVM boundary a second time (guide §4:
+        # minimize bytes over the Arrow channel). scrubbed == text
+        # → NULL → coalesce restores text: byte-identical output.
+        out["scrubbed_text"] = [
+            s if s != t else None
+            for s, t in zip((scrub_python(t) for t in tl), tl)
+        ]
         return pd.DataFrame(out)
 
     return scoring_udf

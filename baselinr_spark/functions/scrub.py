@@ -1,19 +1,16 @@
-"""PII / toxicity scrub pass.
+"""PII / toxicity scrub pass and the PII-detection helpers.
 
 Patterns seed from the reference's built-in format validators
 (/root/reference/baselinr/validation/validators/format_validator.py:125-129
 — email/url/phone regexes) extended per the north rule with IPv4 and a
-toxicity lexicon. Two implementations:
+toxicity lexicon. The patterns are ASCII-only and avoid constructs where
+Java regex, RE2 (DuckDB) and Python `re` could diverge, so the JVM
+helpers below (pseudonymization, PII co-occurrence) and their DuckDB
+oracles match the same spans.
 
-1. `scrub_expr` — native `regexp_replace` chain (JVM, codegen). The
-   patterns are ASCII-only and avoid constructs where Java regex, RE2
-   (DuckDB) and Python `re` could diverge, so all three engines produce
-   byte-identical output.
-2. `scrub_pandas_udf` — Arrow-batched pandas UDF applying the *same
-   compiled Python patterns* as the pure-python oracle
-   (oracle/pandas_ref.py). This is the byte-identity-guaranteed path
-   (SURVEY.md §7 risk register); the pipeline uses the native expr chain
-   by default and the tests assert both agree.
+The pipeline scrub is `scrub_python`, the same function the pure-python
+oracle (oracle/pandas_ref.py) calls. It runs inside the fused scoring
+UDF (functions/scoring.py).
 
 Replacement order is fixed: email → phone → ipv4 → toxicity.
 """
@@ -22,10 +19,8 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..sources.pages import TOX_LEXICON
 
@@ -78,20 +73,6 @@ def scrub_python(text: str | None) -> str | None:
     if any(w in low for w in _TOX_LOWER):
         text = _TOX_C.sub(_TOX_R, text)
     return text
-
-
-def scrub_expr(col: Column) -> Column:
-    """Native regexp_replace chain (JVM-side)."""
-    out = col
-    for _, pat, repl in SCRUB_PATTERNS:
-        out = F.regexp_replace(out, pat, repl)
-    return out
-
-
-@F.pandas_udf(T.StringType())
-def scrub_pandas_udf(texts: pd.Series) -> pd.Series:
-    """Arrow-batched scrub with the exact oracle patterns."""
-    return texts.map(scrub_python)
 
 
 #: candidate payment-card runs: 13-19 digits allowing single space/dash
@@ -187,7 +168,7 @@ def pseudonymize_expr(
     """Consistent pseudonymization: replace every match of ``pattern``
     with a STABLE per-value token ``<LABEL:xxxxxxxx>`` (first 8 hex of
     the match's md5) instead of the information-destroying flat
-    ``<EMAIL>`` of `scrub_expr` — the linkage-preserving variant that
+    ``<EMAIL>`` of `scrub_python` — the linkage-preserving variant that
     keeps "same author across documents" signals usable for dedup and
     spam-campaign detection while removing the raw identifier
     (standard tokenization/pseudonymization practice, e.g. HIPAA-style

@@ -100,62 +100,6 @@ def centroid_outliers(
     )
 
 
-def oracle_group_centroids_sql(
-    vecs_sql: str, group_col: str, vec_col: str = "embedding"
-) -> str:
-    """DuckDB replay: unnest by position, avg per (group, pos),
-    reassemble with list(... ORDER BY pos)."""
-    return f"""
-WITH ex AS (
-  SELECT {group_col} AS grp,
-         generate_subscripts({vec_col}, 1) AS pos,
-         unnest({vec_col})::double AS v
-  FROM ({vecs_sql})
-  WHERE {vec_col} IS NOT NULL
-),
-per_dim AS (
-  SELECT grp, pos, avg(v) AS c, count(*) AS n
-  FROM ex GROUP BY grp, pos
-)
-SELECT grp AS "group",
-       list(c ORDER BY pos) AS centroid,
-       max(n)::bigint AS n_members
-FROM per_dim
-GROUP BY grp
-"""
-
-
-def oracle_centroid_outliers_sql(
-    vecs_sql: str,
-    id_col: str,
-    group_col: str,
-    vec_col: str = "embedding",
-    bottom_k: int = 5,
-) -> str:
-    cents = oracle_group_centroids_sql(vecs_sql, group_col, vec_col)
-    return f"""
-WITH cents AS ({cents}),
-scored AS (
-  SELECT v.{id_col}, c."group",
-         list_cosine_similarity(v.{vec_col}::double[], c.centroid) AS cent_cosine
-  FROM ({vecs_sql}) v
-  JOIN cents c ON v.{group_col} = c."group"
-  WHERE v.{vec_col} IS NOT NULL
-),
-ranked AS (
-  SELECT *, row_number() OVER (
-    PARTITION BY "group"
-    ORDER BY round(cent_cosine, 6) ASC, {id_col} ASC
-  ) AS rn
-  FROM scored
-)
-SELECT {id_col}, "group", cent_cosine,
-       CASE WHEN rn <= {bottom_k} THEN rn END AS outlier_rank,
-       rn <= {bottom_k} AS is_outlier
-FROM ranked
-"""
-
-
 def embedding_contamination(
     corpus: DataFrame,
     benchmark: DataFrame,

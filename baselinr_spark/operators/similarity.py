@@ -296,25 +296,6 @@ def ivf_topk(
     )
 
 
-def embedding_near_dup_pairs(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.95,
-    **lsh_kwargs,
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs via the LSH candidate path."""
-    nn = lsh_topk(df, id_col, vec_col, k=50, **lsh_kwargs)
-    return (
-        nn.filter((F.col("cosine") >= threshold) & (F.col("query_id") < F.col("neighbor_id")))
-        .select(
-            F.col("query_id").alias("id_a"),
-            F.col("neighbor_id").alias("id_b"),
-            F.col("cosine"),
-        )
-    )
-
-
 # ---------------------------------------------------------------------------
 # Product quantization (PQ) — the memory-bound ANN scale path
 # ---------------------------------------------------------------------------

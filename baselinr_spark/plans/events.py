@@ -157,22 +157,24 @@ def schema_change_events(
     run driver-side (pyarrow + dict compare — the same normalize/full-
     outer semantics as operators/schema_drift.schema_diff) instead of a
     collect + full-outer-join Spark plan, which cost ~2s of fixed
-    scheduling per run at any scale."""
+    scheduling per run at any scale.
+
+    No snapshot directory yet means no events; any read error on an
+    existing one (a corrupt or unreadable snapshot file) raises."""
     import json as _json
+    import os
+
+    import pyarrow.parquet as pq
 
     empty = spark.createDataFrame(
         [], schema="partition string, metric_name string, baseline_value double,"
         " current_value double, score double, severity string, metadata_json string",
     )
-    try:
-        import pyarrow.parquet as pq
-
-        tbl = pq.read_table(
-            schema_dir, columns=["run_id", "column_name", "data_type", "ts"]
-        )
-    except Exception:
+    if not os.path.isdir(schema_dir):
         return _finish(empty, run_id, "schema_change")
-    rows = tbl.to_pylist()
+    rows = pq.read_table(
+        schema_dir, columns=["run_id", "column_name", "data_type", "ts"]
+    ).to_pylist()
 
     latest: dict[str, object] = {}
     for r in rows:

@@ -4,8 +4,9 @@ One declarative pass per chunk of partitions:
 
     read pages (partition-pruned by the manifest anti-join)
       → native-expression features (WholeStageCodegen)
-      → langid + perplexity pandas UDFs (broadcast models, Arrow batches)
-      → rule booleans → keep/drop_reasons → scrubbed_text
+      → ONE fused scoring UDF: langid, perplexity, word/line features,
+        scrub (broadcast models, Arrow batches)
+      → rule booleans → keep/drop_reasons; scrubbed_text coalesced JVM-side
       → write docs/ (dynamic partition overwrite = idempotent)
     read back docs (cheap columnar projection)
       → per-partition metrics (long format) → metrics/
@@ -24,7 +25,6 @@ from __future__ import annotations
 
 import contextlib
 import datetime as dt
-import json
 import logging
 import os
 import time
@@ -36,7 +36,6 @@ from pyspark.sql import functions as F
 from ..config import DEFAULT_CONFIG, RULE_NAMES, FilterConfig
 from ..functions import textfeat
 from ..functions.langid import CLASSES
-from ..operators import profiling
 from ..operators.drift import psi_pairwise_lag
 from ..sources import catalog, manifest
 
@@ -45,6 +44,10 @@ _log = logging.getLogger(__name__)
 #: reference partial-profiling cap: max partitions per run
 #: (/root/reference/baselinr/config/schema.py:898)
 MAX_PARTITIONS_PER_RUN = 64
+
+#: shuffle width for the metadata-scale post-transform phases (metrics,
+#: drift, events, lineage): their frames are O(|chunk| x metrics) rows
+META_SHUFFLE_PARTITIONS = 8
 
 DOCS_COLS = (
     "url", "warc_ts", "keep", "drop_reasons", "lang", "lang_conf",
@@ -70,21 +73,20 @@ def transform_pages(
     pages: DataFrame,
     cfg: FilterConfig = DEFAULT_CONFIG,
     run_id: str = "run-0",
-    scrub_mode: str = "pandas",
 ) -> DataFrame:
     """pages(url, warc_ts, html, text, lang[, dt]) → docs_out.
 
-    scrub_mode: 'pandas' (byte-identical to the Python oracle — default)
-    or 'native' (JVM regexp_replace chain; same output for the ASCII-safe
-    pattern bank, asserted by tests).
+    One straight pass: cheap JVM features (n_chars, symbol_ratio and the
+    opt-in rule families), then ONE fused pandas UDF
+    (functions/scoring.py) that returns the model scores, word/line
+    features and the scrub — so the text crosses the JVM↔Python boundary
+    once — then the rule verdict. The UDF returns NULL for text the scrub
+    left unchanged and the JVM coalesces it back, so `scrubbed_text` is
+    byte-identical to `scrub.scrub_python` (the oracle) and NULL only for
+    NULL text."""
+    from ..functions.scoring import SCORING_SCHEMA, make_scoring_udf
 
-    All model scores (langid, perplexity) and the pandas-mode scrub run in
-    ONE fused pandas UDF (functions/scoring.py) so the text column crosses
-    the JVM↔Python boundary once instead of three times."""
-    from ..functions.scoring import FEATURE_FIELDS, make_scoring_udf
-
-    include_scrub = scrub_mode != "native"
-    scoring_udf = make_scoring_udf(spark, include_scrub=include_scrub)
+    scoring_udf = make_scoring_udf(spark)
 
     df = pages
     if "dt" not in df.columns:
@@ -112,19 +114,15 @@ def transform_pages(
         df = textfeat.with_line_features(df)
     if cfg.cc_rule:
         df = textfeat.with_cc_features(df)
-    score_cols = ["lang_pred", "lang_conf", "perplexity", *FEATURE_FIELDS] + (
-        ["scrubbed_text"] if include_scrub else []
-    )
     df = df.withColumn("_score", scoring_udf(F.col("text"))).select(
-        "*", *[F.col(f"_score.{c}").alias(c) for c in score_cols]
+        "*", *[F.col(f"_score.{c}").alias(c) for c in SCORING_SCHEMA.names]
     ).drop("_score")
-    if include_scrub:
-        # the fused UDF returns NULL when the scrub was the identity so
-        # unchanged text never crosses the Python→JVM boundary twice;
-        # restore the original here (byte-identical to scrubbing in place)
-        df = df.withColumn(
-            "scrubbed_text", F.coalesce(F.col("scrubbed_text"), F.col("text"))
-        )
+    # the fused UDF returns NULL when the scrub was the identity so
+    # unchanged text never crosses the Python→JVM boundary twice;
+    # restore the original here (byte-identical to scrubbing in place)
+    df = df.withColumn(
+        "scrubbed_text", F.coalesce(F.col("scrubbed_text"), F.col("text"))
+    )
 
     rules = {**textfeat.rule_columns(cfg), **textfeat.model_rule_columns(cfg)}
     if cfg.repetition_rules:
@@ -134,11 +132,6 @@ def transform_pages(
     if cfg.cc_rule:
         rules.update(textfeat.cc_rule_columns(cfg))
     df = textfeat.with_verdict(df, rules)
-
-    if scrub_mode == "native":
-        from ..functions.scrub import scrub_expr
-
-        df = df.withColumn("scrubbed_text", scrub_expr(F.col("text")))
 
     df = df.withColumn("run_id", F.lit(run_id)).withColumn(
         "lang", F.col("lang_pred")
@@ -492,7 +485,6 @@ def run_pipeline(
     run_id: str | None = None,
     max_partitions: int = MAX_PARTITIONS_PER_RUN,
     checkpoint_every: int | None = None,
-    scrub_mode: str = "pandas",
     reprocess_changed: bool = False,
     hooks: list | None = None,
     hook_min_severity: str = "medium",
@@ -636,8 +628,7 @@ def run_pipeline(
                 pages = hash_sample(pages, "url", chunk_frac)
             if chunk_skew != "split":
                 pages = pages.hint("rebalance", "dt")
-            docs = transform_pages(spark, pages, cfg, run_id,
-                                   scrub_mode=scrub_mode)
+            docs = transform_pages(spark, pages, cfg, run_id)
             catalog.write_partitioned(docs, docs_dir, "dt")
         t0 = _tick("transform_write", t0)
 
@@ -647,12 +638,9 @@ def run_pipeline(
         # scheduling overhead there (measured ~11s of fixed cost per
         # chunk at local[32] regardless of SF — guide §1.2 step 3). Pin
         # a small shuffle width and plan each tiny query in one pass;
-        # restored before the next chunk's transform. Parameterised via
-        # SPARK_GRAFT_META_SHUFFLE for clusters where cohort counts are
-        # genuinely large.
+        # restored before the next chunk's transform.
         meta_conf = {
-            "spark.sql.shuffle.partitions":
-                os.environ.get("SPARK_GRAFT_META_SHUFFLE", "8"),
+            "spark.sql.shuffle.partitions": str(META_SHUFFLE_PARTITIONS),
             "spark.sql.adaptive.enabled": "false",
         }
 

@@ -154,19 +154,6 @@ def query_table_history(
     ).orderBy(F.col("profiled_at").desc(), F.col("run_id"))
 
 
-def query_run_events(
-    events: DataFrame,
-    run_id: str,
-    event_types: list[str] | None = None,
-) -> DataFrame:
-    """All events for one run, optionally type-filtered
-    (client.py:411-486)."""
-    out = events.where(F.col("run_id") == run_id)
-    if event_types:
-        out = out.where(F.col("event_type").isin(event_types))
-    return out.orderBy(F.col("timestamp").desc(), F.col("event_id"))
-
-
 def severity_priority(col: Column) -> Column:
     """high > medium > low > none (client.py:516) — the shared
     ordering from ``baselinr_spark.severity``."""

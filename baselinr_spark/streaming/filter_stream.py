@@ -45,7 +45,6 @@ def start_filter_stream(
     run_id: str = "stream-0",
     max_files_per_trigger: int = 8,
     available_now: bool = True,
-    scrub_mode: str = "pandas",
 ):
     """Start (and return) the streaming query. With available_now=True
     the query drains the current backlog and stops — call
@@ -64,7 +63,6 @@ def start_filter_stream(
     def _sink(batch_df, batch_id: int) -> None:
         docs = transform_pages(
             spark, batch_df, cfg, run_id=f"{run_id}-b{batch_id}",
-            scrub_mode=scrub_mode,
         ).withColumn("batch", F.lit(batch_id))
         # per-write option, NOT session conf: foreachBatch runs in a cloned
         # SparkSession, so outer-session conf does not reach this write

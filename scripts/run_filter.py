@@ -26,7 +26,6 @@ def main() -> int:
     ap.add_argument("--seed", type=int, default=42)
     ap.add_argument("--checkpoint-every", type=int, default=None)
     ap.add_argument("--run-id", default=None)
-    ap.add_argument("--scrub-mode", choices=["pandas", "native"], default="pandas")
     ap.add_argument("--repetition-rules", action="store_true",
                     help="enable the Gopher repetition rule family "
                          "(opt-in; changes keep/drop)")
@@ -112,8 +111,7 @@ def main() -> int:
         wdir = tempfile.mkdtemp(prefix="warmup_")
         try:
             run_pipeline(spark, args.input, wdir, run_id="warmup",
-                         max_partitions=1, scrub_mode=args.scrub_mode,
-                         skew_mode=args.skew_mode)
+                         max_partitions=1, skew_mode=args.skew_mode)
         finally:
             shutil.rmtree(wdir, ignore_errors=True)
 
@@ -151,7 +149,6 @@ def main() -> int:
         cfg=cfg,
         run_id=args.run_id,
         checkpoint_every=args.checkpoint_every,
-        scrub_mode=args.scrub_mode,
         reprocess_changed=args.reprocess_changed,
         hooks=hooks,
         hook_min_severity=args.alert_min_severity or "medium",

@@ -1,6 +1,7 @@
 """Schema-change events pick the most recent previous snapshot by UTC
 time, whatever the host's local zone (tz-aware snapshots written by
-older Spark runs are normalized to naive UTC, never to local time)."""
+older Spark runs are normalized to naive UTC, never to local time).
+A missing snapshot dir yields no events; a corrupt snapshot raises."""
 
 import datetime as dt
 import json
@@ -52,3 +53,19 @@ def test_baseline_is_latest_utc_across_dst_fall_back(spark, tmp_path, new_york_t
     assert rows[0]["metric_name"] == "y"
     assert meta["baseline_run_id"] == "r2"
     assert meta["change_type"] == "type_changed"
+
+
+def test_missing_schema_dir_yields_no_events(spark, tmp_path):
+    rows = schema_change_events(spark, str(tmp_path / "absent"), "r1").collect()
+    assert rows == []
+
+
+def test_corrupt_snapshot_raises(spark, tmp_path):
+    schema_dir = str(tmp_path / "schema")
+    os.makedirs(schema_dir)
+    _snapshot(schema_dir, "r1", [("x", "string")],
+              dt.datetime(2026, 11, 1, 5, 30, tzinfo=UTC))
+    with open(os.path.join(schema_dir, "part-r2.parquet"), "wb") as f:
+        f.write(b"not a parquet file")
+    with pytest.raises(pa.ArrowInvalid):
+        schema_change_events(spark, schema_dir, "r2")

@@ -1,10 +1,13 @@
-"""Byte-identity of the scrub pass across all three implementations:
-python re (oracle), pandas UDF (pipeline default), JVM regexp_replace."""
+"""The scrub pass: the python spec (`scrub_python`, also the oracle),
+its NULL contract through the pipeline's fused scoring UDF, and the
+PII co-occurrence helper. Corpus-wide byte identity of the pipeline's
+scrubbed text is asserted in test_pipeline_e2e and
+test_operators_extra."""
 
-from pyspark.sql import functions as F
+import datetime as dt
 
-from baselinr_spark.functions.scrub import scrub_expr, scrub_pandas_udf, scrub_python
-from baselinr_spark.sources.pages import PAGES_DDL, generate_pages_pandas
+from baselinr_spark.functions.scrub import scrub_python
+from baselinr_spark.sources.pages import PAGES_DDL
 
 
 def test_scrub_python_removes_planted_pii():
@@ -21,28 +24,25 @@ def test_scrub_python_removes_planted_pii():
     )
 
 
-def test_scrub_spark_paths_byte_identical(spark):
-    pdf = generate_pages_pandas(200, seed=13)
-    df = spark.createDataFrame(pdf, schema=PAGES_DDL)
-    got = (
-        df.select(
-            "url",
-            scrub_pandas_udf(F.col("text")).alias("s_pandas"),
-            scrub_expr(F.col("text")).alias("s_native"),
-        )
-        .collect()
-    )
-    exp = {u: scrub_python(t) for u, t in zip(pdf["url"], pdf["text"])}
-    assert len(got) == 200
-    for r in got:
-        assert r["s_pandas"] == exp[r["url"]]
-        assert r["s_native"] == exp[r["url"]]
-
-
 def test_scrub_null_passthrough(spark):
-    df = spark.createDataFrame([("u", None)], "url string, text string")
-    r = df.select(scrub_pandas_udf("text").alias("a"), scrub_expr(F.col("text")).alias("b")).first()
-    assert r["a"] is None and r["b"] is None
+    """The fused scoring UDF returns NULL for 'scrub was the identity'
+    and transform_pages coalesces with the original text: a NULL-text
+    page must come out NULL, a scrubbed page scrubbed, a clean page
+    unchanged."""
+    from baselinr_spark.plans.pipeline import transform_pages
+
+    rows = [
+        ("u-null", dt.datetime(2024, 1, 1), None, None, "en"),
+        ("u-pii", dt.datetime(2024, 1, 1), None,
+         "mail abcdef@example3.com now", "en"),
+        ("u-clean", dt.datetime(2024, 1, 1), None, "plain words", "en"),
+    ]
+    df = spark.createDataFrame(rows, schema=PAGES_DDL)
+    got = {r["url"]: r["scrubbed_text"]
+           for r in transform_pages(spark, df).collect()}
+    assert got == {
+        "u-null": None, "u-pii": "mail <EMAIL> now", "u-clean": "plain words",
+    }
 
 
 def test_pii_cooccurrence_hand_computed(spark):
