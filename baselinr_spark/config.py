@@ -48,14 +48,6 @@ class FilterConfig:
     min_lang_confidence: float = 0.65
     allowed_langs: tuple[str, ...] = ("aa", "bb", "cc")
     max_perplexity: float = 3000.0
-    # drift (PSI) semantics per
-    # /root/reference/baselinr/drift/statistical_tests.py:396-404,468-477,605-609
-    psi_buckets: int = 10
-    psi_threshold: float = 0.2
-    psi_floor: float = 0.0001
-    # profiling histogram semantics per
-    # /root/reference/baselinr/profiling/metrics.py:324-362 + config/schema.py:537
-    histogram_bins: int = 10
 
 
 #: rule name -> stable ordering for drop_reasons arrays

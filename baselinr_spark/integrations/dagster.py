@@ -7,13 +7,12 @@ core — cursor serialization (sensors.py:55-68) and changed-table
 detection (sensors.py:70-88) — is fully implemented and unit-tested;
 the dagster decorators are applied only when the package imports.
 
-The sensor cursor here is the pipeline's own state: the manifest's
-(partition → fingerprint) map. `detect_changed_partitions` compares
-the manifest against the input warehouse and returns the partitions a
-new materialization should process — new dts AND fingerprint-changed
-backfills — which is exactly the incremental plan run_pipeline itself
-would compute (sources/change_detection.py), so a sensor-triggered
-run and a manually-triggered run do identical work.
+`detect_partitions_to_run` takes its run list from the pipeline's own
+planner (plans/planner.py `plan_partitions` with ``reprocess_changed``)
+— new dts AND fingerprint-changed backfills — and the asset runs the
+pipeline with the same flag, so the asset processes exactly the
+partitions the sensor requested, and once it has, the sensor goes
+quiet. The cursor is the input's (partition → fingerprint) map.
 """
 
 from __future__ import annotations
@@ -32,7 +31,7 @@ __all__ = [
     "DAGSTER_AVAILABLE",
     "serialize_cursor",
     "deserialize_cursor",
-    "detect_changed_partitions",
+    "detect_partitions_to_run",
     "build_profile_asset",
     "build_plan_sensor",
 ]
@@ -54,23 +53,22 @@ def deserialize_cursor(cursor: str | None) -> dict[str, Any] | None:
     return out if isinstance(out, dict) else None
 
 
-def detect_changed_partitions(
+def detect_partitions_to_run(
     spark, input_path: str, output_root: str
 ) -> tuple[list[str], str]:
-    """(partitions to process, new cursor). New partitions = on disk
-    but not 'done' in the manifest; changed = done but with a different
-    input fingerprint (upstream backfill). Cursor = the fingerprint map
-    actually observed, so an unchanged warehouse yields ([], same
-    cursor) and the sensor stays quiet."""
-    from ..sources import catalog, change_detection, manifest
+    """(partitions to process, new cursor): the planner's ``run`` rows
+    with ``reprocess_changed=True`` — partitions never profiled, and done
+    ones whose input fingerprint changed (upstream backfill). Cursor =
+    the fingerprint map actually observed."""
+    from ..plans import planner
+    from ..sources import catalog, change_detection
 
     parts = catalog.list_partitions(input_path)
     fps = {p: change_detection.partition_fingerprint(input_path, p)
            for p in parts}
-    done = set(manifest.done_partitions(spark, output_root))
-    changed = set(change_detection.changed_partitions(
-        spark, input_path, output_root, sorted(done))) if done else set()
-    todo = [p for p in parts if p not in done or p in changed]
+    plan = planner.plan_partitions(spark, input_path, output_root,
+                                   partitions=parts, reprocess_changed=True)
+    todo = [r["partition"] for r in plan if r["action"] == "run"]
     return todo, serialize_cursor(fps)
 
 
@@ -82,8 +80,9 @@ def build_profile_asset(
     session_factory: Callable | None = None,
 ):
     """An asset (dagster installed) or a plain callable (not) that runs
-    the incremental pipeline and returns its summary — reference
-    assets.py:131-… create_profiling_assets, one asset per plan."""
+    the incremental pipeline with ``reprocess_changed`` — the sensor's
+    plan — and returns its summary (reference assets.py:131-…
+    create_profiling_assets, one asset per plan)."""
     def _materialize() -> dict:
         from ..session import build_session
 
@@ -91,7 +90,8 @@ def build_profile_asset(
             app_name="baselinr_dagster")
         from .airflow import profile_task
 
-        return profile_task(spark, input_path, output_root)
+        return profile_task(spark, input_path, output_root,
+                            reprocess_changed=True)
 
     _materialize.__name__ = name
     if DAGSTER_AVAILABLE:  # pragma: no cover - not installed here
@@ -109,20 +109,18 @@ def build_plan_sensor(
 ):
     """Sensor evaluation function: takes the previous cursor string,
     returns {'run_requested': bool, 'partitions': [...], 'cursor': str}
-    (reference sensors.py:89-151 baselinr_plan_sensor). Wrapped in
-    @dagster.sensor when the package is present; the evaluation logic
-    is identical either way."""
+    (reference sensors.py:89-151 baselinr_plan_sensor). A run is
+    requested exactly when the plan has partitions to run; the manifest,
+    not the previous cursor, decides that. Wrapped in @dagster.sensor
+    when the package is present; the evaluation logic is identical
+    either way."""
     def _evaluate(cursor: str | None = None) -> dict:
         from ..session import build_session
 
         spark = session_factory() if session_factory else build_session(
             app_name="baselinr_dagster")
-        todo, new_cursor = detect_changed_partitions(
+        todo, new_cursor = detect_partitions_to_run(
             spark, input_path, output_root)
-        prev = deserialize_cursor(cursor)
-        if prev is not None and new_cursor == serialize_cursor(prev) and not todo:
-            return {"run_requested": False, "partitions": [],
-                    "cursor": new_cursor}
         return {"run_requested": bool(todo), "partitions": todo,
                 "cursor": new_cursor}
 

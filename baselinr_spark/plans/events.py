@@ -26,12 +26,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-EVENT_COLS = (
-    "event_id", "event_type", "partition", "metric_name",
-    "baseline_value", "current_value", "score", "severity", "ts",
-    "metadata_json",
-)
-
 
 def _finish(df: DataFrame, run_id: str, event_type: str) -> DataFrame:
     """Stamp the shared event columns; event_id is deterministic per
@@ -237,7 +231,6 @@ def anomaly_events(
     metrics_dir: str,
     run_id: str,
     sigma: float = 3.0,
-    metrics: DataFrame | None = None,
 ) -> DataFrame:
     """AnomalyDetected analogue (reference events.py:252-283) via
     control limits (detection_methods control_limits): a partition whose
@@ -247,11 +240,9 @@ def anomaly_events(
     tested point in the stats caps the max possible z at (k−1)/√k, so a
     single extreme partition among ten could never reach 3σ. Computed
     from sum/sum-of-squares in one aggregate over the tiny metrics
-    table. Pass ``metrics`` to reuse an already-loaded (cached) metrics
-    DataFrame instead of re-scanning ``metrics_dir``."""
-    m = metrics if metrics is not None else spark.read.parquet(metrics_dir)
+    table."""
     counts = (
-        m.filter(F.col("metric_name") == "count")
+        spark.read.parquet(metrics_dir).filter(F.col("metric_name") == "count")
         .groupBy("partition")
         .agg(F.max("metric_value").alias("n"))
     )

@@ -2,7 +2,7 @@
 
 One declarative pass per chunk of partitions:
 
-    read pages (partition-pruned by the manifest anti-join)
+    read pages (partition-pruned to the planner's run list)
       → native-expression features (WholeStageCodegen)
       → ONE fused scoring UDF: langid, perplexity, word/line features,
         scrub (broadcast models, Arrow batches)
@@ -18,7 +18,8 @@ This mirrors the reference lifecycle (profile → write results → enrich →
 drift → events → state update, /root/reference/baselinr/cli.py:275-362 and
 storage/writer.py:120-167) collapsed into Spark jobs, with the incremental
 planner's skip/partial semantics (/root/reference/baselinr/incremental/
-planner.py:140-225) provided by the processed-partition manifest.
+planner.py:140-225) decided by plans/planner.py over the
+processed-partition manifest.
 """
 
 from __future__ import annotations
@@ -37,7 +38,8 @@ from ..config import DEFAULT_CONFIG, RULE_NAMES, FilterConfig
 from ..functions import textfeat
 from ..functions.langid import CLASSES
 from ..operators.drift import psi_pairwise_lag
-from ..sources import catalog, manifest
+from ..sources import catalog, change_detection, manifest
+from . import planner
 
 _log = logging.getLogger(__name__)
 
@@ -284,23 +286,14 @@ def partition_metrics(docs: DataFrame, run_id: str) -> DataFrame:
     )
 
 
-def drift_events(
-    spark: SparkSession,
-    output_root: str,
-    run_id: str,
-    metrics: DataFrame | None = None,
-) -> DataFrame:
+def drift_events(metrics: DataFrame, run_id: str) -> DataFrame:
     """PSI between each partition cohort and its predecessor, computed
-    from the stored ppl_bucket:* metric rows. Emits the FIXTURES.md §2
-    `events` shape; analogue of DataDriftDetected events
-    (/root/reference/baselinr/events/events.py). Pass ``metrics`` (the
-    stored metrics table, possibly cached) to share one scan with the
-    other event builders."""
-    if metrics is None:
-        metrics = spark.read.parquet(os.path.join(output_root, "metrics"))
-    m = metrics
+    from the stored ppl_bucket:* rows of ``metrics`` (the stored metrics
+    table, or the slice of it the caller needs). Emits the FIXTURES.md §2
+    `events` shape; analogue of DataDriftDetected events (reference
+    events/events.py)."""
     buckets = (
-        m.filter(F.col("metric_name").startswith("ppl_bucket:"))
+        metrics.filter(F.col("metric_name").startswith("ppl_bucket:"))
         .select(
             F.col("partition"),
             # PSI sequences are per-metric family; keying the lag window
@@ -493,44 +486,30 @@ def run_pipeline(
     skew_mode: str = "auto",
     _fail_before_commit_chunk: int | None = None,
 ) -> dict:
-    """Run the filter over all not-yet-processed partitions. Returns a
-    summary dict. `checkpoint_every` chunks the todo list so the manifest
-    commits every N partitions (partition-granular resume);
+    """Run the filter over the partitions `planner.plan_partitions`
+    selects (action run or sample), at most `max_partitions` of them.
+    Returns a summary dict. `checkpoint_every` chunks the todo list so
+    the manifest commits every N partitions (partition-granular resume);
     `reprocess_changed` additionally re-runs done partitions whose input
     fingerprint changed since their manifest commit (upstream backfill —
-    reference incremental/change_detection.py semantics);
+    reference incremental/change_detection.py semantics); `scheduling`
+    and `cost` are the planner's freshness interval and cost caps;
     `_fail_before_commit_chunk` is a test hook that simulates a crash
     after data writes but before the manifest commit of chunk i."""
-    from ..sources import change_detection
-
     run_id = run_id or f"run-{uuid.uuid4().hex[:12]}"
     all_parts = catalog.list_partitions(input_path)
-    fractions: dict[str, float] = {}
-    deferred: list[str] = []
-    if scheduling is not None or cost is not None:
-        # full decision cascade (freshness interval → snapshot match →
-        # cost caps → sample/defer/full fallback); one row per partition
-        from . import planner as planner_mod
-
-        plan_rows = planner_mod.plan_partitions(
-            spark, input_path, output_root, partitions=all_parts,
-            scheduling=scheduling, cost=cost,
-            reprocess_changed=reprocess_changed,
-        ).collect()
-        todo = [r["partition"] for r in plan_rows
-                if r["action"] in ("run", "sample")][:max_partitions]
-        fractions = {r["partition"]: r["sample_fraction"] for r in plan_rows
-                     if r["action"] == "sample" and r["partition"] in todo}
-        deferred = [r["partition"] for r in plan_rows
-                    if r["action"] == "defer"]
-    else:
-        # fast path: manifest-only resume (± fingerprint change detection)
-        done = set(manifest.done_partitions(spark, output_root))
-        if reprocess_changed and done:
-            done -= set(change_detection.changed_partitions(
-                spark, input_path, output_root, sorted(done)
-            ))
-        todo = [p for p in all_parts if p not in done][:max_partitions]
+    # decision cascade (freshness interval → snapshot match → cost caps →
+    # sample/defer/full fallback); one row per partition
+    plan_rows = planner.plan_partitions(
+        spark, input_path, output_root, partitions=all_parts,
+        scheduling=scheduling, cost=cost,
+        reprocess_changed=reprocess_changed,
+    )
+    todo = [r["partition"] for r in plan_rows
+            if r["action"] in ("run", "sample")][:max_partitions]
+    fractions = {r["partition"]: r["sample_fraction"] for r in plan_rows
+                 if r["action"] == "sample" and r["partition"] in todo}
+    deferred = [r["partition"] for r in plan_rows if r["action"] == "defer"]
 
     summary = {
         "run_id": run_id,
@@ -689,8 +668,7 @@ def run_pipeline(
                     _needed_metric_partitions(metrics_dir, chunk_strs)
                 )
             )
-            ev = drift_events(spark, output_root, run_id,
-                              metrics=drift_metrics).filter(
+            ev = drift_events(drift_metrics, run_id).filter(
                 F.col("partition").isin(chunk_strs)
             )
             ev = ev.unionByName(

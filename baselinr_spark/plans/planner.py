@@ -1,39 +1,49 @@
 """Incremental run planner: per-partition run/sample/skip/defer decisions.
 
-Recasts the reference IncrementalPlanner's decision cascade
+The one place that decides which partitions a run processes:
+`run_pipeline`, the Dagster sensor and `query_meta.py plan` all take
+their run list from `plan_partitions`. It recasts the reference
+IncrementalPlanner's decision cascade
 (/root/reference/baselinr/incremental/planner.py:141-295) at partition
-granularity, declaratively:
+granularity:
 
 1. ``fresh_within_interval`` — adaptive scheduling: a partition profiled
    within its (clamped, per-partition-overridable) interval is skipped
    before any change detection runs (`_is_due`, planner.py:227-238).
-2. ``snapshot_match`` — input fingerprint unchanged since the last
-   commit → skip (planner.py:159-165 via change_detection).
-3. Cost controls (`_check_costs`/`_cost_response`, planner.py:276-295):
+2. ``snapshot_match`` / ``already_profiled`` — a fully done partition
+   skips: always by default (manifest resume), and with
+   ``reprocess_changed`` only while its input fingerprint still matches
+   the committed one (planner.py:159-165 via change_detection).
+3. ``sampled_cap_unchanged`` — a cost-cap sampled partition skips while
+   the same cap and fraction still apply.
+4. Cost controls (`_check_costs`/`_cost_response`, planner.py:276-295):
    a runnable partition whose estimated bytes/rows exceed the caps is
    downgraded per ``fallback_strategy`` — ``sample`` (run on a
    deterministic hash sample), ``defer`` (skip, should_run=False), or
    ``full`` (run anyway, reason recorded).
-4. Otherwise run in full (``never_profiled`` / ``change_detected``).
+5. Otherwise run in full (``promote_sampled_to_full`` /
+   ``change_detected`` / ``never_profiled``).
 
-Spark-first shape: partition metadata (bytes from file stats, rows from
-parquet footers — never a data scan, mirroring the reference's
-metadata-only contract) joins against the manifest's latest state, and
-the whole cascade is ONE `F.when` chain over that join — no driver loop
-over partitions, so the plan itself scales to catalogs with millions of
-partitions and Catalyst can prune/push it like any other query.
+The cascade runs as plain Python on the driver, over rows the driver
+holds anyway: bytes from file stats and rows from parquet footers (never
+a data scan, mirroring the reference's metadata-only contract), input
+fingerprints from the file listing, and the manifest's latest state —
+the plan's only Spark query. All of it is O(partitions) driver work.
 """
 
 from __future__ import annotations
 
+import logging
 import os
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from ..sources import change_detection, manifest
+
+_log = logging.getLogger(__name__)
 
 
 @dataclass(frozen=True)
@@ -69,13 +79,11 @@ def partition_stats(input_path: str, partitions: list[str]) -> list[tuple]:
     metadata (bytes_scanned, else rows·1KB); the parquet-warehouse
     analog is the file listing for bytes and the footer `num_rows` for
     rows — O(files) driver-side metadata reads, never a data scan. A
-    footer that cannot be read falls back to the reference's bytes/1KB
-    heuristic.
+    footer that cannot be read is logged and its file's bytes fall back
+    to the reference's bytes/1KB heuristic.
     """
-    try:
-        import pyarrow.parquet as pq
-    except ImportError:  # pragma: no cover - pyarrow is baked in
-        pq = None
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
     def one(p: str) -> tuple:
         d = os.path.join(input_path, f"dt={p}")
@@ -94,15 +102,17 @@ def partition_stats(input_path: str, partitions: list[str]) -> list[tuple]:
                     except OSError:
                         continue
                     nbytes += sz
-                    if pq is not None and f.endswith(".parquet"):
+                    if f.endswith(".parquet"):
                         try:
                             nrows += pq.ParquetFile(full).metadata.num_rows
                             rows_known = True
-                        except Exception:
+                        except (OSError, pa.ArrowInvalid) as e:
                             # a single bad footer must not silently
                             # undercount the partition below the rows
                             # cap: fall back to the ~1KB/row heuristic
                             # for THIS file's bytes
+                            _log.warning("partition_stats: unreadable "
+                                         "footer %s: %s", full, e)
                             unread_bytes += sz
         if not rows_known:
             nrows = nbytes // 1024  # reference heuristic: ~1KB/row
@@ -119,10 +129,22 @@ def partition_stats(input_path: str, partitions: list[str]) -> list[tuple]:
         return list(ex.map(one, partitions))
 
 
-PLAN_DDL = (
-    "partition string, action string, reason string, "
-    "estimated_bytes long, estimated_rows long, sample_fraction double"
-)
+def _stored_state(spark: SparkSession, output_root: str) -> dict:
+    """partition -> (status, fingerprint, completed_at as epoch µs,
+    sample_fraction) for partitions whose latest manifest row is a
+    ``done`` or ``sampled`` run. Epoch µs, not the collected datetime,
+    which Spark would hand back in the session's local time zone."""
+    rows = (
+        manifest.latest_state(manifest.read_manifest(spark, output_root))
+        .filter(F.col("status").isin("done", "sampled"))
+        .select(
+            "partition", "status", "fingerprint",
+            F.unix_micros(F.col("completed_at").cast("timestamp")),
+            "sample_fraction",
+        )
+        .collect()
+    )
+    return {r[0]: tuple(r[1:]) for r in rows}
 
 
 def plan_partitions(
@@ -134,11 +156,11 @@ def plan_partitions(
     scheduling: AdaptiveScheduling | None = None,
     cost: CostControls | None = None,
     reprocess_changed: bool = False,
-) -> DataFrame:
-    """One decision row per input partition.
+) -> list[dict]:
+    """One decision dict per input partition, sorted by partition.
 
-    Columns: partition, action (run|sample|skip|defer), reason,
-    estimated_bytes, estimated_rows, sample_fraction (non-null only for
+    Keys: partition, action (run|sample|skip|defer), reason,
+    estimated_bytes, estimated_rows, sample_fraction (non-None only for
     action=sample). ``skip``/``defer`` rows have should-not-run
     semantics; ``defer`` specifically means "wanted to run, cost caps
     said no" (reference planner.py:291-293).
@@ -147,136 +169,70 @@ def plan_partitions(
 
     scheduling = scheduling or AdaptiveScheduling()
     cost = cost or CostControls()
-    now = now or datetime.now(timezone.utc)
+    now_s = (now or datetime.now(timezone.utc)).timestamp()
     parts = partitions if partitions is not None else catalog.list_partitions(input_path)
 
     stats = partition_stats(input_path, parts)
-    fps = [(p, change_detection.partition_fingerprint(input_path, p))
-           for p in parts]
-    import pandas as pd
+    fps = [change_detection.partition_fingerprint(input_path, p) for p in parts]
+    state = _stored_state(spark, output_root)
 
-    meta = spark.createDataFrame(
-        pd.DataFrame(
-            [(p, b, r, fp) for (p, b, r), (_, fp) in zip(stats, fps)],
-            columns=["partition", "estimated_bytes", "estimated_rows",
-                     "current_fp"],
-        ),
-        schema="partition string, estimated_bytes long, estimated_rows long, "
-               "current_fp string",
-    )
-
-    state = (
-        manifest.latest_state(manifest.read_manifest(spark, output_root))
-        .filter(F.col("status").isin("done", "sampled"))
-        .select(
-            "partition",
-            F.col("status").alias("stored_status"),
-            F.col("fingerprint").alias("stored_fp"),
-            F.col("completed_at").alias("last_profiled_at"),
-            F.col("sample_fraction").alias("stored_fraction"),
-        )
-    )
-    joined = meta.join(F.broadcast(state), "partition", "left")
-
-    # per-partition interval, clamped (reference _is_due)
-    interval = F.lit(float(scheduling.default_interval_minutes))
-    if scheduling.priority_overrides:
-        kv = []
-        for k, v in sorted(scheduling.priority_overrides.items()):
-            kv += [F.lit(str(k)), F.lit(float(v))]
-        interval = F.coalesce(
-            F.create_map(*kv)[F.col("partition")], interval
-        )
-    interval = F.least(
-        F.greatest(interval, F.lit(float(scheduling.min_interval_minutes))),
-        F.lit(float(scheduling.max_interval_minutes)),
-    )
-    age_minutes = (
-        F.lit(now.timestamp())
-        - F.unix_micros(F.col("last_profiled_at").cast("timestamp")) / 1e6
-    ) / 60.0
-    is_fresh = (
-        F.lit(scheduling.enabled)
-        & F.col("last_profiled_at").isNotNull()
-        & (age_minutes < interval)
-    )
-
-    fp_match = F.col("stored_fp").isNotNull() & (
-        F.col("stored_fp") == F.col("current_fp")
-    )
-    ever_profiled = F.col("last_profiled_at").isNotNull()
-    done = ever_profiled & (F.col("stored_status") == "done")
-    # without reprocess_changed, FULLY-done partitions never re-run
-    # (legacy manifest-only resume); with it, only a fingerprint match
-    # skips. Partitions whose latest run was cost-cap SAMPLED are never
-    # terminally done: they skip only while the same cap + fraction
-    # still applies (re-sampling the same deterministic url-hash cohort
-    # would reproduce the identical output), and are otherwise promoted
-    # to a full run.
-    would_skip_done = done & (fp_match | F.lit(not reprocess_changed))
-    stored_sampled = ever_profiled & (F.col("stored_status") == "sampled")
-
-    over_bytes = (
-        F.lit(cost.enabled and cost.max_bytes_scanned is not None)
-        & (F.col("estimated_bytes") > F.lit(cost.max_bytes_scanned or 0))
-    )
-    over_rows = (
-        F.lit(cost.enabled and cost.max_rows_scanned is not None)
-        & (F.col("estimated_rows") > F.lit(cost.max_rows_scanned or 0))
-    )
+    # per-partition interval in minutes, clamped to [lo, hi] (reference _is_due)
+    overrides = {str(k): float(v)
+                 for k, v in scheduling.priority_overrides.items()}
+    default_interval = float(scheduling.default_interval_minutes)
+    lo = float(scheduling.min_interval_minutes)
+    hi = float(scheduling.max_interval_minutes)
     capped_action = {"sample": "sample", "defer": "defer"}.get(
-        cost.fallback_strategy, "run"
-    )
-    sampled_cap_unchanged = (
-        stored_sampled & fp_match & (over_bytes | over_rows)
-        & F.lit(capped_action == "sample")
-        & (F.col("stored_fraction") == F.lit(float(cost.sample_fraction)))
-    )
+        cost.fallback_strategy, "run")
+    fraction = float(cost.sample_fraction)
 
-    decision = (
+    def decide(p, nbytes, nrows, fp) -> tuple[str, str]:
+        status, stored_fp, profiled_us, stored_fraction = state.get(
+            p, (None, None, None, None))
+        ever_profiled = profiled_us is not None
         # reference order: freshness gate FIRST (cheapest — no change
         # detection), then snapshot match, then cost caps on the rest
-        F.when(is_fresh, F.struct(
-            F.lit("skip").alias("action"),
-            F.lit("fresh_within_interval").alias("reason")))
-        .when(would_skip_done & fp_match, F.struct(
-            F.lit("skip").alias("action"),
-            F.lit("snapshot_match").alias("reason")))
-        .when(would_skip_done, F.struct(
-            F.lit("skip").alias("action"),
-            F.lit("already_profiled").alias("reason")))
-        .when(sampled_cap_unchanged, F.struct(
-            F.lit("skip").alias("action"),
-            F.lit("sampled_cap_unchanged").alias("reason")))
-        .when(over_bytes, F.struct(
-            F.lit(capped_action).alias("action"),
-            F.lit("bytes_cap_exceeded").alias("reason")))
-        .when(over_rows, F.struct(
-            F.lit(capped_action).alias("action"),
-            F.lit("rows_cap_exceeded").alias("reason")))
-        .when(stored_sampled & fp_match, F.struct(
-            F.lit("run").alias("action"),
-            F.lit("promote_sampled_to_full").alias("reason")))
-        .when(ever_profiled, F.struct(
-            F.lit("run").alias("action"),
-            F.lit("change_detected").alias("reason")))
-        .otherwise(F.struct(
-            F.lit("run").alias("action"),
-            F.lit("never_profiled").alias("reason")))
-    )
+        if scheduling.enabled and ever_profiled:
+            interval = min(max(overrides.get(p, default_interval), lo), hi)
+            if (now_s - profiled_us / 1e6) / 60.0 < interval:
+                return "skip", "fresh_within_interval"
+        fp_match = stored_fp is not None and stored_fp == fp
+        # without reprocess_changed, FULLY-done partitions never re-run
+        # (manifest resume); with it, only a fingerprint match skips.
+        # Partitions whose latest run was cost-cap SAMPLED are never
+        # terminally done: they skip only while the same cap + fraction
+        # still applies (re-sampling the same deterministic url-hash
+        # cohort would reproduce the identical output), and are otherwise
+        # promoted to a full run.
+        if ever_profiled and status == "done" and (fp_match or not reprocess_changed):
+            return "skip", "snapshot_match" if fp_match else "already_profiled"
+        stored_sampled = ever_profiled and status == "sampled"
+        over_bytes = (cost.enabled and cost.max_bytes_scanned is not None
+                      and nbytes > cost.max_bytes_scanned)
+        over_rows = (cost.enabled and cost.max_rows_scanned is not None
+                     and nrows > cost.max_rows_scanned)
+        if (stored_sampled and fp_match and (over_bytes or over_rows)
+                and capped_action == "sample" and stored_fraction == fraction):
+            return "skip", "sampled_cap_unchanged"
+        if over_bytes:
+            return capped_action, "bytes_cap_exceeded"
+        if over_rows:
+            return capped_action, "rows_cap_exceeded"
+        if stored_sampled and fp_match:
+            return "run", "promote_sampled_to_full"
+        if ever_profiled:
+            return "run", "change_detected"
+        return "run", "never_profiled"
 
-    return (
-        joined.withColumn("_d", decision)
-        .select(
-            "partition",
-            F.col("_d.action").alias("action"),
-            F.col("_d.reason").alias("reason"),
-            "estimated_bytes",
-            "estimated_rows",
-            F.when(
-                F.col("_d.action") == "sample",
-                F.lit(float(cost.sample_fraction)),
-            ).alias("sample_fraction"),
-        )
-        .orderBy("partition")
-    )
+    plan = []
+    for (p, nbytes, nrows), fp in zip(stats, fps):
+        action, reason = decide(p, nbytes, nrows, fp)
+        plan.append({
+            "partition": p,
+            "action": action,
+            "reason": reason,
+            "estimated_bytes": nbytes,
+            "estimated_rows": nrows,
+            "sample_fraction": fraction if action == "sample" else None,
+        })
+    return sorted(plan, key=lambda r: r["partition"])

@@ -1,5 +1,5 @@
-"""Local 'warehouse' abstraction: Iceberg when available, partitioned
-parquet otherwise.
+"""Local 'warehouse' abstraction: partitioned parquet standing in for
+Iceberg.
 
 The north rule targets Iceberg tables partitioned by days(warc_ts). This
 sandbox image ships no iceberg-spark runtime jar (checked: no ivy cache,
@@ -20,17 +20,13 @@ partition replaces exactly that partition's files.
 
 from __future__ import annotations
 
+import logging
 import os
 import re
 
 from pyspark.sql import DataFrame, SparkSession
 
-try:  # pragma: no cover - not available in this image
-    import importlib
-
-    _ICEBERG = importlib.util.find_spec("pyiceberg") is not None
-except Exception:  # pragma: no cover
-    _ICEBERG = False
+_log = logging.getLogger(__name__)
 
 
 def list_partitions(path: str, partition_col: str = "dt") -> list[str]:
@@ -48,18 +44,17 @@ def list_partitions(path: str, partition_col: str = "dt") -> list[str]:
     return sorted(out)
 
 
-def read_table(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
 def write_partitioned(df: DataFrame, path: str, partition_col: str = "dt") -> None:
     """Dynamic partition overwrite — only partitions present in `df` are
     replaced; everything else is untouched (Iceberg REPLACE PARTITIONS
-    semantics)."""
+    semantics). A per-write option: the session's own
+    partitionOverwriteMode is left as the caller set it."""
     (
-        df.sparkSession.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partition_col)
+        .parquet(path)
     )
-    df.write.mode("overwrite").partitionBy(partition_col).parquet(path)
 
 
 #: common partition-column name patterns, in reference order
@@ -100,7 +95,8 @@ def collect_table_metadata(
     collapse. The parquet/Iceberg analog reads the same signals from
     storage metadata: bytes from file stats, rows from parquet footers,
     modification time from mtimes, partitioning from the directory
-    layout — O(files) metadata reads, never a data scan.
+    layout — O(files) metadata reads, never a data scan. A footer that
+    cannot be read is logged, and its file counts as bytes // 1024 rows.
 
     ``tables`` maps table name → directory. Query statistics
     (query_count, last_query_time) live in the query ENGINE's log, not
@@ -112,10 +108,8 @@ def collect_table_metadata(
     days_since_modified, has_partitions, partition_key)."""
     import datetime as _dt
 
-    try:
-        import pyarrow.parquet as pq
-    except ImportError:  # pragma: no cover - pyarrow is baked in
-        pq = None
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
     now = now or _dt.datetime.now(_dt.timezone.utc)
     if now.tzinfo is not None:
@@ -137,11 +131,13 @@ def collect_table_metadata(
                     nbytes += st.st_size
                     if mtime is None or st.st_mtime > mtime:
                         mtime = st.st_mtime
-                    if pq is not None and f.endswith(".parquet"):
+                    if f.endswith(".parquet"):
                         try:
                             nrows += pq.ParquetFile(full).metadata.num_rows
                             rows_known = True
-                        except Exception:
+                        except (OSError, pa.ArrowInvalid) as e:
+                            _log.warning("collect_table_metadata: unreadable "
+                                         "footer %s: %s", full, e)
                             nrows += st.st_size // 1024
         if not rows_known and nrows == 0:
             nrows = nbytes // 1024

@@ -9,21 +9,19 @@ fingerprint = hash of every file's (relative path, size, mtime) under
 the partition directory. Driver-side stat calls — O(files), never a
 data scan — mirroring the reference's metadata-only contract.
 
-This closes a real gap in manifest-only resume: the manifest marks a
-partition done *forever*, so if an upstream backfill rewrites the
-input, a plain resume would silently keep stale output. With
-``reprocess_changed=True`` the pipeline re-runs exactly the partitions
-whose input fingerprint differs from the one stored at commit time
-(idempotent thanks to dynamic partition overwrite).
+The pipeline stores each partition's fingerprint in the manifest at
+commit time, and the planner (plans/planner.py) compares it with the
+current one: a match is ``snapshot_match``, a mismatch is
+``change_detected``. By default a done partition stays done even if an
+upstream backfill rewrites its input; with ``reprocess_changed=True``
+exactly the partitions whose fingerprint changed re-run (idempotent
+thanks to dynamic partition overwrite).
 """
 
 from __future__ import annotations
 
 import hashlib
 import os
-
-from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 
 def partition_fingerprint(input_path: str, partition: str) -> str:
@@ -47,42 +45,3 @@ def partition_fingerprint(input_path: str, partition: str) -> str:
     for rel, size, mtime in sorted(entries):
         h.update(f"{rel}|{size}|{mtime}\n".encode())
     return h.hexdigest()
-
-
-def stored_fingerprints(spark: SparkSession, output_root: str) -> dict[str, str]:
-    """Latest committed fingerprint per done partition, from the
-    manifest (missing/null fingerprints — e.g. rows written before this
-    feature — are absent from the dict, so they read as 'changed')."""
-    from . import manifest
-
-    m = manifest.read_manifest(spark, output_root)
-    if "fingerprint" not in m.columns:
-        return {}
-    rows = (
-        manifest.latest_state(m)
-        .filter(F.col("status") == "done")
-        .select("partition", "fingerprint")
-        .collect()
-    )
-    return {
-        r["partition"]: r["fingerprint"]
-        for r in rows
-        if r["fingerprint"] is not None
-    }
-
-
-def changed_partitions(
-    spark: SparkSession,
-    input_path: str,
-    output_root: str,
-    done: list[str],
-) -> list[str]:
-    """Among ``done`` partitions, the ones whose current input
-    fingerprint no longer matches the committed one (reference
-    ChangeDetector.summarize, change_detection.py:40-61: fingerprint
-    mismatch ⇒ reprofile)."""
-    stored = stored_fingerprints(spark, output_root)
-    return [
-        p for p in done
-        if stored.get(p) != partition_fingerprint(input_path, p)
-    ]

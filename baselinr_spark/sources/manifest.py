@@ -8,9 +8,10 @@ counts; the *latest* row per partition wins (the reference upserts; we
 append + resolve latest by completed_at, which is the Iceberg-friendly
 append-only pattern — MERGE INTO when an Iceberg catalog is present).
 
-Resume = list input partitions, anti-join against `done` partitions,
-process only the remainder (north rule: "resumable from checkpoint with
-per-partition lineage").
+Resume = the planner (plans/planner.py) reads the latest state per
+partition and skips the ones already done, so a run processes only the
+remainder (north rule: "resumable from checkpoint with per-partition
+lineage").
 """
 
 from __future__ import annotations
@@ -35,7 +36,9 @@ def manifest_path(output_root: str) -> str:
 def read_manifest(spark: SparkSession, output_root: str) -> DataFrame:
     path = manifest_path(output_root)
     if not os.path.isdir(path):
-        return spark.createDataFrame([], schema=MANIFEST_DDL)
+        # limit(0) lets the optimizer fold any query over this frame to an
+        # empty local relation, so a fresh root's plan runs no Spark job
+        return spark.createDataFrame([], schema=MANIFEST_DDL).limit(0)
     # mergeSchema: manifests written before a column existed coexist
     # with newer rows in the same append-only dir
     m = spark.read.option("mergeSchema", "true").parquet(path)
@@ -54,20 +57,6 @@ def latest_state(manifest: DataFrame) -> DataFrame:
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
-
-
-def done_partitions(spark: SparkSession, output_root: str) -> list[str]:
-    """Partitions whose latest state is a FULL run. Cost-capped runs are
-    committed as status='sampled' and deliberately excluded, so a later
-    un-capped run promotes them to full instead of skipping forever."""
-    m = read_manifest(spark, output_root)
-    rows = (
-        latest_state(m)
-        .filter(F.col("status") == "done")
-        .select("partition")
-        .collect()
-    )
-    return sorted(r["partition"] for r in rows)
 
 
 def commit_partitions(

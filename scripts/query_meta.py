@@ -43,11 +43,15 @@ from pyspark.sql import functions as F  # noqa: E402
 
 
 def _emit(df: DataFrame) -> list[dict]:
-    rows = [
+    return _print_rows([
         {k: (v.isoformat() if hasattr(v, "isoformat") else v)
          for k, v in r.asDict().items()}
         for r in df.collect()
-    ]
+    ])
+
+
+def _print_rows(rows: list[dict]) -> list[dict]:
+    """One JSON line per row."""
     for r in rows:
         print(json.dumps(r, default=str))
     return rows
@@ -185,7 +189,7 @@ def cmd_plan(spark, out_root, args) -> list[dict]:
             fallback_strategy=args.fallback_strategy,
             sample_fraction=args.sample_fraction,
         )
-    return _emit(plan_partitions(
+    return _print_rows(plan_partitions(
         spark, args.input, out_root,
         scheduling=scheduling, cost=cost,
         reprocess_changed=args.reprocess_changed,

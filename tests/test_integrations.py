@@ -1,6 +1,7 @@
 """Orchestrator integrations: dbt manifest/selector parity, Airflow
 task functions + dummy-base operators, Dagster sensor cursor logic."""
 
+import glob
 import json
 import os
 
@@ -160,3 +161,20 @@ def test_dagster_sensor_logic(spark, warehouse, tmp_path):
                                    session_factory=lambda: spark)
     res = asset()
     assert res["partitions_skipped"] == res["partitions_total"]
+
+    # upstream backfill of one dt: the sensor requests exactly it, the
+    # asset processes exactly it, and then the sensor goes quiet
+    from baselinr_spark.sources import catalog
+
+    victim = catalog.list_partitions(warehouse)[0]
+    fpath = sorted(glob.glob(os.path.join(warehouse, f"dt={victim}",
+                                          "*.parquet")))[0]
+    st = os.stat(fpath)
+    os.utime(fpath, ns=(st.st_atime_ns, st.st_mtime_ns + 2_000_000_000))
+    third = evaluate(second["cursor"])
+    assert third["run_requested"] and third["partitions"] == [victim]
+    assert third["cursor"] != second["cursor"]
+    assert asset()["partitions_processed"] == [victim]
+    fourth = evaluate(third["cursor"])
+    assert fourth["run_requested"] is False and fourth["partitions"] == []
+    assert fourth["cursor"] == third["cursor"]

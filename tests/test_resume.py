@@ -17,6 +17,13 @@ def _docs_state(spark, out_root):
     return sorted((r[0], r[1], r[2], r[3]) for r in rows)
 
 
+def _done(spark, out_root):
+    """Partitions whose latest manifest row is a full run."""
+    state = manifest.latest_state(manifest.read_manifest(spark, out_root))
+    return sorted(r["partition"] for r in
+                  state.filter(F.col("status") == "done").collect())
+
+
 def test_resume_after_crash(spark, warehouse, out_root, tmp_path_factory):
     # crash after writing chunk-0 and chunk-1 data but before chunk-1 commit
     with pytest.raises(RuntimeError, match="injected failure"):
@@ -24,14 +31,14 @@ def test_resume_after_crash(spark, warehouse, out_root, tmp_path_factory):
             spark, warehouse, out_root, run_id="run-a",
             checkpoint_every=3, _fail_before_commit_chunk=1,
         )
-    done_after_crash = manifest.done_partitions(spark, out_root)
+    done_after_crash = _done(spark, out_root)
     assert len(done_after_crash) == 3  # only chunk 0 committed
 
     # resume: must process exactly the remainder
     summary2 = run_pipeline(spark, warehouse, out_root, run_id="run-b", checkpoint_every=3)
     assert set(summary2["partitions_processed"]).isdisjoint(done_after_crash)
 
-    all_parts = manifest.done_partitions(spark, out_root)
+    all_parts = _done(spark, out_root)
     assert sorted(summary2["partitions_processed"] + done_after_crash) == all_parts
 
     # final state identical to a clean single run
