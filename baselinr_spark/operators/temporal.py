@@ -256,10 +256,9 @@ def sessionize(
     One shuffle by key + per-key sort — the inherent cost of the
     semantics; a key's events must meet to be threaded into sessions.
     Hot keys degrade to per-key sequential row_number work, the same
-    bound as any per-entity ordering. The STREAMING analogue is
-    Spark's built-in ``session_window`` aggregation (used by the
-    streaming parity paths); this is the batch/backfill twin that
-    yields row-level session ids rather than windowed aggregates."""
+    bound as any per-entity ordering. Unlike Spark's built-in
+    ``session_window`` aggregation it yields row-level session ids
+    rather than windowed aggregates."""
     from pyspark.sql import Window as W
 
     keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)

@@ -59,8 +59,8 @@ DOCS_COLS = (
 def psi_bucket_expr():
     """Fixed log10 half-decade buckets for cross-cohort PSI comparability
     (the reference synthesizes comparable buckets from range overlap,
-    statistical_tests.py:560-586; fixed edges are the streaming-friendly
-    equivalent)."""
+    statistical_tests.py:560-586; fixed edges keep every cohort's stored
+    bucket counts comparable without re-reading older cohorts' docs)."""
     return F.least(
         F.lit(9),
         F.greatest(
@@ -333,7 +333,9 @@ def _needed_metric_partitions(metrics_dir: str, chunk_strs: list[str]) -> list[s
     lexicographic order IS date order. Pruning preserves lag semantics:
     by construction no stored dt lies strictly between a cohort and its
     included predecessor, and rows whose cohort is outside the chunk are
-    filtered from the event output anyway."""
+    filtered from the event output anyway. A metrics dir that does not
+    exist holds no predecessors; any other listing error raises, since
+    dropping a predecessor would silently drop its cohort's PSI event."""
     needed = set(chunk_strs)
     try:
         stored = sorted(
@@ -341,7 +343,7 @@ def _needed_metric_partitions(metrics_dir: str, chunk_strs: list[str]) -> list[s
             for d in os.listdir(metrics_dir)
             if d.startswith("partition_key=")
         )
-    except OSError:
+    except FileNotFoundError:
         return sorted(needed)
     for c in chunk_strs:
         preds = [d for d in stored if d < c]

@@ -22,13 +22,17 @@ def build_session(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    # defaults fit the host: the cores this process may run on (what
+    # `nproc` reports) and half its physical RAM, capped at 16g
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     master = master or f"local[{cpus}]"
-    # local[N] → match shuffle partitions to cores; on a real cluster this
-    # is left to AQE coalescing from an over-provisioned initial count.
+    # match shuffle partitions to the master's cores (this host's when it
+    # names none, e.g. local[*]); AQE coalesces from there at run time
     if shuffle_partitions is None:
-        n = master[master.find("[") + 1 : master.find("]")] if "[" in master else "32"
-        shuffle_partitions = 32 if n == "*" else max(8, int(n))
+        n = master[master.find("[") + 1 : master.find("]")] if "[" in master else "*"
+        shuffle_partitions = max(8, cpus if n == "*" else int(n))
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    driver_memory = os.environ.get("SPARK_DRIVER_MEMORY") or f"{min(16 << 10, ram_mb // 2)}m"
 
     builder = (
         SparkSession.builder.master(master)
@@ -40,11 +44,12 @@ def build_session(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        # 16g: at local[32] the single JVM runs 32 concurrent tasks; an 8g
-        # heap measurably GC-stalls the UDF stage (transform 9.3s -> 7.0s
-        # at 100k docs when raised). On a real cluster this is per-executor
-        # spark.executor.memory, sized by the resource manager instead.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        # the 16g cap was measured at local[32], where one JVM runs 32
+        # concurrent tasks and an 8g heap GC-stalls the UDF stage
+        # (transform 9.3s -> 7.0s at 100k docs when raised). On a real
+        # cluster this is per-executor spark.executor.memory, sized by
+        # the resource manager instead.
+        .config("spark.driver.memory", driver_memory)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # open-cost models per-file seek overhead when packing scan

@@ -3,6 +3,7 @@ one's immediate predecessor — not the whole metric history."""
 
 import os
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -37,6 +38,15 @@ def test_needed_partitions_chunk_plus_predecessor(spark, tmp_path):
     assert _needed_metric_partitions(mdir, ["2025-06-01"]) == ["2025-06-01"]
     # missing dir: fall back to the chunk itself
     assert _needed_metric_partitions(str(tmp_path / "nope"), ["x"]) == ["x"]
+
+
+def test_unlistable_metrics_dir_raises(tmp_path):
+    """Only a missing dir means "no predecessors"; any other listing
+    error must surface, or the chunk's PSI events vanish silently."""
+    not_a_dir = tmp_path / "metrics"
+    not_a_dir.write_text("")
+    with pytest.raises(NotADirectoryError):
+        _needed_metric_partitions(str(not_a_dir), ["x"])
 
 
 def test_pruned_scan_reads_only_needed_partition_files(spark, tmp_path):

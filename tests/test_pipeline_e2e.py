@@ -6,6 +6,7 @@ plus byte-identical scrubbed text)."""
 import json
 import os
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -96,6 +97,46 @@ def test_events_and_lineage(pipeline_result, spark):
     assert sorted(lin["partition"]) == parts
     assert int(lin["doc_count"].sum()) == len(docs)
     assert int(lin["kept_count"].sum()) == int(docs["keep"].sum())
+
+
+def test_drift_psi_matches_numpy(pipeline_result, spark):
+    """Every distribution_drift event's score and severity, recomputed in
+    numpy from the docs table: fixed log10 half-decade perplexity
+    buckets, each dt normalized by its own total and compared with the
+    dt before it, missing or zero probabilities floored at 1e-4."""
+    _, out_root, docs, _ = pipeline_result
+    ppl = docs["perplexity"].astype(float).to_numpy()
+    # fmax skips NaN like Spark's greatest() skips NULL: bucket 0
+    bucket = np.clip(np.floor(np.log10(np.fmax(ppl, 1.0)) * 2), 0, 9).astype(int)
+    dts = docs["dt"].astype(str).to_numpy()
+    dist = {}
+    for dt in sorted(set(dts)):
+        counts = np.bincount(bucket[dts == dt], minlength=10)
+        dist[dt] = {int(b): counts[b] / counts.sum() for b in np.flatnonzero(counts)}
+
+    def floored(d, b):
+        return d.get(b) or 1e-4
+
+    expected = {}
+    order = sorted(dist)
+    for base, cur in zip(order, order[1:]):
+        p, q = dist[cur], dist[base]
+        psi = sum(
+            (floored(p, b) - floored(q, b)) * np.log(floored(p, b) / floored(q, b))
+            for b in sorted(set(p) | set(q))
+        )
+        severity = ("high" if psi > 0.5 else "medium" if psi > 0.3
+                    else "low" if psi > 0.2 else "none")
+        expected[cur] = (psi, severity)
+
+    ev = spark.read.parquet(os.path.join(out_root, "events")).toPandas()
+    drift = ev[ev["event_type"] == "distribution_drift"]
+    got = {str(r.partition): (r.score, r.severity) for r in drift.itertuples()}
+    assert sorted(got) == sorted(expected)
+    for dt, (psi, severity) in expected.items():
+        # Java Math.log and numpy log may differ by an ulp
+        assert got[dt][0] == pytest.approx(psi, rel=1e-12, abs=0), dt
+        assert got[dt][1] == severity, dt
 
 
 def test_summary(pipeline_result):
