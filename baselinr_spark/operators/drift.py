@@ -3,7 +3,7 @@
 Recasts /root/reference/baselinr/drift/statistical_tests.py as DataFrame
 ops over bucket/category count tables (one row per cohort x bucket).
 Where the reference loop-compares two in-memory dicts, we full-outer-join
-two (or N, via lag) cohort distributions and reduce with native
+two cohort distributions and reduce with native
 aggregates — the shape that survives 10^12 rows because the inputs here
 are already tiny aggregates.
 
@@ -22,6 +22,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 PSI_FLOOR = 0.0001
+
+#: PSI severity bands, highest first: a score strictly above the bound
+#: takes the band; at or below every bound it is "none"
+PSI_BANDS = (("high", 0.5), ("medium", 0.3), ("low", 0.2))
 
 
 # ---------------------------------------------------------------------------
@@ -169,77 +173,16 @@ def _psi_reduce(j: DataFrame, key_cols: list[str]) -> DataFrame:
 
 
 def psi_severity(psi_col):
-    return (
-        F.when(psi_col > 0.5, "high")
-        .when(psi_col > 0.3, "medium")
-        .when(psi_col > 0.2, "low")
-        .otherwise("none")
-    )
+    (top, top_bound), *rest = PSI_BANDS
+    sev = F.when(psi_col > top_bound, top)
+    for band, bound in rest:
+        sev = sev.when(psi_col > bound, band)
+    return sev.otherwise("none")
 
 
-def psi_pairwise_lag(
-    dist: DataFrame,
-    cohort_col: str,
-    bucket_col: str,
-    count_col: str,
-    key_cols: list[str] | None = None,
-) -> DataFrame:
-    """PSI of every cohort vs its predecessor (ordered by cohort value) in
-    one plan: pivot cohort→prob map per bucket is avoided; instead
-    collect each cohort's distribution as a sorted array and lag it.
-    Cohort count is small (per-day partitions), so the collect_list per
-    cohort is bounded by the bucket count (10).
-
-    ``key_cols`` keys the lag window (one independent PSI sequence per
-    key — per metric/table/column), matching `ks_from_histograms` /
-    `top_k_jaccard`; without it the window is global, which is fine for
-    one bounded sequence but warns and single-partitions at scale."""
-    from pyspark.sql import Window as W
-
-    key_cols = list(key_cols or [])
-    # per-cohort total as a window sum: a broadcast self-join here would
-    # re-execute the upstream dist plan (metrics read-back) a second time
-    w_tot = W.partitionBy(*key_cols, cohort_col)
-    tot = F.sum(count_col).over(w_tot)
-    probs = dist.select(
-        *key_cols,
-        F.col(cohort_col).alias("cohort"),
-        F.col(bucket_col).alias("bucket"),
-        (F.col(count_col) / F.when(tot > 0, tot).otherwise(F.lit(1.0))).alias("p"),
-    )
-    per_cohort = probs.groupBy(*key_cols, "cohort").agg(
-        F.map_from_entries(
-            F.array_sort(F.collect_list(F.struct("bucket", "p")))
-        ).alias("dist")
-    )
-    w = (W.partitionBy(*key_cols).orderBy("cohort") if key_cols
-         else W.orderBy("cohort"))
-    lagged = per_cohort.withColumn("base_dist", F.lag("dist").over(w)).filter(
-        F.col("base_dist").isNotNull()
-    )
-    # union of keys, floor missing/zero at 1e-4, sum terms
-    keys = F.array_distinct(
-        F.concat(F.map_keys(F.col("dist")), F.map_keys(F.col("base_dist")))
-    )
-    term = F.transform(
-        keys,
-        lambda k: (
-            (_floored(F.col("dist")[k]) - _floored(F.col("base_dist")[k]))
-            * F.log(_floored(F.col("dist")[k]) / _floored(F.col("base_dist")[k]))
-        ),
-    )
-    psi_col = F.aggregate(term, F.lit(0.0), lambda acc, x: acc + x)
-    return lagged.select(
-        *key_cols,
-        F.col("cohort"),
-        psi_col.alias("psi"),
-        (psi_col > 0.2).alias("drift"),
-        psi_severity(psi_col).alias("severity"),
-    )
-
-
-def _floored(p):
-    return F.when(p.isNotNull() & (p > 0), p).otherwise(F.lit(PSI_FLOOR))
+def psi_band(psi: float) -> str:
+    """psi_severity of one driver-side score."""
+    return next((band for band, bound in PSI_BANDS if psi > bound), "none")
 
 
 def z_score(

@@ -4,8 +4,7 @@
 The reference emits typed event dataclasses (DataDriftDetected,
 ValidationFailed, SchemaChangeDetected, AnomalyDetected, …) through an
 in-process event bus. Here every event type is a row in ONE unified
-events table so a 1000-executor run appends events exactly like any
-other partitioned sink:
+events table (EVENTS_DDL), appended like any other partitioned sink:
 
     (event_id, event_type, partition, metric_name, baseline_value,
      current_value, score, severity, ts, metadata_json)
@@ -16,79 +15,92 @@ event_type values mirror the reference classes:
   schema_change       ← SchemaChangeDetected   (events.py:62-95)
   anomaly_detected    ← AnomalyDetected        (events.py:252-283)
 
-All builders below read the already-written metrics/schema rows — no
-extra scan of the documents table, so event emission costs O(partitions),
-not O(docs).
+Events are functions of per-partition metric states, never of the
+documents: each builder below is plain Python over rows the driver
+already holds (the stored metric rows, or the schema snapshots) and
+returns one dict per event, every column but `ts`, which the caller
+stamps once per chunk.
 """
 
 from __future__ import annotations
 
+import hashlib
+import json
+import math
+from decimal import ROUND_HALF_UP, Decimal
+
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+#: schema of the events table
+EVENTS_DDL = (
+    "event_id string, event_type string, partition string, metric_name string,"
+    " baseline_value double, current_value double, score double,"
+    " severity string, ts timestamp, metadata_json string"
+)
+
+#: validation_failed severity: low above 0, medium from FIRE_WARN, high
+#: from FIRE_HIGH (rule fire rate)
+FIRE_WARN = 0.2
+FIRE_HIGH = 0.5
+
+#: anomaly_detected: a count more than SIGMA leave-one-out standard
+#: deviations from the other partitions' mean; high beyond 2·SIGMA
+SIGMA = 3.0
 
 
-def _finish(df: DataFrame, run_id: str, event_type: str) -> DataFrame:
-    """Stamp the shared event columns; event_id is deterministic per
-    (run, type, partition, metric) so idempotent reruns overwrite rather
-    than duplicate."""
-    return df.select(
-        F.concat(
-            F.lit("evt-"),
-            F.md5(F.concat_ws(
-                "|", F.lit(run_id), F.lit(event_type),
-                F.col("partition"), F.col("metric_name"),
-            )),
-        ).alias("event_id"),
-        F.lit(event_type).alias("event_type"),
-        "partition", "metric_name", "baseline_value", "current_value",
-        "score", "severity",
-        F.current_timestamp().alias("ts"),
-        "metadata_json",
-    )
+def _event(run_id, event_type, partition, metric_name, baseline, current,
+           score, severity, meta, key=None) -> dict:
+    """One event row without `ts`. event_id is deterministic per (run,
+    type, partition, metric) so idempotent reruns overwrite rather than
+    duplicate; `key` replaces that hashed key where an event type keeps
+    an older id. metadata_json is compact JSON, one format for every
+    event type."""
+    if key is None:
+        key = f"{run_id}|{event_type}|{partition}|{metric_name}"
+    return {
+        "event_id": "evt-" + hashlib.md5(key.encode()).hexdigest(),
+        "event_type": event_type,
+        "partition": partition,
+        "metric_name": metric_name,
+        "baseline_value": baseline,
+        "current_value": current,
+        "score": score,
+        "severity": severity,
+        "metadata_json": (None if meta is None
+                          else json.dumps(meta, separators=(",", ":"))),
+    }
 
 
-def validation_events(
-    mrows: DataFrame,
-    run_id: str,
-    fire_warn: float = 0.2,
-    fire_high: float = 0.5,
-) -> DataFrame:
+def _round_half_up(x: float) -> float:
+    """Spark's round(x) on a double: HALF_UP on its decimal string, not
+    Python's round-half-even."""
+    return float(Decimal(repr(x)).to_integral_value(ROUND_HALF_UP))
+
+
+def validation_events(rows: list[dict], run_id: str) -> list[dict]:
     """ValidationFailed analogue (reference events.py:285-318): one event
     per (partition, rule) whose fire rate exceeds 0 — severity low, then
-    medium ≥ `fire_warn`, high ≥ `fire_high`. Input is the long metrics
-    table already produced by partition_metrics (rule_fire_rate:* rows +
-    count rows), so this is a self-join of a tiny aggregate."""
-    rates = mrows.filter(
-        F.col("metric_name").startswith("rule_fire_rate:")
-    ).select(
-        "partition",
-        F.split(F.col("metric_name"), ":")[1].alias("rule"),
-        F.col("metric_value").alias("fire_rate"),
-    )
-    counts = mrows.filter(F.col("metric_name") == "count").select(
-        "partition", F.col("metric_value").alias("total_rows")
-    )
-    j = rates.join(counts, "partition").filter(F.col("fire_rate") > 0)
-    sev = (
-        F.when(F.col("fire_rate") >= fire_high, "high")
-        .when(F.col("fire_rate") >= fire_warn, "medium")
-        .otherwise("low")
-    )
-    ev = j.select(
-        "partition",
-        F.concat(F.lit("rule_fire_rate:"), F.col("rule")).alias("metric_name"),
-        F.lit(0.0).alias("baseline_value"),
-        F.col("fire_rate").alias("current_value"),
-        F.col("fire_rate").alias("score"),
-        sev.alias("severity"),
-        F.to_json(F.struct(
-            F.col("rule").alias("rule_type"),
-            F.col("total_rows"),
-            F.round(F.col("fire_rate") * F.col("total_rows")).alias("total_failures"),
-            (F.col("fire_rate") * 100.0).alias("failure_rate"),
-        )).alias("metadata_json"),
-    )
-    return _finish(ev, run_id, "validation_failed")
+    medium ≥ FIRE_WARN, high ≥ FIRE_HIGH. `rows` are long metric rows
+    (partition, metric_name, metric_value) as partition_metrics writes
+    them; a partition needs its `count` row."""
+    totals = {r["partition"]: r["metric_value"] for r in rows
+              if r["metric_name"] == "count"}
+    out = []
+    for r in rows:
+        name, part, rate = r["metric_name"], r["partition"], r["metric_value"]
+        if (not name.startswith("rule_fire_rate:") or part not in totals
+                or rate is None or not rate > 0):
+            continue
+        total = totals[part]
+        sev = ("high" if rate >= FIRE_HIGH
+               else "medium" if rate >= FIRE_WARN else "low")
+        out.append(_event(
+            run_id, "validation_failed", part, name, 0.0, rate, rate, sev,
+            {"rule_type": name.split(":")[1], "total_rows": total,
+             "total_failures": _round_half_up(rate * total),
+             "failure_rate": rate * 100.0},
+        ))
+    return out
 
 
 def write_schema_snapshot(
@@ -139,9 +151,7 @@ def _naive_utc(ts):
     return ts.astimezone(_dt.timezone.utc).replace(tzinfo=None)
 
 
-def schema_change_events(
-    spark: SparkSession, schema_dir: str, run_id: str
-) -> DataFrame:
+def schema_change_events(schema_dir: str, run_id: str) -> list[dict]:
     """SchemaChangeDetected analogue (reference events.py:62-95): diff
     this run's schema snapshot against the most recent previous run's.
     change_type ∈ column_added / column_removed / type_changed, severity
@@ -155,17 +165,12 @@ def schema_change_events(
 
     No snapshot directory yet means no events; any read error on an
     existing one (a corrupt or unreadable snapshot file) raises."""
-    import json as _json
     import os
 
     import pyarrow.parquet as pq
 
-    empty = spark.createDataFrame(
-        [], schema="partition string, metric_name string, baseline_value double,"
-        " current_value double, score double, severity string, metadata_json string",
-    )
     if not os.path.isdir(schema_dir):
-        return _finish(empty, run_id, "schema_change")
+        return []
     rows = pq.read_table(
         schema_dir, columns=["run_id", "column_name", "data_type", "ts"]
     ).to_pylist()
@@ -178,14 +183,14 @@ def schema_change_events(
         if r["run_id"] not in latest or ts > latest[r["run_id"]]:
             latest[r["run_id"]] = ts
     if not latest:
-        return _finish(empty, run_id, "schema_change")
+        return []
     prev_id = max(latest.items(), key=lambda kv: (kv[1], kv[0]))[0]
 
     cur = {r["column_name"]: _normalize_type_py(r["data_type"])
            for r in rows if r["run_id"] == run_id}
     base = {r["column_name"]: _normalize_type_py(r["data_type"])
             for r in rows if r["run_id"] == prev_id}
-    ev_rows = []
+    out = []
     for col in sorted(set(cur) | set(base)):
         in_c, in_b = col in cur, col in base
         if in_c and in_b and cur[col] == base[col]:
@@ -202,79 +207,47 @@ def schema_change_events(
         if new_t is not None:
             meta["new_type"] = new_t
         meta["baseline_run_id"] = prev_id
-        ev_rows.append((
-            "__schema__", col, None, None, None, sev,
-            _json.dumps(meta, separators=(",", ":")),
-        ))
-    if not ev_rows:
-        return _finish(empty, run_id, "schema_change")
-    # pandas → Arrow-backed local relation: a plain python-list
-    # createDataFrame executes through per-partition Python-worker round
-    # trips, which serialize brutally under the single-writer-task event
-    # sink; the Arrow path materializes rows JVM-side
-    import pandas as pd
-
-    ev = spark.createDataFrame(
-        pd.DataFrame(
-            ev_rows,
-            columns=["partition", "metric_name", "baseline_value",
-                     "current_value", "score", "severity", "metadata_json"],
-        ),
-        schema="partition string, metric_name string, baseline_value double,"
-        " current_value double, score double, severity string, metadata_json string",
-    )
-    return _finish(ev, run_id, "schema_change")
+        out.append(_event(run_id, "schema_change", "__schema__", col,
+                          None, None, None, sev, meta))
+    return out
 
 
-def anomaly_events(
-    spark: SparkSession,
-    metrics_dir: str,
-    run_id: str,
-    sigma: float = 3.0,
-) -> DataFrame:
+def anomaly_events(rows: list[dict], run_id: str) -> list[dict]:
     """AnomalyDetected analogue (reference events.py:252-283) via
     control limits (detection_methods control_limits): a partition whose
-    doc count falls outside mean ± 3σ of the OTHER partitions' counts is
-    anomalous. Leave-one-out matters: the reference learns limits from
-    history and compares the current value against them — including the
-    tested point in the stats caps the max possible z at (k−1)/√k, so a
-    single extreme partition among ten could never reach 3σ. Computed
-    from sum/sum-of-squares in one aggregate over the tiny metrics
-    table."""
-    counts = (
-        spark.read.parquet(metrics_dir).filter(F.col("metric_name") == "count")
-        .groupBy("partition")
-        .agg(F.max("metric_value").alias("n"))
-    )
-    stats = counts.agg(
-        F.sum("n").alias("S"), F.sum(F.col("n") * F.col("n")).alias("SS"),
-        F.count(F.lit(1)).alias("k"),
-    )
-    j = counts.crossJoin(F.broadcast(stats)).filter(F.col("k") >= 4)
-    mu = (F.col("S") - F.col("n")) / (F.col("k") - 1)
-    var = (
-        (F.col("SS") - F.col("n") * F.col("n")) - (F.col("k") - 1) * mu * mu
-    ) / (F.col("k") - 2)
-    sd = F.sqrt(F.greatest(var, F.lit(0.0)))
-    z = F.abs(F.col("n") - mu) / sd
-    j = (
-        j.withColumn("mu", mu).withColumn("sd", sd).withColumn("z", z)
-        .filter(F.col("sd").isNotNull() & (F.col("sd") > 0)
-                & (F.col("z") > sigma))
-    )
-    ev = j.select(
-        "partition",
-        F.lit("count").alias("metric_name"),
-        F.col("mu").alias("baseline_value"),
-        F.col("n").alias("current_value"),
-        F.col("z").alias("score"),
-        F.when(F.col("z") > 2 * sigma, "high")
-        .otherwise("medium").alias("severity"),
-        F.to_json(F.struct(
-            F.lit("control_limits").alias("detection_method"),
-            F.lit("rowcount").alias("anomaly_type"),
-            F.col("mu").alias("expected_value"),
-            F.col("n").alias("actual_value"),
-        )).alias("metadata_json"),
-    )
-    return _finish(ev, run_id, "anomaly_detected")
+    doc count falls outside mean ± SIGMA·sd of the OTHER partitions'
+    counts is anomalous. Leave-one-out matters: the reference learns
+    limits from history and compares the current value against them —
+    including the tested point in the stats caps the max possible z at
+    (k−1)/√k, so a single extreme partition among ten could never reach
+    3σ. Needs k ≥ 4 partitions; `rows` are every stored partition's
+    long metric rows, of which the `count` rows are read, and the
+    leave-one-out mean and variance come from one sum and sum of
+    squares."""
+    counts: dict[str, float] = {}
+    for r in rows:
+        if r["metric_name"] == "count" and r["metric_value"] is not None:
+            p = r["partition"]
+            counts[p] = max(counts.get(p, r["metric_value"]), r["metric_value"])
+    k = len(counts)
+    if k < 4:
+        return []
+    s = sum(counts.values())
+    ss = sum(n * n for n in counts.values())
+    out = []
+    for p, n in sorted(counts.items()):
+        mu = (s - n) / (k - 1)
+        var = ((ss - n * n) - (k - 1) * mu * mu) / (k - 2)
+        sd = math.sqrt(max(var, 0.0))
+        if not sd > 0:
+            continue
+        z = abs(n - mu) / sd
+        if z > SIGMA:
+            out.append(_event(
+                run_id, "anomaly_detected", p, "count", mu, n, z,
+                "high" if z > 2 * SIGMA else "medium",
+                {"detection_method": "control_limits",
+                 "anomaly_type": "rowcount", "expected_value": mu,
+                 "actual_value": n},
+            ))
+    return out

@@ -8,10 +8,10 @@ by the events parquet sink itself (every event is already a row). What
 remains worth recasting is ALERTING: after a pipeline run, fan the
 high-signal events out to loggers/webhooks.
 
-Scale contract: hooks receive the (already severity-filtered) event
-rows collected to the driver. Events are O(partitions × rules), not
-O(docs), so the collect is metadata-sized; the filter runs
-distributed. A hook must never be invoked per-document.
+Scale contract: hooks receive event rows the driver already holds
+(run_pipeline passes the rows it just wrote). Events are
+O(partitions × rules), not O(docs). A hook must never be invoked
+per-document.
 """
 
 from __future__ import annotations
@@ -19,9 +19,6 @@ from __future__ import annotations
 import json
 import logging
 from typing import Callable, Protocol
-
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..severity import SEVERITY_RANK, severity_rank
 
@@ -79,29 +76,31 @@ class WebhookAlertHook:
 
 
 def dispatch_events(
-    events: DataFrame,
+    events: list[dict],
     hooks: list[AlertHook],
     min_severity: str = "medium",
     event_types: list[str] | None = None,
     max_events: int = 1000,
 ) -> int:
-    """Filter the events table distributed-side, collect the (tiny)
-    survivors, and feed each to every hook. Returns the number of
-    events dispatched. `max_events` bounds a pathological run — if hit,
-    the truncation is logged rather than silent."""
+    """Feed each event row at or above `min_severity` (and of
+    `event_types`, when given) to every hook, newest `ts` first, ties by
+    event_id. Returns the number of events dispatched. `max_events`
+    bounds a pathological run — if hit, the truncation is logged rather
+    than silent."""
     if not hooks:
         return 0
     floor = severity_rank(min_severity)  # raises on typos — fail loudly
-    ranks = [s for s, r in SEVERITY_RANK.items() if r >= floor]
-    ev = events.filter(F.lower(F.col("severity")).isin(ranks))
-    if event_types:
-        ev = ev.filter(F.col("event_type").isin(event_types))
-    rows = ev.orderBy(F.col("ts").desc(), "event_id").limit(max_events + 1).collect()
+    ranks = {s for s, r in SEVERITY_RANK.items() if r >= floor}
+    rows = [e for e in events
+            if (e.get("severity") or "").lower() in ranks
+            and (not event_types or e.get("event_type") in event_types)]
+    rows.sort(key=lambda e: e["event_id"])
+    rows.sort(key=lambda e: e["ts"], reverse=True)
     if len(rows) > max_events:
         logger.warning("dispatch_events truncated to %d events", max_events)
         rows = rows[:max_events]
     for r in rows:
-        d = r.asDict()
+        d = dict(r)
         for h in hooks:
             try:
                 h.handle_event(d)

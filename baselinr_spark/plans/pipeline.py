@@ -10,13 +10,17 @@ One declarative pass per chunk of partitions:
       → write docs/ (dynamic partition overwrite = idempotent)
     read back docs (cheap columnar projection)
       → per-partition metrics (long format) → metrics/
-      → PSI drift vs predecessor cohorts → events/
-      → lineage rows → lineage/
+    read the stored metric rows ONCE on the driver (pyarrow); plain
+    Python over those rows derives
+      → PSI drift vs predecessor cohorts, validation and anomaly
+        events (+ schema events on the first chunk) → events/
+      → per-partition (doc, kept) counts → lineage/, manifest, summary
     commit manifest rows (checkpoint; crash before this = partition redone)
 
 This mirrors the reference lifecycle (profile → write results → enrich →
 drift → events → state update, /root/reference/baselinr/cli.py:275-362 and
-storage/writer.py:120-167) collapsed into Spark jobs, with the incremental
+storage/writer.py:120-167): Spark jobs for the document-scale work and
+the sinks, driver-side Python for the metadata-scale events, with the incremental
 planner's skip/partial semantics (/root/reference/baselinr/incremental/
 planner.py:140-225) decided by plans/planner.py over the
 processed-partition manifest.
@@ -27,6 +31,7 @@ from __future__ import annotations
 import contextlib
 import datetime as dt
 import logging
+import math
 import os
 import time
 import uuid
@@ -37,8 +42,9 @@ from pyspark.sql import functions as F
 from ..config import DEFAULT_CONFIG, RULE_NAMES, FilterConfig
 from ..functions import textfeat
 from ..functions.langid import CLASSES
-from ..operators.drift import psi_pairwise_lag
+from ..operators.drift import PSI_FLOOR, psi_band
 from ..sources import catalog, change_detection, manifest
+from . import events as ev_mod
 from . import planner
 
 _log = logging.getLogger(__name__)
@@ -47,8 +53,8 @@ _log = logging.getLogger(__name__)
 #: (/root/reference/baselinr/config/schema.py:898)
 MAX_PARTITIONS_PER_RUN = 64
 
-#: shuffle width for the metadata-scale post-transform phases (metrics,
-#: drift, events, lineage): their frames are O(|chunk| x metrics) rows
+#: shuffle width for the metrics aggregation, whose output is
+#: O(|chunk| x metrics) rows
 META_SHUFFLE_PARTITIONS = 8
 
 DOCS_COLS = (
@@ -286,70 +292,53 @@ def partition_metrics(docs: DataFrame, run_id: str) -> DataFrame:
     )
 
 
-def drift_events(metrics: DataFrame, run_id: str) -> DataFrame:
-    """PSI between each partition cohort and its predecessor, computed
-    from the stored ppl_bucket:* rows of ``metrics`` (the stored metrics
-    table, or the slice of it the caller needs). Emits the FIXTURES.md §2
-    `events` shape; analogue of DataDriftDetected events (reference
-    events/events.py)."""
-    buckets = (
-        metrics.filter(F.col("metric_name").startswith("ppl_bucket:"))
-        .select(
-            F.col("partition"),
-            # PSI sequences are per-metric family; keying the lag window
-            # by the family DERIVED FROM DATA (not a literal — Catalyst
-            # constant-folds a lit() key right back out of the window
-            # spec) keeps the window partitioned, so adding more bucket
-            # families later parallelizes instead of single-partitioning
-            F.split(F.col("metric_name"), ":")[0].alias("metric"),
-            F.split(F.col("metric_name"), ":")[1].cast("int").alias("bucket"),
-            F.col("metric_value").alias("count"),
-        )
-        # latest metrics per partition survive via overwrite; dedupe anyway
-        .groupBy("partition", "metric", "bucket")
-        .agg(F.max("count").alias("count"))
-    )
-    psi_df = psi_pairwise_lag(buckets, "partition", "bucket", "count",
-                              key_cols=["metric"])
-    return psi_df.select(
-        F.concat(F.lit("evt-"), F.md5(F.concat_ws("|", F.lit(run_id), F.col("cohort")))).alias("event_id"),
-        F.lit("distribution_drift").alias("event_type"),
-        F.col("cohort").alias("partition"),
-        F.lit("perplexity_psi").alias("metric_name"),
-        F.lit(None).cast("double").alias("baseline_value"),
-        F.lit(None).cast("double").alias("current_value"),
-        F.col("psi").alias("score"),
-        F.col("severity"),
-        F.current_timestamp().alias("ts"),
-        F.lit(None).cast("string").alias("metadata_json"),
-    )
+def drift_events(rows: list[dict], run_id: str) -> list[dict]:
+    """PSI between each partition cohort and its predecessor, from the
+    stored ppl_bucket:* metric rows (partition, metric_name,
+    metric_value). A cohort exists only if it has bucket rows; its
+    distribution is each bucket's count over the cohort total. Terms sum
+    in one fixed order, so a score is reproducible to the bit: the
+    cohort's buckets ascending, then the buckets only its predecessor
+    has; probabilities floor at PSI_FLOOR. One FIXTURES.md §2 `events`
+    row per cohort with a predecessor, severity "none" included;
+    analogue of DataDriftDetected events (reference events/events.py)."""
+    cohorts: dict[str, dict[int, float]] = {}
+    for r in rows:
+        name = r["metric_name"]
+        if name.startswith("ppl_bucket:") and r["metric_value"] is not None:
+            # latest metrics per partition survive via overwrite; dedupe
+            # anyway
+            dist = cohorts.setdefault(r["partition"], {})
+            b, v = int(name.split(":")[1]), r["metric_value"]
+            dist[b] = max(dist.get(b, v), v)
+    order = sorted(cohorts)
+    out = []
+    for base_p, cur_p in zip(order, order[1:]):
+        cur, base = _probs(cohorts[cur_p]), _probs(cohorts[base_p])
+        psi = 0.0
+        for b in sorted(cur) + sorted(set(base) - set(cur)):
+            pc = cur.get(b) or PSI_FLOOR
+            pb = base.get(b) or PSI_FLOOR
+            psi += (pc - pb) * math.log(pc / pb)
+        out.append(ev_mod._event(
+            run_id, "distribution_drift", cur_p, "perplexity_psi", None,
+            None, psi, psi_band(psi), None, key=f"{run_id}|{cur_p}",
+        ))
+    return out
 
 
-def _needed_metric_partitions(metrics_dir: str, chunk_strs: list[str]) -> list[str]:
-    """dt partitions the DRIFT pass must scan: the chunk itself plus each
-    chunk cohort's immediate predecessor (PSI lag pairs touch nothing
-    older). Stored cohorts come from a driver-side directory listing —
-    O(partitions), no Spark job — and dt strings are ISO dates, so
-    lexicographic order IS date order. Pruning preserves lag semantics:
-    by construction no stored dt lies strictly between a cohort and its
-    included predecessor, and rows whose cohort is outside the chunk are
-    filtered from the event output anyway. A metrics dir that does not
-    exist holds no predecessors; any other listing error raises, since
-    dropping a predecessor would silently drop its cohort's PSI event."""
-    needed = set(chunk_strs)
-    try:
-        stored = sorted(
-            d.split("=", 1)[1]
-            for d in os.listdir(metrics_dir)
-            if d.startswith("partition_key=")
-        )
-    except FileNotFoundError:
-        return sorted(needed)
-    for c in chunk_strs:
-        preds = [d for d in stored if d < c]
-        if preds:
-            needed.add(preds[-1])
-    return sorted(needed)
+def _probs(counts: dict[int, float]) -> dict[int, float]:
+    total = sum(counts.values())
+    return {b: c / (total if total > 0 else 1.0) for b, c in counts.items()}
+
+
+def _doc_counts(rows: list[dict], parts: list[str]) -> dict[str, tuple[int, int]]:
+    """(doc, kept) count of each of `parts` from its stored count and
+    kept_count metric rows; (0, 0) for a partition without them."""
+    got = {(r["partition"], r["metric_name"]): int(r["metric_value"])
+           for r in rows if r["metric_name"] in ("count", "kept_count")}
+    return {p: (got.get((p, "count"), 0), got.get((p, "kept_count"), 0))
+            for p in parts}
 
 
 #: Spark's default for each conf run_pipeline overrides, restored as an
@@ -613,13 +602,12 @@ def run_pipeline(
             catalog.write_partitioned(docs, docs_dir, "dt")
         t0 = _tick("transform_write", t0)
 
-        # Post-transform phases operate on metadata-scale frames (metric
-        # rows are O(|chunk| x metrics), events O(cohorts)): 32+ shuffle
-        # partitions and AQE's per-stage re-optimization rounds are pure
-        # scheduling overhead there (measured ~11s of fixed cost per
-        # chunk at local[32] regardless of SF — guide §1.2 step 3). Pin
-        # a small shuffle width and plan each tiny query in one pass;
-        # restored before the next chunk's transform.
+        # The metrics aggregation's output is metadata-scale (O(|chunk| x
+        # metrics) rows): 32+ shuffle partitions and AQE's per-stage
+        # re-optimization rounds are pure scheduling overhead there
+        # (measured ~11s of fixed cost per chunk at local[32] regardless
+        # of SF — guide §1.2 step 3). Pin a small shuffle width and plan
+        # it in one pass; the caller's values return after the write.
         meta_conf = {
             "spark.sql.shuffle.partitions": str(META_SHUFFLE_PARTITIONS),
             "spark.sql.adaptive.enabled": "false",
@@ -636,142 +624,126 @@ def run_pipeline(
                 F.col("dt").cast("string").isin(chunk)
             ).select("dt", "keep", "drop_reasons", "lang", "perplexity",
                      F.col("scrubbed_text").isNotNull().alias("__has_text"))
-            mrows = partition_metrics(docs_back, run_id).withColumn(
-                "partition_key", F.col("partition")
-            ).persist()
             # metric rows are tiny (hundreds); single writer task so the
             # commit moves |dts| files, not |dts|·shuffle_partitions
-            mrows.repartition(1).write.mode("overwrite").partitionBy("partition_key").option(
-                "partitionOverwriteMode", "dynamic"
-            ).parquet(metrics_dir)
-            t0 = _tick("metrics", t0)
-
-            # event taxonomy (reference events/events.py:31-349): drift events
-            # for the processed cohorts need all stored metrics; validation +
-            # anomaly events come straight from the cached metric rows; schema
-            # events diff this run's snapshot vs the previous run's.
-            from . import events as ev_mod
-
-            chunk_strs = [str(p) for p in chunk]
-            # drift (PSI lag) needs only the chunk cohorts plus each one's
-            # immediate predecessor — prune the metrics scan to those dt
-            # partitions so the read stays O(chunk), not O(history): a year
-            # of daily cohorts would otherwise be rescanned on every chunk.
-            # anomaly (leave-one-out rowcount control limits) genuinely needs
-            # every cohort's count, but only the metric_name='count' rows —
-            # it gets its OWN scan with that filter pushed to parquet instead
-            # of sharing the (now-pruned) drift frame.
-            # no persist: the pruned frame feeds exactly one plan (the
-            # events write; the hook dispatch re-reads it only when hooks
-            # are configured), and a cache materialization is itself a
-            # full job on this metadata-scale frame
-            drift_metrics = spark.read.parquet(metrics_dir).filter(
-                F.col("partition_key").isin(
-                    _needed_metric_partitions(metrics_dir, chunk_strs)
-                )
-            )
-            ev = drift_events(drift_metrics, run_id).filter(
-                F.col("partition").isin(chunk_strs)
-            )
-            ev = ev.unionByName(
-                ev_mod.validation_events(mrows, run_id)
-            )
-            ev = ev.unionByName(
-                ev_mod.anomaly_events(spark, metrics_dir, run_id).filter(
-                    F.col("partition").isin(chunk_strs)
-                )
-            )
-            if ci == 0:
-                ev_mod.write_schema_snapshot(spark, docs, schema_dir, run_id)
-                ev = ev.unionByName(
-                    ev_mod.schema_change_events(spark, schema_dir, run_id)
-                )
-            ev = ev.withColumn("partition_key", F.col("partition"))
-            ev.repartition(1).write.mode("overwrite").partitionBy("partition_key").option(
-                "partitionOverwriteMode", "dynamic"
-            ).parquet(events_dir)
-            if hooks:
-                # alert on THIS run's event plan, not a read-back of the
-                # events dir: the '__schema__' partition is only overwritten
-                # when a run produces schema events, so a disk read would
-                # re-alert a previous run's (or previous chunk's) stale
-                # schema changes as if they just happened
-                from .hooks import dispatch_events
-
-                dispatch_events(ev, hooks, min_severity=hook_min_severity)
-            t0 = _tick("drift", t0)
-
-            # per-partition (doc, kept) counts come straight from the cached
-            # metrics rows — no extra scan of docs
-            counts: dict[str, tuple[int, int]] = {}
-            for r in mrows.filter(
-                F.col("metric_name").isin("count", "kept_count")
-            ).collect():
-                n, k = counts.get(r["partition"], (0, 0))
-                if r["metric_name"] == "count":
-                    n = int(r["metric_value"])
-                else:
-                    k = int(r["metric_value"])
-                counts[r["partition"]] = (n, k)
-            mrows.unpersist()
-
-            import pandas as pd
-
-            lineage_pdf = pd.DataFrame(
-                [
-                    (
-                        run_id,
-                        p,
-                        os.path.join(input_path, f"dt={p}"),
-                        os.path.join(docs_dir, f"dt={p}"),
-                        counts.get(p, (0, 0))[0],
-                        counts.get(p, (0, 0))[1],
-                    )
-                    for p in chunk
-                ],
-                columns=["run_id", "partition", "input_path", "output_path",
-                         "doc_count", "kept_count"],
-            )
-            lineage = spark.createDataFrame(
-                lineage_pdf,
-                schema="run_id string, partition string, input_path string, "
-                "output_path string, doc_count long, kept_count long",
-            ).withColumn("ts", F.current_timestamp()).withColumn(
+            partition_metrics(docs_back, run_id).withColumn(
                 "partition_key", F.col("partition")
-            )
-            lineage.write.mode("overwrite").partitionBy("partition_key").option(
-                "partitionOverwriteMode", "dynamic"
-            ).parquet(lineage_dir)
-            t0 = _tick("counts_lineage", t0)
+            ).repartition(1).write.mode("overwrite").partitionBy(
+                "partition_key"
+            ).option("partitionOverwriteMode", "dynamic").parquet(metrics_dir)
+        t0 = _tick("metrics", t0)
 
-            if _fail_before_commit_chunk is not None and ci == _fail_before_commit_chunk:
-                raise RuntimeError(f"injected failure before manifest commit of chunk {ci}")
+        # Everything after the metrics write is a function of the stored
+        # metric rows (reference cli.py:275-362: events come from the
+        # profiling results already held). One driver-side read of the
+        # whole metrics dir serves all of it: anomaly limits need every
+        # cohort's count, drift each chunk cohort's predecessor, which
+        # may be any earlier stored dt. A corrupt or unreadable metric
+        # file raises here, before any event is written.
+        import pandas as pd
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+        from pyspark.sql.types import StructType
 
-            now = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
-            # cost-cap downgraded chunks commit as status='sampled' with the
-            # fraction recorded, NOT 'done': the planner skips them only
-            # while the same cap+fraction still applies and promotes them to
-            # a full run once caps are lifted — a 'done' commit would
-            # silently freeze the partition at ~fraction of its docs forever
-            manifest.commit_partitions(
-                spark,
-                output_root,
-                run_id,
-                [
-                    {
-                        "partition": p,
-                        "status": "done" if chunk_frac is None else "sampled",
-                        "doc_count": counts.get(p, (0, 0))[0],
-                        "kept_count": counts.get(p, (0, 0))[1],
-                        "completed_at": now,
-                        "snapshot_id": f"{run_id}:{ci}",
-                        "fingerprint": chunk_fps[p],
-                        "sample_fraction": chunk_frac,
-                    }
-                    for p in chunk
-                ],
-            )
-            _tick("manifest", t0)
+
+        rows = pq.read_table(
+            metrics_dir, columns=["partition", "metric_name", "metric_value"]
+        ).to_pylist()
+        in_chunk = set(chunk)
+        events = [
+            e
+            for build in (drift_events, ev_mod.validation_events,
+                          ev_mod.anomaly_events)
+            for e in build(rows, run_id)
+            if e["partition"] in in_chunk
+        ]
+        if ci == 0:
+            ev_mod.write_schema_snapshot(spark, docs, schema_dir, run_id)
+            events += ev_mod.schema_change_events(schema_dir, run_id)
+        # one UTC instant per chunk, shared by the written rows and the
+        # hook dicts; tz-aware, so Spark stores it as a timestamp
+        ts = dt.datetime.now(dt.timezone.utc)
+        for e in events:
+            e["ts"] = ts
+        # the dicts go in as an Arrow table, never through pandas:
+        # pandas turns None into NaN in a column that also holds floats,
+        # which a session without Arrow would store instead of NULL. An
+        # Arrow table takes the JVM-side path whatever that setting is.
+        ev_schema = StructType.fromDDL(ev_mod.EVENTS_DDL)
+        ev_table = pa.Table.from_pylist(events,
+                                        schema=to_arrow_schema(ev_schema))
+        spark.createDataFrame(ev_table, schema=ev_schema).withColumn(
+            "partition_key", F.col("partition")
+        ).coalesce(1).write.mode("overwrite").partitionBy(
+            "partition_key"
+        ).option("partitionOverwriteMode", "dynamic").parquet(events_dir)
+        if hooks:
+            # alert on THIS run's events, not a read-back of the events
+            # dir: the '__schema__' partition is only overwritten when a
+            # run produces schema events, so a disk read would re-alert a
+            # previous run's (or previous chunk's) stale schema changes
+            from .hooks import dispatch_events
+
+            dispatch_events(events, hooks, min_severity=hook_min_severity)
+        t0 = _tick("drift", t0)
+
+        counts = _doc_counts(rows, chunk)
+        lineage_pdf = pd.DataFrame(
+            [
+                (
+                    run_id,
+                    p,
+                    os.path.join(input_path, f"dt={p}"),
+                    os.path.join(docs_dir, f"dt={p}"),
+                    counts[p][0],
+                    counts[p][1],
+                )
+                for p in chunk
+            ],
+            columns=["run_id", "partition", "input_path", "output_path",
+                     "doc_count", "kept_count"],
+        )
+        lineage = spark.createDataFrame(
+            lineage_pdf,
+            schema="run_id string, partition string, input_path string, "
+            "output_path string, doc_count long, kept_count long",
+        ).withColumn("ts", F.current_timestamp()).withColumn(
+            "partition_key", F.col("partition")
+        )
+        lineage.write.mode("overwrite").partitionBy("partition_key").option(
+            "partitionOverwriteMode", "dynamic"
+        ).parquet(lineage_dir)
+        t0 = _tick("counts_lineage", t0)
+
+        if _fail_before_commit_chunk is not None and ci == _fail_before_commit_chunk:
+            raise RuntimeError(f"injected failure before manifest commit of chunk {ci}")
+
+        now = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
+        # cost-cap downgraded chunks commit as status='sampled' with the
+        # fraction recorded, NOT 'done': the planner skips them only
+        # while the same cap+fraction still applies and promotes them to
+        # a full run once caps are lifted — a 'done' commit would
+        # silently freeze the partition at ~fraction of its docs forever
+        manifest.commit_partitions(
+            spark,
+            output_root,
+            run_id,
+            [
+                {
+                    "partition": p,
+                    "status": "done" if chunk_frac is None else "sampled",
+                    "doc_count": counts[p][0],
+                    "kept_count": counts[p][1],
+                    "completed_at": now,
+                    "snapshot_id": f"{run_id}:{ci}",
+                    "fingerprint": chunk_fps[p],
+                    "sample_fraction": chunk_frac,
+                }
+                for p in chunk
+            ],
+        )
+        _tick("manifest", t0)
         summary["partitions_processed"].extend(chunk)
         summary["doc_count"] += sum(v[0] for v in counts.values())
         summary["kept_count"] += sum(v[1] for v in counts.values())

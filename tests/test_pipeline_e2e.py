@@ -3,6 +3,8 @@ compare every document against the pure-pandas reference labels
 (keep/drop F1 ≥ 0.99 target from BASELINE.json; we assert exact parity
 plus byte-identical scrubbed text)."""
 
+import datetime as dt
+import hashlib
 import json
 import os
 
@@ -190,6 +192,65 @@ def test_event_taxonomy_bad_partition(spark, tmp_path_factory):
     assert (val_bad["current_value"] == 1.0).any()  # 100% fire rate
     assert (val_bad["severity"] == "high").any()
 
+    # every anomaly and validation value, recomputed in pandas from the
+    # docs table
+    docs = spark.read.parquet(os.path.join(out_root, "docs")).toPandas()
+    docs["dt"] = docs["dt"].astype(str)
+    n = docs.groupby("dt").size()
+
+    def evt_id(ev_type, part, metric):
+        key = f"evt-run-1|{ev_type}|{part}|{metric}"
+        return "evt-" + hashlib.md5(key.encode()).hexdigest()
+
+    # anomaly: leave-one-out control limits over the other dts' counts,
+    # |n - mu| > 3 sd (k >= 4, sd > 0); high beyond 6 sd
+    want_anom = {}
+    for p, cnt in n.items():
+        others = n.drop(p).astype(float)
+        mu, sd = others.mean(), others.std(ddof=1)
+        z = abs(cnt - mu) / sd
+        if sd > 0 and z > 3:
+            want_anom[p] = (mu, float(cnt), z, "high" if z > 6 else "medium")
+    got_anom = {r.partition: r for r in anom.itertuples()}
+    assert sorted(got_anom) == sorted(want_anom) == [bad_day]
+    for p, (mu, cnt, z, sev) in want_anom.items():
+        r = got_anom[p]
+        assert r.event_id == evt_id("anomaly_detected", p, "count")
+        assert r.metric_name == "count" and r.severity == sev
+        assert r.baseline_value == pytest.approx(mu, rel=1e-12)
+        assert r.current_value == cnt
+        assert r.score == pytest.approx(z, rel=1e-12)
+        meta = json.loads(r.metadata_json)
+        assert meta == {
+            "detection_method": "control_limits", "anomaly_type": "rowcount",
+            "expected_value": pytest.approx(mu, rel=1e-12), "actual_value": cnt,
+        }
+
+    # validation: one event per (dt, rule) with a non-zero fire rate;
+    # low, medium from 0.2, high from 0.5; failures rounded half-up
+    want_val = {}
+    for p, grp in docs.groupby("dt"):
+        for rule in RULE_NAMES:
+            rate = float(np.mean([rule in list(d) for d in grp["drop_reasons"]]))
+            if rate > 0:
+                sev = "high" if rate >= 0.5 else "medium" if rate >= 0.2 else "low"
+                want_val[(p, f"rule_fire_rate:{rule}")] = (
+                    rule, rate, sev, len(grp), int(rate * len(grp) + 0.5))
+    val = ev[ev["event_type"] == "validation_failed"]
+    got_val = {(r.partition, r.metric_name): r for r in val.itertuples()}
+    assert sorted(got_val) == sorted(want_val)
+    for (p, metric), (rule, rate, sev, total, fails) in want_val.items():
+        r = got_val[(p, metric)]
+        assert r.event_id == evt_id("validation_failed", p, metric)
+        assert r.baseline_value == 0.0 and r.severity == sev
+        assert r.current_value == r.score == pytest.approx(rate, rel=1e-12)
+        meta = json.loads(r.metadata_json)
+        assert meta == {
+            "rule_type": rule, "total_rows": float(total),
+            "total_failures": float(fails),
+            "failure_rate": pytest.approx(rate * 100.0, rel=1e-12),
+        }
+
     # schema change: append a later run's snapshot with an added column
     # and two removed ones, then diff against run 1's snapshot
     from baselinr_spark.plans.events import schema_change_events
@@ -204,17 +265,18 @@ def test_event_taxonomy_bad_partition(spark, tmp_path_factory):
         rows, schema="run_id string, column_name string, data_type string"
     ).withColumn("ts", F.current_timestamp())
     snap.write.mode("append").parquet(schema_dir)
-    sch = schema_change_events(spark, schema_dir, "evt-run-2").toPandas()
+    sch = pd.DataFrame(schema_change_events(schema_dir, "evt-run-2"))
     assert len(sch) > 0 and (sch["event_type"] == "schema_change").all()
     changed = {json.loads(m)["change_type"] for m in sch["metadata_json"]}
     assert "column_added" in changed and "column_removed" in changed
 
 
 def test_alert_hooks_dispatch(spark, warehouse, out_root):
+    from pyspark.sql.types import TimestampType
+
     from baselinr_spark.plans.hooks import (
         LoggingAlertHook, WebhookAlertHook, dispatch_events,
     )
-    from baselinr_spark.plans.pipeline import run_pipeline
 
     log_hook = LoggingAlertHook()
     sent = []
@@ -225,19 +287,110 @@ def test_alert_hooks_dispatch(spark, warehouse, out_root):
     run_pipeline(spark, warehouse, out_root, run_id="hook-run",
                  hooks=[log_hook, web_hook], hook_min_severity="medium")
 
+    # the hooks saw exactly the medium-and-above rows of the written table
+    ev = spark.read.parquet(os.path.join(out_root, "events"))
+    written = ev.filter(F.col("severity").isin("medium", "high")).select(
+        "event_id", F.unix_micros("ts").alias("ts_us")).collect()
     assert log_hook.seen, "expected at least one medium+ event"
-    assert all(e["severity"] in ("medium", "high") for e in log_hook.seen)
+    assert sorted(e["event_id"] for e in log_hook.seen) == sorted(
+        r["event_id"] for r in written)
     assert len(sent) == len(log_hook.seen)
     assert all("example.invalid" in url for url, _ in sent)
 
+    # one driver-side UTC instant per chunk: the table stores it as a
+    # (UTC-adjusted) timestamp, not timestamp_ntz, holding the instant
+    # the hooks saw
+    assert ev.schema["ts"].dataType == TimestampType()
+    epoch = dt.datetime(1970, 1, 1, tzinfo=dt.timezone.utc)
+    seen_us = {(e["ts"] - epoch) // dt.timedelta(microseconds=1)
+               for e in log_hook.seen}
+    assert len(seen_us) == 1
+    assert {r["ts_us"] for r in written} == seen_us
+
     # min_severity filter: 'low' dispatches a superset
-    import os
-    ev = spark.read.parquet(os.path.join(out_root, "events"))
+    rows = [r.asDict() for r in ev.collect()]
     low_hook = LoggingAlertHook()
-    n_low = dispatch_events(ev, [low_hook], min_severity="low")
+    n_low = dispatch_events(rows, [low_hook], min_severity="low")
     assert n_low >= len(log_hook.seen)
 
     # unconfigured webhook fails loudly
-    import pytest
     with pytest.raises(NotImplementedError):
-        dispatch_events(ev, [WebhookAlertHook("u")], min_severity="low")
+        dispatch_events(rows, [WebhookAlertHook("u")], min_severity="low")
+
+
+def test_multi_chunk_drift_matches_single_chunk(spark, warehouse,
+                                                 pipeline_result, tmp_path):
+    """Chunked runs (checkpoint_every=3) must find each chunk's first
+    cohort's predecessor in the previous chunk's stored metrics: the
+    drift events equal a single-chunk run's over the same warehouse."""
+    _, single_root, _, _ = pipeline_result
+    out = str(tmp_path / "chunked")
+    summary = run_pipeline(spark, warehouse, out, run_id="run-chunked",
+                           checkpoint_every=3)
+    assert len(summary["partitions_processed"]) > 3
+
+    def drift(root):
+        ev = spark.read.parquet(os.path.join(root, "events"))
+        return sorted(
+            (r["partition"], r["score"], r["severity"])
+            for r in ev.filter(F.col("event_type") == "distribution_drift")
+            .collect()
+        )
+
+    want = drift(single_root)
+    assert len(want) == len(summary["partitions_processed"]) - 1
+    assert drift(out) == want
+
+
+def test_corrupt_metrics_file_raises(spark, warehouse, tmp_path):
+    """An unreadable metric file must fail the run before any event is
+    written, never read as "no events"."""
+    import pyarrow as pa
+
+    out = str(tmp_path / "out")
+    bad = os.path.join(out, "metrics", "partition_key=2000-01-01")
+    os.makedirs(bad)
+    with open(os.path.join(bad, "part-00000.parquet"), "wb") as f:
+        f.write(b"not a parquet file")
+    with pytest.raises(pa.ArrowInvalid):
+        run_pipeline(spark, warehouse, out, run_id="corrupt", max_partitions=1)
+    assert not os.path.exists(os.path.join(out, "events"))
+    assert not os.path.exists(os.path.join(out, "processed_partitions"))
+
+
+def test_event_nulls_without_arrow(spark, warehouse, tmp_path):
+    """A session without Arrow (plain spark-submit) writes NULL, never
+    NaN, where an event type has no value, even beside other types'
+    doubles in the same column: drift rows carry no baseline/current
+    value and schema_change rows no score."""
+    from baselinr_spark.plans.events import write_schema_snapshot
+
+    out = str(tmp_path / "out")
+    # an earlier run's snapshot with another schema, so this run's first
+    # chunk emits schema_change events
+    write_schema_snapshot(spark, spark.createDataFrame([(1,)], "legacy long"),
+                          os.path.join(out, "schema"), "run-0")
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        run_pipeline(spark, warehouse, out, run_id="no-arrow", max_partitions=2)
+    finally:
+        spark.conf.set(key, old)
+
+    ev = spark.read.parquet(os.path.join(out, "events"))
+    assert ev.filter("isnan(baseline_value) or isnan(current_value)"
+                     " or isnan(score)").count() == 0
+    rows = ev.collect()
+    by_type = {}
+    for r in rows:
+        by_type.setdefault(r["event_type"], []).append(r)
+    assert {"distribution_drift", "schema_change",
+            "validation_failed"} <= set(by_type)
+    for r in by_type["distribution_drift"]:
+        assert r["baseline_value"] is None and r["current_value"] is None
+        assert r["score"] is not None
+    for r in by_type["schema_change"]:
+        assert r["score"] is None
+    for r in by_type["validation_failed"]:
+        assert r["baseline_value"] == 0.0

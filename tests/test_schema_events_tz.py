@@ -36,7 +36,7 @@ def new_york_tz(monkeypatch):
     time.tzset()
 
 
-def test_baseline_is_latest_utc_across_dst_fall_back(spark, tmp_path, new_york_tz):
+def test_baseline_is_latest_utc_across_dst_fall_back(tmp_path, new_york_tz):
     # 2026-11-01 06:00Z is the US fall-back: r1 at 05:30Z is 01:30 EDT,
     # r2 at 06:10Z is 01:10 EST — later in UTC, earlier in local wall time
     schema_dir = str(tmp_path / "schema")
@@ -47,7 +47,7 @@ def test_baseline_is_latest_utc_across_dst_fall_back(spark, tmp_path, new_york_t
               dt.datetime(2026, 11, 1, 6, 10, tzinfo=UTC))
     _snapshot(schema_dir, "r3", [("x", "string"), ("y", "string")],
               dt.datetime(2026, 11, 1, 7, 0, tzinfo=UTC))
-    rows = schema_change_events(spark, schema_dir, "r3").collect()
+    rows = schema_change_events(schema_dir, "r3")
     assert len(rows) == 1
     meta = json.loads(rows[0]["metadata_json"])
     assert rows[0]["metric_name"] == "y"
@@ -55,12 +55,12 @@ def test_baseline_is_latest_utc_across_dst_fall_back(spark, tmp_path, new_york_t
     assert meta["change_type"] == "type_changed"
 
 
-def test_missing_schema_dir_yields_no_events(spark, tmp_path):
-    rows = schema_change_events(spark, str(tmp_path / "absent"), "r1").collect()
+def test_missing_schema_dir_yields_no_events(tmp_path):
+    rows = schema_change_events(str(tmp_path / "absent"), "r1")
     assert rows == []
 
 
-def test_corrupt_snapshot_raises(spark, tmp_path):
+def test_corrupt_snapshot_raises(tmp_path):
     schema_dir = str(tmp_path / "schema")
     os.makedirs(schema_dir)
     _snapshot(schema_dir, "r1", [("x", "string")],
@@ -68,4 +68,4 @@ def test_corrupt_snapshot_raises(spark, tmp_path):
     with open(os.path.join(schema_dir, "part-r2.parquet"), "wb") as f:
         f.write(b"not a parquet file")
     with pytest.raises(pa.ArrowInvalid):
-        schema_change_events(spark, schema_dir, "r2")
+        schema_change_events(schema_dir, "r2")
