@@ -7,9 +7,13 @@ One declarative pass per chunk of partitions:
       → ONE fused scoring UDF: langid, perplexity, word/line features,
         scrub (broadcast models, Arrow batches)
       → rule booleans → keep/drop_reasons; scrubbed_text coalesced JVM-side
+      → clear the chunk's dts from docs/, metrics/ and events/ (a dt
+        whose input became empty keeps no stale outputs)
       → write docs/ (dynamic partition overwrite = idempotent)
     read back docs (cheap columnar projection)
-      → per-partition metrics (long format) → metrics/
+      → two collected aggregations (per-dt scalars, percentiles and PSI
+        bucket counts; histogram bin counts), shaped on the driver into
+        long-format rows → metrics/
     read the stored metric rows ONCE on the driver (pyarrow); plain
     Python over those rows derives
       → PSI drift vs predecessor cohorts, validation and anomaly
@@ -17,10 +21,14 @@ One declarative pass per chunk of partitions:
       → per-partition (doc, kept) counts → lineage/, manifest, summary
     commit manifest rows (checkpoint; crash before this = partition redone)
 
+Every metadata table (metrics, events, lineage, manifest) enters Spark
+from driver-side rows through one function, catalog.rows_frame, and the
+three partitioned ones leave through one writer, _write_by_partition.
+
 This mirrors the reference lifecycle (profile → write results → enrich →
 drift → events → state update, /root/reference/baselinr/cli.py:275-362 and
 storage/writer.py:120-167): Spark jobs for the document-scale work and
-the sinks, driver-side Python for the metadata-scale events, with the incremental
+the sinks, driver-side Python for the metadata-scale rows, with the incremental
 planner's skip/partial semantics (/root/reference/baselinr/incremental/
 planner.py:140-225) decided by plans/planner.py over the
 processed-partition manifest.
@@ -30,9 +38,11 @@ from __future__ import annotations
 
 import contextlib
 import datetime as dt
+import json
 import logging
 import math
 import os
+import shutil
 import time
 import uuid
 
@@ -60,6 +70,18 @@ META_SHUFFLE_PARTITIONS = 8
 DOCS_COLS = (
     "url", "warc_ts", "keep", "drop_reasons", "lang", "lang_conf",
     "perplexity", "scrubbed_text", "run_id",
+)
+
+#: schema of the metrics table
+METRICS_DDL = (
+    "run_id string, partition string, column_name string, metric_name string,"
+    " metric_value double, metric_json string, profiled_at timestamp"
+)
+
+#: schema of the lineage table
+LINEAGE_DDL = (
+    "run_id string, partition string, input_path string, output_path string,"
+    " doc_count long, kept_count long, ts timestamp"
 )
 
 def psi_bucket_expr():
@@ -148,148 +170,100 @@ def transform_pages(
     return df.select(*DOCS_COLS, *rule_cols, "dt")
 
 
-def partition_metrics(docs: DataFrame, run_id: str) -> DataFrame:
-    """Long-format per-partition metrics (FIXTURES.md §2 `metrics` shape):
-    (run_id, partition, column_name, metric_name, metric_value,
-    metric_json, profiled_at).
+def partition_metrics(docs: DataFrame, run_id: str) -> list[dict]:
+    """Long-format per-partition metric rows of the docs read-back
+    (FIXTURES.md §2 `metrics` shape, METRICS_DDL).
 
-    TWO aggregation passes over the (narrow) read-back of docs_out
-    instead of the previous three: pass A computes every scalar, the
-    four perplexity percentiles from ONE shared t-digest sketch (an
-    array-quantile call builds the identical deterministic sketch a
-    per-quantile call would, so the estimates are unchanged), the fixed
-    PSI bucket counts as conditional aggregates (a row per bucket is
-    emitted only when its count > 0 — exactly the rows the old
-    groupBy(bucket) produced), and the per-partition perplexity min/max
-    that pass B's equi-width histogram needs — so the histogram skips
-    its own min/max scan and broadcast-joins pass A's."""
-    part = F.col("dt").cast("string")
-
+    Spark runs two aggregations over the narrow docs projection and
+    collects their few rows per partition; the driver shapes them:
+    - pass A, one groupBy(dt): every scalar, the four perplexity
+      percentiles from ONE shared percentile_approx sketch (the same
+      deterministic sketch a per-quantile call builds), the perplexity
+      min/max and the fixed PSI bucket counts;
+    - pass B: the equi-width perplexity histogram's count per
+      (partition, bin), each partition's min and width passed in from
+      pass A as literal maps (reference semantics: 10 bins over [min,
+      max], bin i = [min+i·w, min+(i+1)·w), the last closed).
+    Each partition gets every scalar, rule_fire_rate:* and lang_frac:*
+    row and four percentile rows, NULL where there is no value; a
+    ppl_bucket:b row only where its count is > 0; and one
+    perplexity_histogram row (metric_json) only where some perplexity is
+    non-NULL and max > min."""
+    p_col = F.col("dt").cast("string")
     has_text = (
         F.col("__has_text") if "__has_text" in docs.columns
         else F.col("scrubbed_text").isNotNull()
     )
-    pq_names = ("p25", "p50", "p75", "p95")
-    scalar_exprs = [
-        F.count(F.lit(1)).cast("double").alias("count"),
-        F.sum(F.col("keep").cast("long")).cast("double").alias("kept_count"),
-        F.avg(F.col("keep").cast("double")).alias("keep_rate"),
-        F.sum((~has_text).cast("long")).cast("double").alias("null_count"),
-        F.avg((~has_text).cast("double")).alias("null_ratio"),
-        F.avg(F.col("perplexity")).alias("perplexity_mean"),
-    ]
+    scalars = {
+        "count": F.count(F.lit(1)),
+        "kept_count": F.sum(F.col("keep").cast("long")),
+        "keep_rate": F.avg(F.col("keep").cast("double")),
+        "null_count": F.sum((~has_text).cast("long")),
+        "null_ratio": F.avg((~has_text).cast("double")),
+        "perplexity_mean": F.avg(F.col("perplexity")),
+    }
     for r in RULE_NAMES:
-        scalar_exprs.append(
-            F.avg(F.array_contains("drop_reasons", r).cast("double")).alias(
-                f"rule_fire_rate:{r}"
-            )
-        )
+        scalars[f"rule_fire_rate:{r}"] = F.avg(
+            F.array_contains("drop_reasons", r).cast("double"))
     for lang in CLASSES:
-        scalar_exprs.append(
-            F.avg((F.col("lang") == lang).cast("double")).alias(f"lang_frac:{lang}")
-        )
-    scalar_names = [
-        "count", "kept_count", "keep_rate", "null_count", "null_ratio",
-        "perplexity_mean",
-    ] + [f"rule_fire_rate:{r}" for r in RULE_NAMES] + [
-        f"lang_frac:{lang}" for lang in CLASSES
-    ]
-    extra_exprs = [
-        F.percentile_approx(
-            "perplexity", [0.25, 0.5, 0.75, 0.95]
-        ).alias("__pq"),
-        F.min(F.col("perplexity").cast("double")).alias("__hmin"),
-        F.max(F.col("perplexity").cast("double")).alias("__hmax"),
-    ]
-    bucket = psi_bucket_expr()
-    psi_exprs = [
-        F.count(F.when(bucket == b, F.lit(1))).alias(f"__b{b}")
-        for b in range(10)
-    ]
-
-    agg = docs.groupBy(part.alias("partition")).agg(
-        *scalar_exprs, *extra_exprs, *psi_exprs
-    )
-
-    def _scalar_struct(name, col):
-        return F.struct(
-            F.lit("document").alias("column_name"),
-            F.lit(name).alias("metric_name"),
-            col.cast("double").alias("metric_value"),
-            F.lit(None).cast("string").alias("metric_json"),
-        )
-
-    structs = [_scalar_struct(n, F.col(n)) for n in scalar_names]
-    structs += [
-        _scalar_struct(f"perplexity_{n}", F.col("__pq")[i])
-        for i, n in enumerate(pq_names)
-    ]
-    # fixed-bucket perplexity distribution for PSI between cohorts: a
-    # zero count means the bucket had no rows, i.e. the old per-bucket
-    # groupBy emitted no row — filtered out below
-    structs += [
-        F.when(
-            F.col(f"__b{b}") > 0,
-            F.struct(
-                F.lit("perplexity").alias("column_name"),
-                F.lit(f"ppl_bucket:{b}").alias("metric_name"),
-                F.col(f"__b{b}").cast("double").alias("metric_value"),
-                F.lit(None).cast("string").alias("metric_json"),
-            ),
-        )
-        for b in range(10)
-    ]
-    long_rows = agg.select(
-        "partition",
-        F.explode(F.array_compact(F.array(*structs))).alias("kv"),
-    ).select("partition", "kv.*")
-
-    # per-partition equi-width perplexity histogram (reference semantics:
-    # bins over [min,max], bin i = [min+i*w, min+(i+1)*w), last closed,
-    # empty when max == min) reusing pass A's min/max
-    mm = F.broadcast(agg.select("partition", "__hmin", "__hmax"))
+        scalars[f"lang_frac:{lang}"] = F.avg(
+            (F.col("lang") == lang).cast("double"))
+    pq_names = ("p25", "p50", "p75", "p95")
     x = F.col("perplexity").cast("double")
-    w = (F.col("__hmax") - F.col("__hmin")) / F.lit(10.0)
-    bin_col = F.least(
-        F.floor((x - F.col("__hmin")) / w).cast("int"), F.lit(9)
-    )
-    hist = (
-        docs.select(part.alias("partition"), "perplexity")
-        .join(mm, "partition")
-        .filter(x.isNotNull() & (F.col("__hmax") > F.col("__hmin")))
-        .withColumn("bin", bin_col)
-        .groupBy("partition", "bin", "__hmin", "__hmax")
-        .agg(F.count(F.lit(1)).alias("count"))
-        .select(
-            "partition",
-            "bin",
-            (F.col("__hmin") + F.col("bin") * w).alias("bin_start"),
-            (F.col("__hmin") + (F.col("bin") + 1) * w).alias("bin_end"),
-            "count",
-        )
-    )
-    hist_json = hist.groupBy("partition").agg(
-        F.to_json(
-            F.array_sort(F.collect_list(F.struct("bin", "bin_start", "bin_end", "count")))
-        ).alias("metric_json")
-    ).select(
-        "partition",
-        F.lit("perplexity").alias("column_name"),
-        F.lit("perplexity_histogram").alias("metric_name"),
-        F.lit(None).cast("double").alias("metric_value"),
-        "metric_json",
-    )
+    bucket = psi_bucket_expr()
+    agg = docs.groupBy(p_col.alias("partition")).agg(
+        *[e.alias(n) for n, e in scalars.items()],
+        F.percentile_approx("perplexity", [0.25, 0.5, 0.75, 0.95]).alias("__pq"),
+        F.min(x).alias("__min"),
+        F.max(x).alias("__max"),
+        *[F.count(F.when(bucket == b, F.lit(1))).alias(f"__b{b}")
+          for b in range(10)],
+    ).collect()
 
-    out = long_rows.unionByName(hist_json)
-    return out.select(
-        F.lit(run_id).alias("run_id"),
-        "partition",
-        "column_name",
-        "metric_name",
-        "metric_value",
-        "metric_json",
-        F.current_timestamp().alias("profiled_at"),
-    )
+    # (min, width) of each partition with a histogram
+    ranges = {r["partition"]: (r["__min"], (r["__max"] - r["__min"]) / 10.0)
+              for r in agg if r["__max"] is not None and r["__max"] > r["__min"]}
+    hist: dict[str, dict[int, int]] = {}
+    if ranges:
+        def by_part(i):
+            return F.create_map(*[F.lit(v) for p, mw in ranges.items()
+                                  for v in (p, mw[i])])[p_col]
+
+        lo, w = by_part(0), by_part(1)
+        for r in (
+            docs.filter(p_col.isin(list(ranges)) & x.isNotNull())
+            .groupBy(p_col.alias("partition"),
+                     F.least(F.floor((x - lo) / w).cast("int"),
+                             F.lit(9)).alias("bin"))
+            .count().collect()
+        ):
+            hist.setdefault(r["partition"], {})[r["bin"]] = r["count"]
+
+    profiled_at = dt.datetime.now(dt.timezone.utc)
+    out = []
+
+    def emit(p, column, name, value, js=None):
+        out.append({"run_id": run_id, "partition": p, "column_name": column,
+                    "metric_name": name, "metric_value": value,
+                    "metric_json": js, "profiled_at": profiled_at})
+
+    for r in agg:
+        p = r["partition"]
+        for n in scalars:
+            emit(p, "document", n, r[n])
+        for n, v in zip(pq_names, r["__pq"] or [None] * len(pq_names)):
+            emit(p, "document", f"perplexity_{n}", v)
+        # fixed-bucket perplexity distribution for PSI between cohorts
+        for b in range(10):
+            if r[f"__b{b}"] > 0:
+                emit(p, "perplexity", f"ppl_bucket:{b}", r[f"__b{b}"])
+    for p, bins in sorted(hist.items()):
+        m, w = ranges[p]
+        emit(p, "perplexity", "perplexity_histogram", None, json.dumps(
+            [{"bin": b, "bin_start": m + b * w, "bin_end": m + (b + 1) * w,
+              "count": c} for b, c in sorted(bins.items())],
+            separators=(",", ":")))
+    return out
 
 
 def drift_events(rows: list[dict], run_id: str) -> list[dict]:
@@ -339,6 +313,21 @@ def _doc_counts(rows: list[dict], parts: list[str]) -> dict[str, tuple[int, int]
            for r in rows if r["metric_name"] in ("count", "kept_count")}
     return {p: (got.get((p, "count"), 0), got.get((p, "kept_count"), 0))
             for p in parts}
+
+
+def _write_by_partition(df: DataFrame, path: str) -> None:
+    """Write a metadata frame under `path`, one partition_key=<partition>
+    dir per partition, replacing only the partitions it holds (dynamic
+    overwrite). One writer task: the rows are metadata-scale, so the
+    commit moves one file per partition."""
+    (
+        df.withColumn("partition_key", F.col("partition"))
+        .coalesce(1)
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("partition_key")
+        .parquet(path)
+    )
 
 
 #: Spark's default for each conf run_pipeline overrides, restored as an
@@ -475,7 +464,6 @@ def run_pipeline(
     scheduling=None,
     cost=None,
     skew_mode: str = "auto",
-    _fail_before_commit_chunk: int | None = None,
 ) -> dict:
     """Run the filter over the partitions `planner.plan_partitions`
     selects (action run or sample), at most `max_partitions` of them.
@@ -484,9 +472,7 @@ def run_pipeline(
     `reprocess_changed` additionally re-runs done partitions whose input
     fingerprint changed since their manifest commit (upstream backfill —
     reference incremental/change_detection.py semantics); `scheduling`
-    and `cost` are the planner's freshness interval and cost caps;
-    `_fail_before_commit_chunk` is a test hook that simulates a crash
-    after data writes but before the manifest commit of chunk i."""
+    and `cost` are the planner's freshness interval and cost caps."""
     run_id = run_id or f"run-{uuid.uuid4().hex[:12]}"
     all_parts = catalog.list_partitions(input_path)
     # decision cascade (freshness interval → snapshot match → cost caps →
@@ -599,6 +585,14 @@ def run_pipeline(
             if chunk_skew != "split":
                 pages = pages.hint("rebalance", "dt")
             docs = transform_pages(spark, pages, cfg, run_id)
+            # dynamic overwrite replaces only the dts the docs hold, so a
+            # dt whose input became empty would keep its old outputs:
+            # clear the chunk's own dts, which this chunk rewrites
+            for d in chunk:
+                for sub in (os.path.join(docs_dir, f"dt={d}"),
+                            os.path.join(metrics_dir, f"partition_key={d}"),
+                            os.path.join(events_dir, f"partition_key={d}")):
+                    shutil.rmtree(sub, ignore_errors=True)
             catalog.write_partitioned(docs, docs_dir, "dt")
         t0 = _tick("transform_write", t0)
 
@@ -607,7 +601,7 @@ def run_pipeline(
         # re-optimization rounds are pure scheduling overhead there
         # (measured ~11s of fixed cost per chunk at local[32] regardless
         # of SF — guide §1.2 step 3). Pin a small shuffle width and plan
-        # it in one pass; the caller's values return after the write.
+        # it in one pass; the caller's values return after it.
         meta_conf = {
             "spark.sql.shuffle.partitions": str(META_SHUFFLE_PARTITIONS),
             "spark.sql.adaptive.enabled": "false",
@@ -624,13 +618,9 @@ def run_pipeline(
                 F.col("dt").cast("string").isin(chunk)
             ).select("dt", "keep", "drop_reasons", "lang", "perplexity",
                      F.col("scrubbed_text").isNotNull().alias("__has_text"))
-            # metric rows are tiny (hundreds); single writer task so the
-            # commit moves |dts| files, not |dts|·shuffle_partitions
-            partition_metrics(docs_back, run_id).withColumn(
-                "partition_key", F.col("partition")
-            ).repartition(1).write.mode("overwrite").partitionBy(
-                "partition_key"
-            ).option("partitionOverwriteMode", "dynamic").parquet(metrics_dir)
+            metric_rows = partition_metrics(docs_back, run_id)
+        _write_by_partition(
+            catalog.rows_frame(spark, metric_rows, METRICS_DDL), metrics_dir)
         t0 = _tick("metrics", t0)
 
         # Everything after the metrics write is a function of the stored
@@ -640,12 +630,7 @@ def run_pipeline(
         # cohort's count, drift each chunk cohort's predecessor, which
         # may be any earlier stored dt. A corrupt or unreadable metric
         # file raises here, before any event is written.
-        import pandas as pd
-        import pyarrow as pa
         import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import to_arrow_schema
-        from pyspark.sql.types import StructType
-
 
         rows = pq.read_table(
             metrics_dir, columns=["partition", "metric_name", "metric_value"]
@@ -661,23 +646,13 @@ def run_pipeline(
         if ci == 0:
             ev_mod.write_schema_snapshot(spark, docs, schema_dir, run_id)
             events += ev_mod.schema_change_events(schema_dir, run_id)
-        # one UTC instant per chunk, shared by the written rows and the
-        # hook dicts; tz-aware, so Spark stores it as a timestamp
+        # one UTC instant per chunk, shared by the events, the hook dicts
+        # and the lineage rows
         ts = dt.datetime.now(dt.timezone.utc)
         for e in events:
             e["ts"] = ts
-        # the dicts go in as an Arrow table, never through pandas:
-        # pandas turns None into NaN in a column that also holds floats,
-        # which a session without Arrow would store instead of NULL. An
-        # Arrow table takes the JVM-side path whatever that setting is.
-        ev_schema = StructType.fromDDL(ev_mod.EVENTS_DDL)
-        ev_table = pa.Table.from_pylist(events,
-                                        schema=to_arrow_schema(ev_schema))
-        spark.createDataFrame(ev_table, schema=ev_schema).withColumn(
-            "partition_key", F.col("partition")
-        ).coalesce(1).write.mode("overwrite").partitionBy(
-            "partition_key"
-        ).option("partitionOverwriteMode", "dynamic").parquet(events_dir)
+        _write_by_partition(
+            catalog.rows_frame(spark, events, ev_mod.EVENTS_DDL), events_dir)
         if hooks:
             # alert on THIS run's events, not a read-back of the events
             # dir: the '__schema__' partition is only overwritten when a
@@ -689,37 +664,18 @@ def run_pipeline(
         t0 = _tick("drift", t0)
 
         counts = _doc_counts(rows, chunk)
-        lineage_pdf = pd.DataFrame(
-            [
-                (
-                    run_id,
-                    p,
-                    os.path.join(input_path, f"dt={p}"),
-                    os.path.join(docs_dir, f"dt={p}"),
-                    counts[p][0],
-                    counts[p][1],
-                )
-                for p in chunk
-            ],
-            columns=["run_id", "partition", "input_path", "output_path",
-                     "doc_count", "kept_count"],
-        )
-        lineage = spark.createDataFrame(
-            lineage_pdf,
-            schema="run_id string, partition string, input_path string, "
-            "output_path string, doc_count long, kept_count long",
-        ).withColumn("ts", F.current_timestamp()).withColumn(
-            "partition_key", F.col("partition")
-        )
-        lineage.write.mode("overwrite").partitionBy("partition_key").option(
-            "partitionOverwriteMode", "dynamic"
-        ).parquet(lineage_dir)
+        lineage = [
+            {"run_id": run_id, "partition": p,
+             "input_path": os.path.join(input_path, f"dt={p}"),
+             "output_path": os.path.join(docs_dir, f"dt={p}"),
+             "doc_count": counts[p][0], "kept_count": counts[p][1], "ts": ts}
+            for p in chunk
+        ]
+        _write_by_partition(
+            catalog.rows_frame(spark, lineage, LINEAGE_DDL), lineage_dir)
         t0 = _tick("counts_lineage", t0)
 
-        if _fail_before_commit_chunk is not None and ci == _fail_before_commit_chunk:
-            raise RuntimeError(f"injected failure before manifest commit of chunk {ci}")
-
-        now = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
+        now = dt.datetime.now(dt.timezone.utc)
         # cost-cap downgraded chunks commit as status='sampled' with the
         # fraction recorded, NOT 'done': the planner skips them only
         # while the same cap+fraction still applies and promotes them to

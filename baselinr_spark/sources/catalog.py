@@ -57,6 +57,23 @@ def write_partitioned(df: DataFrame, path: str, partition_col: str = "dt") -> No
     )
 
 
+def rows_frame(spark: SparkSession, rows: list[dict], ddl: str) -> DataFrame:
+    """Driver-side rows (dicts keyed by column name; a missing key is
+    NULL) as a frame of schema `ddl`, through a typed Arrow table: Spark
+    takes its JVM-side path whatever the session's Arrow setting, and
+    NULL stays NULL beside doubles (a pandas frame would hold NaN there,
+    which a session without Arrow stores). Timestamps must be UTC,
+    tz-aware or naive: pyarrow keeps a datetime's wall clock and drops
+    its offset."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    schema = StructType.fromDDL(ddl)
+    table = pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema=schema)
+
+
 #: common partition-column name patterns, in reference order
 #: (/root/reference/baselinr/profiling/query_builder.py:252-262)
 PARTITION_NAME_PATTERNS = (
@@ -152,19 +169,13 @@ def collect_table_metadata(
                     if mtime is not None else None)
         days = ((now - last_mod).total_seconds() / 86400.0
                 if last_mod is not None else None)
-        rows.append((name, nrows, nbytes, last_mod, days,
-                     bool(parts), pkey))
-
-    import pandas as pd
-
-    pdf = pd.DataFrame(
-        rows,
-        columns=["table", "row_count", "size_bytes", "last_modified_time",
-                 "days_since_modified", "has_partitions", "partition_key"],
-    )
-    return spark.createDataFrame(
-        pdf,
-        schema="table string, row_count long, size_bytes long, "
-               "last_modified_time timestamp, days_since_modified double, "
-               "has_partitions boolean, partition_key string",
+        rows.append({"table": name, "row_count": nrows, "size_bytes": nbytes,
+                     "last_modified_time": last_mod,
+                     "days_since_modified": days,
+                     "has_partitions": bool(parts), "partition_key": pkey})
+    return rows_frame(
+        spark, rows,
+        "table string, row_count long, size_bytes long, "
+        "last_modified_time timestamp, days_since_modified double, "
+        "has_partitions boolean, partition_key string",
     )

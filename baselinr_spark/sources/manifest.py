@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from . import catalog
+
 MANIFEST_DDL = (
     "run_id string, partition string, status string, doc_count long, "
     "kept_count long, completed_at timestamp, snapshot_id string, "
@@ -68,32 +70,12 @@ def commit_partitions(
     """Append manifest rows (one per completed partition). Called only
     *after* the partition's data + metrics writes succeeded, so a crash
     before this point leaves the partition un-manifested → re-done on
-    resume (idempotent thanks to dynamic partition overwrite)."""
+    resume (idempotent thanks to dynamic partition overwrite). Each row
+    names `partition` and `completed_at` (a UTC instant); `status`
+    defaults to 'done', and a missing field is NULL."""
     if not rows:
         return
-    import pandas as pd
-
-    # pandas → Arrow path: a list-of-tuples createDataFrame parallelizes
-    # over defaultParallelism partitions and pays a Python-worker
-    # round-trip per task (~4s at local[32] for a 10-row commit)
-    pdf = pd.DataFrame(
-        [
-            (
-                run_id,
-                r["partition"],
-                r.get("status", "done"),
-                r.get("doc_count"),
-                r.get("kept_count"),
-                r["completed_at"],
-                r.get("snapshot_id"),
-                r.get("fingerprint"),
-                r.get("sample_fraction"),
-            )
-            for r in rows
-        ],
-        columns=["run_id", "partition", "status", "doc_count",
-                 "kept_count", "completed_at", "snapshot_id", "fingerprint",
-                 "sample_fraction"],
-    )
-    df = spark.createDataFrame(pdf, schema=MANIFEST_DDL)
+    df = catalog.rows_frame(
+        spark, [{"status": "done", **r, "run_id": run_id} for r in rows],
+        MANIFEST_DDL)
     df.coalesce(1).write.mode("append").parquet(manifest_path(output_root))

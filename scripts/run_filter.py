@@ -77,7 +77,6 @@ def main() -> int:
     # required session settings regardless of how the session was built
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
     import os
 

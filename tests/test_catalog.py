@@ -68,3 +68,32 @@ def test_write_partitioned_keeps_session_overwrite_mode(spark, tmp_path):
         spark.conf.set(key, prior)
     got = sorted((r["v"], r["dt"]) for r in spark.read.parquet(path).collect())
     assert got == [(1, "a"), (3, "b")]
+
+
+def test_manifest_instants_in_non_utc_session(spark, tmp_path):
+    """completed_at holds the committed instant whatever the session's
+    time zone: a naive-UTC and a tz-aware UTC value both read back as
+    that instant under America/New_York."""
+    import datetime as dt
+
+    from pyspark.sql import functions as F
+
+    from baselinr_spark.sources import manifest
+
+    now = dt.datetime.now(dt.timezone.utc).replace(microsecond=0)
+    key = "spark.sql.session.timeZone"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "America/New_York")
+    try:
+        for part, ts in (("2025-06-01", now.replace(tzinfo=None)),
+                         ("2025-06-02", now)):
+            manifest.commit_partitions(spark, str(tmp_path), "run-tz", [
+                {"partition": part, "completed_at": ts}])
+        got = manifest.read_manifest(spark, str(tmp_path)).select(
+            "partition", F.unix_micros("completed_at").alias("us")).collect()
+    finally:
+        spark.conf.set(key, old)
+    want_us = int(now.timestamp()) * 1_000_000
+    assert sorted(r["partition"] for r in got) == ["2025-06-01", "2025-06-02"]
+    for r in got:
+        assert abs(r["us"] - want_us) <= 1_000_000, r

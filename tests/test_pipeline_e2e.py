@@ -83,6 +83,99 @@ def test_metrics_table(pipeline_result, spark):
     for r in RULE_NAMES:
         assert (pdf.metric_name == f"rule_fire_rate:{r}").any()
 
+    # every metric row, recomputed in pandas from the docs table
+    got = {(r.partition, r.metric_name): (r.column_name, r.metric_value,
+                                          r.metric_json)
+           for r in pdf.itertuples()}
+    assert len(got) == len(pdf)
+    want = _expected_metrics(docs)
+    assert sorted(got) == sorted(want)
+    for key, (col, value, js) in want.items():
+        g_col, g_value, g_js = got[key]
+        assert g_col == col, key
+        if value is None:
+            assert g_value is None or np.isnan(g_value), key
+        else:
+            assert g_value == pytest.approx(value, rel=1e-12, abs=0), key
+        if js is None:
+            assert g_js is None, key
+        else:
+            # JSON text of doubles may differ by format; compare parsed
+            got_bins = json.loads(g_js)
+            assert [b["bin"] for b in got_bins] == [b["bin"] for b in js], key
+            for gb, wb in zip(got_bins, js):
+                assert gb["count"] == wb["count"], key
+                assert gb["bin_start"] == pytest.approx(wb["bin_start"], rel=1e-12)
+                assert gb["bin_end"] == pytest.approx(wb["bin_end"], rel=1e-12)
+
+
+def _expected_metrics(docs) -> dict:
+    """(partition, metric_name) → (column_name, metric_value, parsed
+    metric_json) of each partition's metric rows, recomputed from the
+    docs table: scalars, rule fire rates and lang fractions; percentiles
+    as exact order statistics (percentile_approx is exact below its
+    10000 accuracy: the value at rank ceil(q·n)); the fixed log10
+    half-decade PSI buckets, a row only where the count is > 0; and the
+    10-bin equi-width histogram over [min, max], one row only where some
+    perplexity is non-NULL and max > min."""
+    import math
+
+    from baselinr_spark.functions.langid import CLASSES
+
+    want = {}
+    for p, g in docs.groupby(docs["dt"].astype(str)):
+        n = len(g)
+        keep = g["keep"].astype(bool)
+        no_text = g["scrubbed_text"].isna()
+        ppl = g["perplexity"].dropna().astype(float)
+
+        def mean(xs):
+            xs = [x for x in xs if x is not None]
+            return float(np.mean(xs)) if xs else None
+
+        doc = {
+            "count": float(n),
+            "kept_count": float(keep.sum()),
+            "keep_rate": float(keep.mean()),
+            "null_count": float(no_text.sum()),
+            "null_ratio": float(no_text.mean()),
+            "perplexity_mean": float(ppl.mean()) if len(ppl) else None,
+        }
+        for r in RULE_NAMES:
+            doc[f"rule_fire_rate:{r}"] = mean(
+                None if d is None else float(r in list(d))
+                for d in g["drop_reasons"])
+        for lang in CLASSES:
+            doc[f"lang_frac:{lang}"] = mean(
+                None if x is None else float(x == lang) for x in g["lang"])
+        srt = sorted(ppl)
+        for q, name in ((0.25, "p25"), (0.5, "p50"), (0.75, "p75"),
+                        (0.95, "p95")):
+            doc[f"perplexity_{name}"] = (
+                srt[max(math.ceil(q * len(srt)), 1) - 1] if srt else None)
+        for name, v in doc.items():
+            want[(p, name)] = ("document", v, None)
+
+        # NULL perplexity lands in bucket 0, as greatest() skips NULL
+        x = g["perplexity"].astype(float).to_numpy()
+        bucket = np.clip(np.floor(np.log10(np.fmax(x, 1.0)) * 2), 0, 9)
+        for b in range(10):
+            c = int((bucket == b).sum())
+            if c > 0:
+                want[(p, f"ppl_bucket:{b}")] = ("perplexity", float(c), None)
+
+        if len(srt) and srt[-1] > srt[0]:
+            lo, w = srt[0], (srt[-1] - srt[0]) / 10.0
+            bins = {}
+            for v in srt:
+                b = min(math.floor((v - lo) / w), 9)
+                bins[b] = bins.get(b, 0) + 1
+            want[(p, "perplexity_histogram")] = ("perplexity", None, [
+                {"bin": b, "bin_start": lo + b * w,
+                 "bin_end": lo + (b + 1) * w, "count": c}
+                for b, c in sorted(bins.items())])
+    return want
+
 
 def test_events_and_lineage(pipeline_result, spark):
     summary, out_root, docs, _ = pipeline_result
@@ -394,3 +487,71 @@ def test_event_nulls_without_arrow(spark, warehouse, tmp_path):
         assert r["score"] is None
     for r in by_type["validation_failed"]:
         assert r["baseline_value"] == 0.0
+
+    # the other metadata tables: scalar rows carry no JSON, histogram
+    # rows no value, and a full chunk's manifest rows no sample fraction
+    m = spark.read.parquet(os.path.join(out, "metrics"))
+    assert m.count() > 0
+    assert m.filter("isnan(metric_value)").count() == 0
+    hist = m.filter("metric_name = 'perplexity_histogram'")
+    assert hist.count() > 0
+    assert hist.filter("metric_value is not null").count() == 0
+    assert hist.filter("metric_json is null").count() == 0
+    assert m.filter("metric_name != 'perplexity_histogram'"
+                    " and metric_json is not null").count() == 0
+    from baselinr_spark.sources import manifest
+
+    man = manifest.read_manifest(spark, out)
+    assert man.count() == 2
+    assert man.filter("sample_fraction is not null").count() == 0
+    lin = spark.read.parquet(os.path.join(out, "lineage"))
+    assert lin.filter("ts is null").count() == 0
+
+
+def test_emptied_partition_keeps_no_stale_outputs(spark, warehouse, tmp_path):
+    """A reprocessed dt whose input became one empty parquet file ends
+    with no docs, metric or event rows and doc_count 0 in the summary,
+    lineage and manifest; the other dts are untouched."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from baselinr_spark.sources import manifest
+
+    wh = str(tmp_path / "pages")
+    shutil.copytree(warehouse, wh)
+    out = str(tmp_path / "out")
+    run_pipeline(spark, wh, out, run_id="full")
+    day = "2025-06-03"
+    before = spark.read.parquet(os.path.join(out, "docs"))
+    assert before.filter(F.col("dt") == day).count() > 0
+    n_other = before.filter(F.col("dt") != day).count()
+
+    day_dir = os.path.join(wh, f"dt={day}")
+    schema = pq.read_schema(next(
+        os.path.join(day_dir, f) for f in sorted(os.listdir(day_dir))
+        if f.endswith(".parquet")))
+    shutil.rmtree(day_dir)
+    os.makedirs(day_dir)
+    pq.write_table(schema.empty_table(), os.path.join(day_dir, "part-0.parquet"))
+
+    summary = run_pipeline(spark, wh, out, run_id="emptied",
+                           reprocess_changed=True)
+    assert summary["partitions_processed"] == [day]
+    assert summary["doc_count"] == 0 and summary["kept_count"] == 0
+
+    docs = spark.read.parquet(os.path.join(out, "docs"))
+    assert docs.filter(F.col("dt") == day).count() == 0
+    assert docs.filter(F.col("dt") != day).count() == n_other
+    for table in ("metrics", "events"):
+        t = spark.read.parquet(os.path.join(out, table))
+        assert t.filter(F.col("partition") == day).count() == 0, table
+    lin = spark.read.parquet(os.path.join(out, "lineage")).filter(
+        F.col("partition") == day).collect()
+    assert [(r["run_id"], r["doc_count"], r["kept_count"]) for r in lin] == [
+        ("emptied", 0, 0)]
+    state = manifest.latest_state(manifest.read_manifest(spark, out)).filter(
+        F.col("partition") == day).collect()
+    assert [(r["run_id"], r["doc_count"], r["kept_count"]) for r in state] == [
+        ("emptied", 0, 0)]

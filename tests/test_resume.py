@@ -24,13 +24,22 @@ def _done(spark, out_root):
                   state.filter(F.col("status") == "done").collect())
 
 
-def test_resume_after_crash(spark, warehouse, out_root, tmp_path_factory):
+def test_resume_after_crash(spark, warehouse, out_root, tmp_path_factory,
+                            monkeypatch):
     # crash after writing chunk-0 and chunk-1 data but before chunk-1 commit
-    with pytest.raises(RuntimeError, match="injected failure"):
-        run_pipeline(
-            spark, warehouse, out_root, run_id="run-a",
-            checkpoint_every=3, _fail_before_commit_chunk=1,
-        )
+    commit, calls = manifest.commit_partitions, []
+
+    def crash_second_commit(*args, **kwargs):
+        calls.append(1)
+        if len(calls) == 2:
+            raise RuntimeError("injected failure before manifest commit")
+        commit(*args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(manifest, "commit_partitions", crash_second_commit)
+        with pytest.raises(RuntimeError, match="injected failure"):
+            run_pipeline(spark, warehouse, out_root, run_id="run-a",
+                         checkpoint_every=3)
     done_after_crash = _done(spark, out_root)
     assert len(done_after_crash) == 3  # only chunk 0 committed
 
