@@ -125,9 +125,10 @@ def setup_tools(
         status: str | None = None,
         limit: int = 10,
     ) -> list[dict]:
-        from ..sources import manifest
+        from ..sources import catalog, manifest
 
-        m = manifest.latest_state(manifest.read_manifest(spark, output_root))
+        m = catalog.rows_frame(spark, manifest.latest_rows(output_root),
+                               manifest.MANIFEST_DDL)
         if partition:
             m = m.filter(F.col("partition") == partition)
         if status:
@@ -310,9 +311,10 @@ def setup_tools(
 
     # -- search_tables (tools.py:695-786) ---------------------------------
     def search_tables(pattern: str, limit: int = 20) -> list[dict]:
-        from ..sources import manifest
+        from ..sources import catalog, manifest
 
-        m = manifest.latest_state(manifest.read_manifest(spark, output_root))
+        m = catalog.rows_frame(spark, manifest.latest_rows(output_root),
+                               manifest.MANIFEST_DDL)
         hits = m.filter(F.col("partition").rlike(pattern))
         return _rows(
             hits.select("partition", "status", "doc_count", "kept_count")

@@ -1,17 +1,18 @@
 """fastText-style language identification kernel for the fused scoring UDF.
 
 Model: multinomial naive-Bayes over hashed character trigrams (2^16
-buckets), trained at build time on the deterministic synthetic training
-corpus (functions/synthlang.py) for the 3 languages plus a uniform-random
-"und" background class. This is the public fastText architecture in
+buckets), trained on the deterministic synthetic training corpus
+(functions/synthlang.py) for the 3 languages plus a uniform-random "und"
+background class. This is the public fastText architecture in
 miniature — hashed char-ngram features, linear classifier, softmax
 confidence — with no external model download (sandbox constraint; the
 north star's lid.176 drop-in is a one-line swap of `_score_batch`).
 
 Execution model (north star requirement: broadcast model + Arrow batches,
 no per-row Python):
-- the weight matrix is built once on the driver (deterministic),
-  broadcast via SparkContext.broadcast,
+- the weight matrix is loaded once on the driver from the trained
+  counts shipped in functions/models.npz (`train_counts` retrains them;
+  tools/train_models.py regenerates the file) and broadcast,
 - the fused scoring UDF (functions/scoring.py) dereferences the
   broadcast per executor,
 - scoring is numpy-vectorized per document: text bytes → 24-bit trigram
@@ -20,6 +21,8 @@ no per-row Python):
 
 from __future__ import annotations
 
+import io
+import pkgutil
 from functools import lru_cache
 
 import numpy as np
@@ -50,7 +53,14 @@ def _bucket_counts(text: str) -> np.ndarray:
 @lru_cache(maxsize=1)
 def build_model() -> np.ndarray:
     """(n_classes, N_BUCKETS) log-probability weight matrix + implicit
-    uniform prior. Deterministic: training corpus is seeded."""
+    uniform prior, from the shipped `train_counts()`."""
+    with np.load(io.BytesIO(pkgutil.get_data(__package__, "models.npz"))) as z:
+        c = z["langid_counts"].astype(np.float64)
+    return np.log(c / c.sum(axis=1, keepdims=True))
+
+
+def train_counts() -> np.ndarray:
+    """Trigram counts per class, Laplace 1 included (seeded corpus)."""
     counts = np.ones((len(CLASSES), N_BUCKETS), dtype=np.float64)  # Laplace
     for li, lang in enumerate(sl.LANGS):
         for doc in sl.training_corpus(lang):
@@ -60,7 +70,7 @@ def build_model() -> np.ndarray:
     for _ in range(200):
         doc = sl.words_to_lines(rng, sl.gibberish_words(rng, int(rng.integers(60, 300))))
         counts[len(sl.LANGS)] += _bucket_counts(doc)
-    return np.log(counts / counts.sum(axis=1, keepdims=True))
+    return counts
 
 
 # cap on gathered weight values per reduceat chunk: bounds the transient

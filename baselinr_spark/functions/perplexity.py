@@ -10,15 +10,18 @@ edges. Perplexity = exp(-mean log P(w_i | context)). Unseen words bottom
 out at a floor probability, so gibberish scores orders of magnitude above
 in-vocabulary prose.
 
-Execution: table built once on the driver (deterministic), broadcast;
-the fused scoring UDF (functions/scoring.py) dereferences it per
-executor; scoring loops words in CPython but
-only inside Arrow batches (no per-row serde).
+Execution: table loaded once on the driver from the trained counts
+shipped in functions/models.npz (`train_counts` retrains them;
+tools/train_models.py regenerates the file) and broadcast; the fused
+scoring UDF (functions/scoring.py) dereferences it per executor;
+scoring loops words in CPython but only inside Arrow batches.
 """
 
 from __future__ import annotations
 
+import io
 import math
+import pkgutil
 import re
 import zlib
 from functools import lru_cache
@@ -62,7 +65,15 @@ def _h(ngram: tuple[str, ...]) -> int:
 
 @lru_cache(maxsize=1)
 def build_model() -> tuple[dict[int, int], int]:
-    """counts[hash(ngram)] for orders 1..MAX_ORDER, plus total unigrams."""
+    """counts[hash(ngram)] for orders 1..MAX_ORDER, plus total unigrams:
+    the shipped `train_counts()`."""
+    with np.load(io.BytesIO(pkgutil.get_data(__package__, "models.npz"))) as z:
+        return (dict(zip(z["ppl_keys"].tolist(), z["ppl_counts"].tolist())),
+                int(z["ppl_total"]))
+
+
+def train_counts() -> tuple[dict[int, int], int]:
+    """`build_model`'s table, trained on the seeded corpus."""
     counts: dict[int, int] = {}
     total = 0
     for lang in sl.LANGS:

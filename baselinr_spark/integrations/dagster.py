@@ -54,7 +54,7 @@ def deserialize_cursor(cursor: str | None) -> dict[str, Any] | None:
 
 
 def detect_partitions_to_run(
-    spark, input_path: str, output_root: str
+    input_path: str, output_root: str
 ) -> tuple[list[str], str]:
     """(partitions to process, new cursor): the planner's ``run`` rows
     with ``reprocess_changed=True`` — partitions never profiled, and done
@@ -66,7 +66,7 @@ def detect_partitions_to_run(
     parts = catalog.list_partitions(input_path)
     fps = {p: change_detection.partition_fingerprint(input_path, p)
            for p in parts}
-    plan = planner.plan_partitions(spark, input_path, output_root,
+    plan = planner.plan_partitions(input_path, output_root,
                                    partitions=parts, reprocess_changed=True)
     todo = [r["partition"] for r in plan if r["action"] == "run"]
     return todo, serialize_cursor(fps)
@@ -101,26 +101,17 @@ def build_profile_asset(
     return _materialize
 
 
-def build_plan_sensor(
-    input_path: str,
-    output_root: str,
-    *,
-    session_factory: Callable | None = None,
-):
+def build_plan_sensor(input_path: str, output_root: str):
     """Sensor evaluation function: takes the previous cursor string,
     returns {'run_requested': bool, 'partitions': [...], 'cursor': str}
     (reference sensors.py:89-151 baselinr_plan_sensor). A run is
     requested exactly when the plan has partitions to run; the manifest,
     not the previous cursor, decides that. Wrapped in @dagster.sensor
     when the package is present; the evaluation logic is identical
-    either way."""
+    either way. A tick plans on the driver alone: it starts no Spark
+    session."""
     def _evaluate(cursor: str | None = None) -> dict:
-        from ..session import build_session
-
-        spark = session_factory() if session_factory else build_session(
-            app_name="baselinr_dagster")
-        todo, new_cursor = detect_partitions_to_run(
-            spark, input_path, output_root)
+        todo, new_cursor = detect_partitions_to_run(input_path, output_root)
         return {"run_requested": bool(todo), "partitions": todo,
                 "cursor": new_cursor}
 

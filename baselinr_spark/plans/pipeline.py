@@ -30,7 +30,7 @@ drift → events → state update, /root/reference/baselinr/cli.py:275-362 and
 storage/writer.py:120-167): Spark jobs for the document-scale work and
 the sinks, driver-side Python for the metadata-scale rows, with the incremental
 planner's skip/partial semantics (/root/reference/baselinr/incremental/
-planner.py:140-225) decided by plans/planner.py over the
+planner.py:140-225) decided on the driver by plans/planner.py over the
 processed-partition manifest.
 """
 
@@ -335,6 +335,7 @@ def _write_by_partition(df: DataFrame, path: str) -> None:
 _CONF_DEFAULTS = {
     "spark.sql.files.maxPartitionBytes": str(128 << 20),
     "spark.sql.adaptive.advisoryPartitionSizeInBytes": str(64 << 20),
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize": str(1 << 20),
     "spark.sql.shuffle.partitions": "200",
     "spark.sql.adaptive.enabled": "true",
 }
@@ -362,16 +363,39 @@ def split_partition_bytes(nbytes: int, par: int) -> int:
     nbytes/(3·par)) keeps >= 3 waves on small inputs, and 256 KB is the
     absolute minimum.
 
-    Every task of the fused UDF stage pays a fixed Python cost. On a
-    4-vCPU host at local[4], an identity pandas_udf over the 76 files
-    (3.4 MB) of a 2k-doc pages warehouse took 4.9-5.3 s as 76 tasks and
-    0.4-0.5 s as 4, i.e. ~250 ms of slot time per task. The kernels cost
+    Every task of the fused UDF stage pays a fixed Python cost, on top of
+    its worker's one-time cold start (chunk_conf). On a 4-vCPU host at
+    local[4], an identity pandas_udf over the 76 files (3.4 MB) of a
+    2k-doc pages warehouse took 4.9-5.3 s as 76 tasks and 0.4-0.5 s as
+    4, i.e. ~250 ms of slot time per task. The kernels cost
     ~700 µs/doc, so a 4 MB split (~1.6 s of work at 1.75 KB/doc) keeps
     the fixed cost under ~15%, while a 256 KB split is mostly fixed cost
     — and a split under openCostInBytes (512 KB) plus a file's size
     holds that one file."""
     lo = max(256 << 10, min(4 << 20, nbytes // (3 * par)))
     return max(lo, min(128 << 20, nbytes // (12 * par)))
+
+
+def chunk_conf(nbytes: int, par: int, skew_mode: str) -> dict:
+    """SQL conf of a chunk's transform and docs write (`nbytes` on disk,
+    `par` slots). Each UDF task writes ONE dt dir: files ≈ tasks.
+    - split: scan splits of split_partition_bytes, ZERO shuffle.
+    - rebalance: ONE AQE REBALANCE by dt to ~12 waves/core (1-128 MB).
+      AQE targets max(min(shuffle / par, advisory), minPartitionSize), so
+      Spark's 1 MB minPartitionSize runs a shuffle under par MB as ONE
+      Python task. Each cold worker costs ~1.5 s (local[4], 4 vCPU: 2.7 s
+      of worker time as one 2k-doc task, 8.6 s as four), but par workers
+      pay it side by side: that chunk's transform and docs write took
+      6.5 s as one task, 4.9 s as four. So a chunk whose on-disk bytes
+      (which bound its shuffle) fit in par advisory partitions gets a
+      64 KB minPartitionSize."""
+    advisory = max(1 << 20, min(128 << 20, nbytes // (12 * par)))
+    conf = {"spark.sql.adaptive.advisoryPartitionSizeInBytes": str(advisory)}
+    if skew_mode == "split":
+        conf["spark.sql.files.maxPartitionBytes"] = str(split_partition_bytes(nbytes, par))
+    elif nbytes < par * advisory:
+        conf["spark.sql.adaptive.coalescePartitions.minPartitionSize"] = str(64 << 10)
+    return conf
 
 
 #: skew_mode='auto' picks split only when the split floor nbytes/(3·par)
@@ -409,8 +433,9 @@ def _resolve_skew_mode(layout: tuple[int, list, str], par: int) -> tuple[str, st
     Split pays only when every split carries enough work to amortise the
     fixed per-task Python cost (split_partition_bytes). So a chunk under
     3·par·2 MB, where split's floor would be under 2 MB, takes the AQE
-    rebalance, which packs it into a few byte-balanced tasks (1 MB
-    advisory floor) that each write one dt dir. Measured on a 4-vCPU host
+    rebalance, which packs it into byte-balanced tasks that each write
+    one dt dir (about par of them for a chunk that fits in par advisory
+    partitions: chunk_conf). Measured on a 4-vCPU host
     at local[4] over 76-file pages warehouses (run_pipeline wall, warm
     session): rebalance won at 10k docs (15 MB: 9.3-10.5 s vs 10.9-11.6
     s), was about even at 15k (22 MB: 10.3-14.1 s vs 11.2-12.0 s) and
@@ -478,7 +503,7 @@ def run_pipeline(
     # decision cascade (freshness interval → snapshot match → cost caps →
     # sample/defer/full fallback); one row per partition
     plan_rows = planner.plan_partitions(
-        spark, input_path, output_root, partitions=all_parts,
+        input_path, output_root, partitions=all_parts,
         scheduling=scheduling, cost=cost,
         reprocess_changed=reprocess_changed,
     )
@@ -537,25 +562,7 @@ def run_pipeline(
             key = ",".join(chunk)
             summary.setdefault("skew_mode_used", {})[key] = chunk_skew
             summary.setdefault("skew_mode_reason", {})[key] = why
-        # Both modes size the fused-UDF stage by bytes, and every task
-        # writes into ONE dt dir, so file count ≈ task count, not tasks ×
-        # dts (file commit is driver-serial).
-        # - split: scan splits of split_partition_bytes and ZERO shuffle;
-        #   at 100 TB the rebalance shuffle is ~2x the input in disk +
-        #   network. Splits never cross dt: the input is dt-partitioned.
-        # - rebalance: ONE AQE REBALANCE by dt. Zipf-skewed days are
-        #   skew-split and small days coalesced to the advisory size:
-        #   ~12 waves/core (the UDF stage scaled 0.90 with 12 waves vs
-        #   0.69 with 2-4), at most 128 MB, and at least 1 MB, so a small
-        #   chunk runs as a few tasks rather than one Python task, with
-        #   its fixed ~250 ms of slot time, per small input file.
-        conf = {
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes":
-                str(max(1 << 20, min(128 << 20, nbytes // (12 * par)))),
-        }
-        if chunk_skew == "split":
-            conf["spark.sql.files.maxPartitionBytes"] = str(
-                split_partition_bytes(nbytes, par))
+        conf = chunk_conf(nbytes, par, chunk_skew)
         # fingerprint the inputs BEFORE reading them: a backfill landing
         # while the chunk is processing must be detected by the NEXT
         # reprocess_changed run, so the manifest must record what was

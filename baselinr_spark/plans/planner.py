@@ -27,8 +27,9 @@ granularity:
 The cascade runs as plain Python on the driver, over rows the driver
 holds anyway: bytes from file stats and rows from parquet footers (never
 a data scan, mirroring the reference's metadata-only contract), input
-fingerprints from the file listing, and the manifest's latest state —
-the plan's only Spark query. All of it is O(partitions) driver work.
+fingerprints from the file listing, and the manifest's latest state
+(read with pyarrow). All of it is O(partitions) driver work: planning
+launches no Spark job and needs no session.
 """
 
 from __future__ import annotations
@@ -37,9 +38,6 @@ import logging
 import os
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
-
-from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 from ..sources import change_detection, manifest
 
@@ -129,26 +127,16 @@ def partition_stats(input_path: str, partitions: list[str]) -> list[tuple]:
         return list(ex.map(one, partitions))
 
 
-def _stored_state(spark: SparkSession, output_root: str) -> dict:
-    """partition -> (status, fingerprint, completed_at as epoch µs,
-    sample_fraction) for partitions whose latest manifest row is a
-    ``done`` or ``sampled`` run. Epoch µs, not the collected datetime,
-    which Spark would hand back in the session's local time zone."""
-    rows = (
-        manifest.latest_state(manifest.read_manifest(spark, output_root))
-        .filter(F.col("status").isin("done", "sampled"))
-        .select(
-            "partition", "status", "fingerprint",
-            F.unix_micros(F.col("completed_at").cast("timestamp")),
-            "sample_fraction",
-        )
-        .collect()
-    )
-    return {r[0]: tuple(r[1:]) for r in rows}
+def _stored_state(output_root: str) -> dict:
+    """partition -> (status, fingerprint, completed_at, sample_fraction)
+    of each partition whose latest manifest row is ``done``/``sampled``."""
+    return {r["partition"]: (r["status"], r["fingerprint"], r["completed_at"],
+                             r["sample_fraction"])
+            for r in manifest.latest_rows(output_root)
+            if r["status"] in ("done", "sampled")}
 
 
 def plan_partitions(
-    spark: SparkSession,
     input_path: str,
     output_root: str,
     partitions: list[str] | None = None,
@@ -174,7 +162,7 @@ def plan_partitions(
 
     stats = partition_stats(input_path, parts)
     fps = [change_detection.partition_fingerprint(input_path, p) for p in parts]
-    state = _stored_state(spark, output_root)
+    state = _stored_state(output_root)
 
     # per-partition interval in minutes, clamped to [lo, hi] (reference _is_due)
     overrides = {str(k): float(v)
@@ -187,14 +175,14 @@ def plan_partitions(
     fraction = float(cost.sample_fraction)
 
     def decide(p, nbytes, nrows, fp) -> tuple[str, str]:
-        status, stored_fp, profiled_us, stored_fraction = state.get(
+        status, stored_fp, profiled_at, stored_fraction = state.get(
             p, (None, None, None, None))
-        ever_profiled = profiled_us is not None
+        ever_profiled = profiled_at is not None
         # reference order: freshness gate FIRST (cheapest — no change
         # detection), then snapshot match, then cost caps on the rest
         if scheduling.enabled and ever_profiled:
             interval = min(max(overrides.get(p, default_interval), lo), hi)
-            if (now_s - profiled_us / 1e6) / 60.0 < interval:
+            if (now_s - profiled_at.timestamp()) / 60.0 < interval:
                 return "skip", "fresh_within_interval"
         fp_match = stored_fp is not None and stored_fp == fp
         # without reprocess_changed, FULLY-done partitions never re-run

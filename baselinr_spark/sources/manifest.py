@@ -9,18 +9,16 @@ append + resolve latest by completed_at, which is the Iceberg-friendly
 append-only pattern — MERGE INTO when an Iceberg catalog is present).
 
 Resume = the planner (plans/planner.py) reads the latest state per
-partition and skips the ones already done, so a run processes only the
-remainder (north rule: "resumable from checkpoint with per-partition
-lineage").
+partition (`latest_rows`, on the driver) and skips the ones already
+done, so a run processes only the remainder (north rule: "resumable
+from checkpoint with per-partition lineage").
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import Window as W
+from pyspark.sql import SparkSession
 
 from . import catalog
 
@@ -35,30 +33,33 @@ def manifest_path(output_root: str) -> str:
     return os.path.join(output_root, "processed_partitions")
 
 
-def read_manifest(spark: SparkSession, output_root: str) -> DataFrame:
+def arrow_schema():
+    """MANIFEST_DDL as Spark maps it to Arrow, built without a session."""
+    import pyarrow as pa
+
+    types = {"string": pa.string(), "long": pa.int64(), "double": pa.float64(),
+             "timestamp": pa.timestamp("us", tz="UTC")}
+    return pa.schema([(n, types[t]) for n, t in
+                      (c.split() for c in MANIFEST_DDL.split(","))])
+
+
+def latest_rows(output_root: str) -> list[dict]:
+    """The latest manifest row of each partition (upsert resolution), in
+    partition order: greatest `completed_at`, then `run_id`, NULL last.
+    Read on the driver with pyarrow under `arrow_schema()`: a column an
+    older file lacks reads NULL; `completed_at` is a UTC datetime."""
+    import pyarrow.dataset as ds
+
     path = manifest_path(output_root)
     if not os.path.isdir(path):
-        # limit(0) lets the optimizer fold any query over this frame to an
-        # empty local relation, so a fresh root's plan runs no Spark job
-        return spark.createDataFrame([], schema=MANIFEST_DDL).limit(0)
-    # mergeSchema: manifests written before a column existed coexist
-    # with newer rows in the same append-only dir
-    m = spark.read.option("mergeSchema", "true").parquet(path)
-    if "fingerprint" not in m.columns:  # pre-fingerprint manifests
-        m = m.withColumn("fingerprint", F.lit(None).cast("string"))
-    if "sample_fraction" not in m.columns:  # pre-cost-cap manifests
-        m = m.withColumn("sample_fraction", F.lit(None).cast("double"))
-    return m
-
-
-def latest_state(manifest: DataFrame) -> DataFrame:
-    """Latest row per partition (upsert resolution)."""
-    w = W.partitionBy("partition").orderBy(F.desc("completed_at"), F.desc("run_id"))
-    return (
-        manifest.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+        return []
+    rows = ds.dataset(path, schema=arrow_schema(), format="parquet").to_table()
+    latest = {}
+    for r in sorted(rows.to_pylist(), key=lambda r: (
+            r["completed_at"] is not None, r["completed_at"] or 0,
+            r["run_id"] is not None, r["run_id"] or "")):
+        latest[r["partition"]] = r
+    return [latest[p] for p in sorted(latest)]
 
 
 def commit_partitions(

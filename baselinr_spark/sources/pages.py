@@ -22,6 +22,7 @@ salting path is exercised (FIXTURES.md: "skewed domain distribution").
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 import numpy as np
 import pandas as pd
@@ -149,25 +150,31 @@ PAGES_LAYOUT_VERSION = 3
 def write_pages_warehouse(spark, out_dir: str, n_docs: int, seed: int = 42) -> None:
     """Materialize the pages table as a dt-partitioned parquet warehouse
     (the days(warc_ts) Iceberg partition transform, emulated — see
-    sources/catalog.py for why parquet instead of Iceberg here)."""
+    sources/catalog.py for why parquet instead of Iceberg here), read by
+    Spark from one pyarrow-written temporary file beside `out_dir`."""
+    import tempfile
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
     pdf = generate_pages_pandas(n_docs, seed=seed)
-    df = spark.createDataFrame(pdf, schema=PAGES_DDL)
-    # Salt the layout on url-hash so each dt partition holds several files:
-    # a single file per partition caps downstream scan parallelism at the
-    # partition count (10), starving a wide cluster. 8 buckets/dt keeps
-    # files splittable-parallel without a small-file explosion.
-    salt = F.pmod(F.xxhash64("url"), F.lit(8))
-    (df.withColumn("dt", F.to_date("warc_ts"))
-       .repartition(80, F.col("dt"), salt)
-       .write.mode("overwrite").partitionBy("dt")
-       # bounded row groups: a parquet scan split can never be smaller
-       # than a row group, so the default 128 MB groups make every file
-       # ONE scan granule and cap split-mode balancing at the file
-       # count (2.5 uneven waves at 1M docs on 32 cores). 4 MB groups
-       # give split mode real granularity — the same bounded-granule
-       # guarantee Iceberg's target-file-size maintenance provides at
-       # scale (and what _resolve_skew_mode's footer probe assumes).
-       .option("parquet.block.size", str(4 * 1024 * 1024))
-       .parquet(out_dir))
+    pdf["warc_ts"] = pdf["warc_ts"].dt.tz_localize("UTC")
+    parent = os.path.dirname(os.path.abspath(out_dir))
+    os.makedirs(parent, exist_ok=True)
+    with tempfile.TemporaryDirectory(prefix=".pages-", dir=parent) as tmp:
+        src = os.path.join(tmp, "pages.parquet")
+        pq.write_table(pa.Table.from_pandas(pdf, preserve_index=False), src,
+                       coerce_timestamps="us")
+        df = spark.read.schema(PAGES_DDL).parquet(src)
+        # Salt on url-hash: 8 files per dt keep the scan parallel beyond
+        # the 10 partitions without a small-file explosion.
+        salt = F.pmod(F.xxhash64("url"), F.lit(8))
+        (df.withColumn("dt", F.to_date("warc_ts"))
+           .repartition(80, F.col("dt"), salt)
+           .write.mode("overwrite").partitionBy("dt")
+           # a scan split is never smaller than a row group: 4 MB groups
+           # give split mode (and _resolve_skew_mode's footer probe) real
+           # granularity, as Iceberg's target file size does
+           .option("parquet.block.size", str(4 * 1024 * 1024))
+           .parquet(out_dir))

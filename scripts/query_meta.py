@@ -70,9 +70,10 @@ def _lineage_edges(spark: SparkSession, output_root: str) -> DataFrame:
 
 
 def cmd_runs(spark, out_root, args) -> list[dict]:
-    from baselinr_spark.sources import manifest
+    from baselinr_spark.sources import catalog, manifest
 
-    m = manifest.latest_state(manifest.read_manifest(spark, out_root))
+    m = catalog.rows_frame(spark, manifest.latest_rows(out_root),
+                           manifest.MANIFEST_DDL)
     if args.status:
         m = m.filter(F.col("status") == args.status)
     return _emit(
@@ -190,7 +191,7 @@ def cmd_plan(spark, out_root, args) -> list[dict]:
             sample_fraction=args.sample_fraction,
         )
     return _print_rows(plan_partitions(
-        spark, args.input, out_root,
+        args.input, out_root,
         scheduling=scheduling, cost=cost,
         reprocess_changed=args.reprocess_changed,
     ))

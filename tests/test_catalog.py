@@ -89,10 +89,18 @@ def test_manifest_instants_in_non_utc_session(spark, tmp_path):
                          ("2025-06-02", now)):
             manifest.commit_partitions(spark, str(tmp_path), "run-tz", [
                 {"partition": part, "completed_at": ts}])
-        got = manifest.read_manifest(spark, str(tmp_path)).select(
+        got = spark.read.parquet(manifest.manifest_path(str(tmp_path))).select(
             "partition", F.unix_micros("completed_at").alias("us")).collect()
     finally:
         spark.conf.set(key, old)
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    # the driver-side reader's schema is the one Spark maps the DDL to
+    assert manifest.arrow_schema() == to_arrow_schema(
+        StructType.fromDDL(manifest.MANIFEST_DDL))
+    assert [r["completed_at"] for r in manifest.latest_rows(str(tmp_path))] \
+        == [now, now]
     want_us = int(now.timestamp()) * 1_000_000
     assert sorted(r["partition"] for r in got) == ["2025-06-01", "2025-06-02"]
     for r in got:

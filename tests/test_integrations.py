@@ -144,8 +144,7 @@ def test_dagster_sensor_logic(spark, warehouse, tmp_path):
     assert not dg.DAGSTER_AVAILABLE
     out_root = str(tmp_path / "dg_out")
 
-    evaluate = dg.build_plan_sensor(warehouse, out_root,
-                                    session_factory=lambda: spark)
+    evaluate = dg.build_plan_sensor(warehouse, out_root)
     first = evaluate(None)
     assert first["run_requested"] and len(first["partitions"]) > 0
 

@@ -76,11 +76,11 @@ def test_fingerprint_tracks_file_changes(tmp_path):
             == partition_fingerprint(root, "also-nope"))
 
 
-def _changed(spark, warehouse, out_root):
+def _changed(warehouse, out_root):
     """Done partitions whose input fingerprint no longer matches the
     committed one."""
     return [r["partition"] for r in plan_partitions(
-        spark, warehouse, out_root, reprocess_changed=True)
+        warehouse, out_root, reprocess_changed=True)
         if r["reason"] == "change_detected"]
 
 
@@ -92,7 +92,7 @@ def test_reprocess_changed_partition(spark, warehouse, out_root):
     # nothing changed: plain rerun AND reprocess_changed rerun are no-ops
     assert run_pipeline(spark, warehouse, out_root, run_id="run-2")[
         "partitions_processed"] == []
-    assert _changed(spark, warehouse, out_root) == []
+    assert _changed(warehouse, out_root) == []
     s3 = run_pipeline(spark, warehouse, out_root, run_id="run-3",
                       reprocess_changed=True)
     assert s3["partitions_processed"] == []
@@ -104,7 +104,7 @@ def test_reprocess_changed_partition(spark, warehouse, out_root):
     now = time.time() + 2
     os.utime(files[0], (now, now))
 
-    assert _changed(spark, warehouse, out_root) == [victim]
+    assert _changed(warehouse, out_root) == [victim]
     # manifest-only resume still skips it...
     assert run_pipeline(spark, warehouse, out_root, run_id="run-4")[
         "partitions_processed"] == []

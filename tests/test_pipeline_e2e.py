@@ -501,7 +501,7 @@ def test_event_nulls_without_arrow(spark, warehouse, tmp_path):
                     " and metric_json is not null").count() == 0
     from baselinr_spark.sources import manifest
 
-    man = manifest.read_manifest(spark, out)
+    man = spark.read.parquet(manifest.manifest_path(out))
     assert man.count() == 2
     assert man.filter("sample_fraction is not null").count() == 0
     lin = spark.read.parquet(os.path.join(out, "lineage"))
@@ -551,7 +551,47 @@ def test_emptied_partition_keeps_no_stale_outputs(spark, warehouse, tmp_path):
         F.col("partition") == day).collect()
     assert [(r["run_id"], r["doc_count"], r["kept_count"]) for r in lin] == [
         ("emptied", 0, 0)]
-    state = manifest.latest_state(manifest.read_manifest(spark, out)).filter(
-        F.col("partition") == day).collect()
+    state = [r for r in manifest.latest_rows(out) if r["partition"] == day]
     assert [(r["run_id"], r["doc_count"], r["kept_count"]) for r in state] == [
         ("emptied", 0, 0)]
+
+
+def test_small_chunk_udf_stage_on_every_core(spark, tmp_path, monkeypatch):
+    """A 10-dt, 2k-doc chunk is far under par advisory partitions: its
+    fused-UDF stage runs as at least min(par, 4) tasks instead of one,
+    and the docs write still leaves one file per dt."""
+    from baselinr_spark.plans.pipeline import _chunk_layout, chunk_conf
+    from baselinr_spark.sources import catalog
+    from baselinr_spark.sources.pages import write_pages_warehouse
+
+    wh, out = str(tmp_path / "pages"), str(tmp_path / "out")
+    write_pages_warehouse(spark, wh, n_docs=2000, seed=901)
+    parts = catalog.list_partitions(wh)
+    assert len(parts) == 10
+    sc = spark.sparkContext
+    par = sc.defaultParallelism
+    assert "spark.sql.adaptive.coalescePartitions.minPartitionSize" in \
+        chunk_conf(_chunk_layout(wh, parts)[0], par, "rebalance")
+
+    write = catalog.write_partitioned
+
+    def grouped_write(df, path, *args):
+        sc.setJobGroup("docs-write", "the chunk's docs write")
+        try:
+            write(df, path, *args)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    monkeypatch.setattr(catalog, "write_partitioned", grouped_write)
+    summary = run_pipeline(spark, wh, out, run_id="udf-width")
+    assert summary["skew_mode_used"] == {",".join(parts): "rebalance"}
+    st = sc.statusTracker()
+    jobs = sorted(st.getJobIdsForGroup("docs-write"))
+    assert jobs
+    # the write's last job ends in the post-shuffle stage: the UDF stage
+    udf_stage = max(st.getJobInfo(jobs[-1]).stageIds)
+    assert st.getStageInfo(udf_stage).numTasks >= min(par, 4)
+    for p in parts:
+        files = [f for f in os.listdir(os.path.join(out, "docs", f"dt={p}"))
+                 if f.endswith(".parquet")]
+        assert len(files) == 1, (p, files)

@@ -19,7 +19,7 @@ def _plan_dict(plan):
 
 
 def test_never_profiled_runs(spark, warehouse, out_root):
-    d = _plan_dict(plan_partitions(spark, warehouse, out_root))
+    d = _plan_dict(plan_partitions(warehouse, out_root))
     assert d and all(
         r["action"] == "run" and r["reason"] == "never_profiled"
         for r in d.values()
@@ -37,13 +37,13 @@ def test_freshness_and_snapshot_cascade(spark, warehouse, out_root):
     # fresh within interval → skipped BEFORE change detection
     sched = AdaptiveScheduling(enabled=True, default_interval_minutes=60,
                                min_interval_minutes=0)
-    d = _plan_dict(plan_partitions(spark, warehouse, out_root, now=now,
+    d = _plan_dict(plan_partitions(warehouse, out_root, now=now,
                                    scheduling=sched))
     assert all(r["reason"] == "fresh_within_interval" for r in d.values())
 
     # past due + unchanged input → snapshot_match skip
     later = now + dt.timedelta(minutes=120)
-    d = _plan_dict(plan_partitions(spark, warehouse, out_root, now=later,
+    d = _plan_dict(plan_partitions(warehouse, out_root, now=later,
                                    scheduling=sched, reprocess_changed=True))
     assert all(r["action"] == "skip" and r["reason"] == "snapshot_match"
                for r in d.values())
@@ -56,7 +56,7 @@ def test_freshness_and_snapshot_cascade(spark, warehouse, out_root):
         for f in fs if f.endswith(".parquet")
     )
     os.utime(fpath)  # mtime bump = fingerprint change
-    d = _plan_dict(plan_partitions(spark, warehouse, out_root, now=later,
+    d = _plan_dict(plan_partitions(warehouse, out_root, now=later,
                                    scheduling=sched, reprocess_changed=True))
     assert d[victim]["action"] == "run"
     assert d[victim]["reason"] == "change_detected"
@@ -67,7 +67,7 @@ def test_freshness_and_snapshot_cascade(spark, warehouse, out_root):
         enabled=True, default_interval_minutes=60, min_interval_minutes=0,
         max_interval_minutes=10**6, priority_overrides={victim: 10**5},
     )
-    d = _plan_dict(plan_partitions(spark, warehouse, out_root, now=later,
+    d = _plan_dict(plan_partitions(warehouse, out_root, now=later,
                                    scheduling=sched2, reprocess_changed=True))
     assert d[victim]["reason"] == "fresh_within_interval"
 
@@ -85,7 +85,7 @@ def test_cost_cap_fallbacks(spark, warehouse, out_root):
                              ("full", "run")]:
         cc = CostControls(enabled=True, max_bytes_scanned=cap,
                           fallback_strategy=strategy, sample_fraction=0.25)
-        d = _plan_dict(plan_partitions(spark, warehouse, out_root, cost=cc))
+        d = _plan_dict(plan_partitions(warehouse, out_root, cost=cc))
         for p in parts:
             if p in big:
                 assert d[p]["action"] == action
@@ -99,7 +99,7 @@ def test_cost_cap_fallbacks(spark, warehouse, out_root):
     # rows cap: cap below every partition's rows → all capped
     cc = CostControls(enabled=True, max_rows_scanned=1,
                       fallback_strategy="defer")
-    d = _plan_dict(plan_partitions(spark, warehouse, out_root, cost=cc))
+    d = _plan_dict(plan_partitions(warehouse, out_root, cost=cc))
     assert all(r["action"] == "defer" and r["reason"] == "rows_cap_exceeded"
                for r in d.values())
 
@@ -167,8 +167,7 @@ def test_sampled_partitions_promote_to_full(spark, warehouse, out_root):
                       fallback_strategy="sample", sample_fraction=0.3)
     run_pipeline(spark, warehouse, out_root, run_id="r1", cost=cc)
 
-    state = {r["partition"]: r for r in mf.latest_state(
-        mf.read_manifest(spark, out_root)).collect()}
+    state = {r["partition"]: r for r in mf.latest_rows(out_root)}
     for p in parts:
         if p in big:
             assert state[p]["status"] == "sampled"
@@ -178,7 +177,7 @@ def test_sampled_partitions_promote_to_full(spark, warehouse, out_root):
             assert state[p]["sample_fraction"] is None
 
     # same cap + fraction → sampled partitions skip (identical cohort)
-    d = _plan_dict(plan_partitions(spark, warehouse, out_root, cost=cc))
+    d = _plan_dict(plan_partitions(warehouse, out_root, cost=cc))
     for p in parts:
         expect = "sampled_cap_unchanged" if p in big else "snapshot_match"
         assert d[p]["action"] == "skip" and d[p]["reason"] == expect
@@ -186,9 +185,9 @@ def test_sampled_partitions_promote_to_full(spark, warehouse, out_root):
     # different fraction → re-sample; caps lifted → promote to full
     cc2 = CostControls(enabled=True, max_bytes_scanned=cap,
                        fallback_strategy="sample", sample_fraction=0.6)
-    d = _plan_dict(plan_partitions(spark, warehouse, out_root, cost=cc2))
+    d = _plan_dict(plan_partitions(warehouse, out_root, cost=cc2))
     assert all(d[p]["action"] == "sample" for p in big)
-    d = _plan_dict(plan_partitions(spark, warehouse, out_root))
+    d = _plan_dict(plan_partitions(warehouse, out_root))
     for p in parts:
         if p in big:
             assert d[p]["action"] == "run"
@@ -199,8 +198,7 @@ def test_sampled_partitions_promote_to_full(spark, warehouse, out_root):
     # uncapped run promotes: full doc counts land, manifest says done
     s2 = run_pipeline(spark, warehouse, out_root, run_id="r2")
     assert sorted(s2["partitions_processed"]) == sorted(big)
-    state = {r["partition"]: r for r in mf.latest_state(
-        mf.read_manifest(spark, out_root)).collect()}
+    state = {r["partition"]: r for r in mf.latest_rows(out_root)}
     assert all(state[p]["status"] == "done" for p in parts)
     docs = spark.read.parquet(os.path.join(out_root, "docs"))
     per = {r["dt"]: r["n"] for r in docs.groupBy(

@@ -17,11 +17,10 @@ def _docs_state(spark, out_root):
     return sorted((r[0], r[1], r[2], r[3]) for r in rows)
 
 
-def _done(spark, out_root):
+def _done(out_root):
     """Partitions whose latest manifest row is a full run."""
-    state = manifest.latest_state(manifest.read_manifest(spark, out_root))
-    return sorted(r["partition"] for r in
-                  state.filter(F.col("status") == "done").collect())
+    return [r["partition"] for r in manifest.latest_rows(out_root)
+            if r["status"] == "done"]
 
 
 def test_resume_after_crash(spark, warehouse, out_root, tmp_path_factory,
@@ -40,14 +39,14 @@ def test_resume_after_crash(spark, warehouse, out_root, tmp_path_factory,
         with pytest.raises(RuntimeError, match="injected failure"):
             run_pipeline(spark, warehouse, out_root, run_id="run-a",
                          checkpoint_every=3)
-    done_after_crash = _done(spark, out_root)
+    done_after_crash = _done(out_root)
     assert len(done_after_crash) == 3  # only chunk 0 committed
 
     # resume: must process exactly the remainder
     summary2 = run_pipeline(spark, warehouse, out_root, run_id="run-b", checkpoint_every=3)
     assert set(summary2["partitions_processed"]).isdisjoint(done_after_crash)
 
-    all_parts = _done(spark, out_root)
+    all_parts = _done(out_root)
     assert sorted(summary2["partitions_processed"] + done_after_crash) == all_parts
 
     # final state identical to a clean single run

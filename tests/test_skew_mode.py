@@ -1,8 +1,12 @@
-"""skew_mode='auto' resolution on small pyarrow-written layouts — no Spark.
+"""skew_mode='auto' resolution on small pyarrow-written layouts, and the
+chunk's SQL conf — no Spark.
 
 A chunk under 3·par·2 MB takes the rebalance shuffle whatever its row
 groups look like; past that gate the mode and split bytes are the ones
-the footer-only rule (reproduced below as the reference) gives."""
+the footer-only rule (reproduced below as the reference) gives. A
+rebalanced chunk whose bytes fit in par advisory partitions lowers
+AQE's minPartitionSize so its UDF stage runs on every core; every other
+chunk keeps the advisory-only conf (reproduced below)."""
 
 import logging
 import os
@@ -15,6 +19,7 @@ import pytest
 from baselinr_spark.plans.pipeline import (
     _chunk_layout,
     _resolve_skew_mode,
+    chunk_conf,
     split_partition_bytes,
 )
 
@@ -162,3 +167,49 @@ def test_unstatable_file_rebalance_with_reason(big_layout, tmp_path, caplog):
     assert dangling not in [p for p, _ in files]
     assert any(dangling in r.getMessage() for r in caplog.records)
     assert _resolve_skew_mode(layout, 1) == ("rebalance", error)
+
+
+MIN_PART = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+ADVISORY = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+MAX_SPLIT = "spark.sql.files.maxPartitionBytes"
+
+
+def _sizing(nbytes, par, mode):
+    """The chunk conf before small chunks lowered minPartitionSize."""
+    conf = {ADVISORY: str(max(MB, min(128 * MB, nbytes // (12 * par))))}
+    if mode == "split":
+        conf[MAX_SPLIT] = str(_formula(nbytes, par))
+    return conf
+
+
+@pytest.mark.parametrize("par", [1, 4, 32])
+def test_chunk_conf_small_chunk_every_core(par):
+    # a 2k-doc pages chunk is ~3.4 MB on disk; its shuffle ~1.6 MB
+    for nbytes in (0, 1, 64 << 10, par * MB // 2, par * MB - 1):
+        conf = chunk_conf(nbytes, par, "rebalance")
+        assert conf == {**_sizing(nbytes, par, "rebalance"),
+                        MIN_PART: str(64 << 10)}
+        # AQE's target min(shuffle / par, advisory), floored at
+        # minPartitionSize, is now the per-core share of the chunk
+        assert int(conf[MIN_PART]) < int(conf[ADVISORY])
+
+
+@pytest.mark.parametrize("par", [1, 4, 32])
+def test_chunk_conf_gate_edge(par):
+    below, at = par * MB - 1, par * MB
+    assert MIN_PART in chunk_conf(below, par, "rebalance")
+    assert chunk_conf(at, par, "rebalance") == _sizing(at, par, "rebalance")
+    # past the edge a chunk keeps today's sizing, up to the 128 MB cap
+    for nbytes in (at + 1, 12 * par * MB, 12 * par * MB + 12345,
+                   12 * par * 128 * MB, 1 << 44):
+        assert chunk_conf(nbytes, par, "rebalance") == \
+            _sizing(nbytes, par, "rebalance")
+
+
+@pytest.mark.parametrize("par", [1, 4, 32])
+def test_chunk_conf_split_unchanged(par):
+    for nbytes in (0, 1, par * MB - 1, par * MB, 3 * par * 2 * MB,
+                   3 * par * 4 * MB, 1 << 44):
+        conf = chunk_conf(nbytes, par, "split")
+        assert conf == _sizing(nbytes, par, "split")
+        assert MIN_PART not in conf
