@@ -155,24 +155,19 @@ def model_rule_columns(cfg: FilterConfig) -> dict[str, Column]:
 
 def with_verdict(df: DataFrame, rules: dict[str, Column]) -> DataFrame:
     """Add per-rule boolean columns `rule_<name>`, `drop_reasons`
-    (array<string> in RULE_NAMES order) and `keep`."""
+    (array<string> in RULE_NAMES order) and `keep`, as one projection."""
     from ..config import RULE_NAMES
 
-    out = df
-    for name, col in rules.items():
-        out = out.withColumn(f"rule_{name}", F.coalesce(col, F.lit(False)))
-    present = [n for n in RULE_NAMES if n in rules]
-    reason_arr = F.array_compact(
-        F.array(
-            *[
-                F.when(F.col(f"rule_{n}"), F.lit(n)).otherwise(F.lit(None))
-                for n in present
-            ]
-        )
-    )
-    out = out.withColumn("drop_reasons", reason_arr)
-    out = out.withColumn("keep", F.size(F.col("drop_reasons")) == 0)
-    return out
+    fired = {n: F.coalesce(col, F.lit(False)) for n, col in rules.items()}
+    reasons = F.array_compact(F.array(*[
+        F.when(fired[n], F.lit(n)).otherwise(F.lit(None))
+        for n in RULE_NAMES if n in rules
+    ]))
+    return df.withColumns({
+        **{f"rule_{n}": col for n, col in fired.items()},
+        "drop_reasons": reasons,
+        "keep": F.size(reasons) == 0,
+    })
 
 
 # ---------------------------------------------------------------------------

@@ -29,7 +29,9 @@ import json
 import math
 from decimal import ROUND_HALF_UP, Decimal
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
+
+from ..sources import catalog
 
 #: schema of the events table
 EVENTS_DDL = (
@@ -103,34 +105,20 @@ def validation_events(rows: list[dict], run_id: str) -> list[dict]:
     return out
 
 
-def write_schema_snapshot(
-    spark: SparkSession, df: DataFrame, schema_dir: str, run_id: str
-) -> None:
+def write_schema_snapshot(df: DataFrame, schema_dir: str, run_id: str) -> None:
     """Record the docs schema for this run (append; latest run wins on
-    read). The snapshot is O(columns) METADATA — written driver-side
-    with pyarrow (a new file per call = append semantics) instead of
-    launching a Spark job for a handful of rows (guide §1.2: fixed
-    per-job scheduling cost dwarfs metadata-scale work)."""
+    read). The snapshot is O(columns) METADATA — one file written
+    driver-side (catalog.write_rows) instead of launching a Spark job
+    for a handful of rows (guide §1.2: fixed per-job scheduling cost
+    dwarfs metadata-scale work)."""
     import datetime as _dt
-    import os
-    import uuid as _uuid
 
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    os.makedirs(schema_dir, exist_ok=True)
-    now = _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None)
-    names = [f.name for f in df.schema.fields]
-    types = [f.dataType.simpleString() for f in df.schema.fields]
-    tbl = pa.table({
-        "run_id": pa.array([run_id] * len(names), type=pa.string()),
-        "column_name": pa.array(names, type=pa.string()),
-        "data_type": pa.array(types, type=pa.string()),
-        "ts": pa.array([now] * len(names), type=pa.timestamp("us")),
-    })
-    pq.write_table(
-        tbl, os.path.join(schema_dir, f"part-{_uuid.uuid4().hex}.parquet")
-    )
+    now = _dt.datetime.now(_dt.timezone.utc)
+    catalog.write_rows(schema_dir, [
+        {"run_id": run_id, "column_name": f.name,
+         "data_type": f.dataType.simpleString(), "ts": now}
+        for f in df.schema.fields
+    ], "run_id string, column_name string, data_type string, ts timestamp")
 
 
 def _normalize_type_py(t: str) -> str:
@@ -141,9 +129,9 @@ def _normalize_type_py(t: str) -> str:
 
 
 def _naive_utc(ts):
-    """Snapshot timestamp as naive UTC, the form write_schema_snapshot
-    writes; tz-aware ones (older Spark-written snapshots) are converted
-    to UTC, never to the host's local zone, so both kinds compare."""
+    """Snapshot timestamp as naive UTC, the form pyarrow reads an INT96
+    timestamp in; tz-aware ones (older snapshot files) are converted to
+    UTC, never to the host's local zone, so both kinds compare."""
     if ts.tzinfo is None:
         return ts
     import datetime as _dt

@@ -7,13 +7,13 @@ One declarative pass per chunk of partitions:
       → ONE fused scoring UDF: langid, perplexity, word/line features,
         scrub (broadcast models, Arrow batches)
       → rule booleans → keep/drop_reasons; scrubbed_text coalesced JVM-side
-      → clear the chunk's dts from docs/, metrics/ and events/ (a dt
-        whose input became empty keeps no stale outputs)
+      → clear the chunk's dts from docs/ (a dt whose input became empty
+        keeps no stale docs)
       → write docs/ (dynamic partition overwrite = idempotent)
-    read back docs (cheap columnar projection)
-      → two collected aggregations (per-dt scalars, percentiles and PSI
-        bucket counts; histogram bin counts), shaped on the driver into
-        long-format rows → metrics/
+    read back docs (cheap columnar projection, known schema)
+      → ONE collected aggregation (per-dt scalars, percentiles, PSI bucket
+        counts and histogram bin counts between each dt's min/max),
+        shaped on the driver into long-format rows → metrics/
     read the stored metric rows ONCE on the driver (pyarrow); plain
     Python over those rows derives
       → PSI drift vs predecessor cohorts, validation and anomaly
@@ -21,14 +21,14 @@ One declarative pass per chunk of partitions:
       → per-partition (doc, kept) counts → lineage/, manifest, summary
     commit manifest rows (checkpoint; crash before this = partition redone)
 
-Every metadata table (metrics, events, lineage, manifest) enters Spark
-from driver-side rows through one function, catalog.rows_frame, and the
-three partitioned ones leave through one writer, _write_by_partition.
+The metrics aggregation is a chunk's only Spark job after its docs
+write: every metadata table is written on the driver with pyarrow
+(catalog.replace_partitions; the manifest appends one file).
 
 This mirrors the reference lifecycle (profile → write results → enrich →
 drift → events → state update, /root/reference/baselinr/cli.py:275-362 and
-storage/writer.py:120-167): Spark jobs for the document-scale work and
-the sinks, driver-side Python for the metadata-scale rows, with the incremental
+storage/writer.py:120-167): Spark jobs for the document-scale work,
+driver-side Python for metadata-scale rows and sinks, with the incremental
 planner's skip/partial semantics (/root/reference/baselinr/incremental/
 planner.py:140-225) decided on the driver by plans/planner.py over the
 processed-partition manifest.
@@ -46,7 +46,7 @@ import shutil
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT_CONFIG, RULE_NAMES, FilterConfig
@@ -70,6 +70,12 @@ META_SHUFFLE_PARTITIONS = 8
 DOCS_COLS = (
     "url", "warc_ts", "keep", "drop_reasons", "lang", "lang_conf",
     "perplexity", "scrubbed_text", "run_id",
+)
+
+#: the docs table's columns the metrics read back, with their types
+DOCS_READ_DDL = (
+    "keep boolean, drop_reasons array<string>, lang string,"
+    " perplexity double, scrubbed_text string, dt date"
 )
 
 #: schema of the metrics table
@@ -118,22 +124,8 @@ def transform_pages(
 
     scoring_udf = make_scoring_udf(spark)
 
+    # one projection per step: each withColumn would re-analyze the plan
     df = pages
-    if "dt" not in df.columns:
-        df = df.withColumn("dt", F.to_date("warc_ts"))
-
-    # n_chars/symbol_ratio are cheap JVM expressions; the word/line
-    # features ride the fused UDF (functions/scoring.py — the text is
-    # already crossing the boundary for the model scores, and a python
-    # split+set pass beats the anchored stopword regexp ~7x). Values are
-    # identical to textfeat.with_features (parity-tested).
-    text = F.coalesce(F.col("text"), F.lit(""))
-    n_chars = F.length(text)
-    n_symbols = F.length(F.regexp_replace(text, r"[A-Za-z0-9\s]", ""))
-    df = df.withColumn("n_chars", n_chars).withColumn(
-        "symbol_ratio",
-        F.when(n_chars > 0, n_symbols / n_chars).otherwise(F.lit(0.0)),
-    )
     if cfg.repetition_rules:
         df = textfeat.with_repetition_features(
             df,
@@ -144,15 +136,31 @@ def transform_pages(
         df = textfeat.with_line_features(df)
     if cfg.cc_rule:
         df = textfeat.with_cc_features(df)
-    df = df.withColumn("_score", scoring_udf(F.col("text"))).select(
-        "*", *[F.col(f"_score.{c}").alias(c) for c in SCORING_SCHEMA.names]
-    ).drop("_score")
+    # n_chars/symbol_ratio are cheap JVM expressions; the word/line
+    # features ride the fused UDF (functions/scoring.py — the text is
+    # already crossing the boundary for the model scores, and a python
+    # split+set pass beats the anchored stopword regexp ~7x). Values are
+    # identical to textfeat.with_features (parity-tested).
+    text = F.coalesce(F.col("text"), F.lit(""))
+    n_chars = F.length(text)
+    n_symbols = F.length(F.regexp_replace(text, r"[A-Za-z0-9\s]", ""))
+    df = df.withColumns({
+        **({} if "dt" in df.columns else {"dt": F.to_date("warc_ts")}),
+        "n_chars": n_chars,
+        "symbol_ratio": F.when(n_chars > 0, n_symbols / n_chars)
+        .otherwise(F.lit(0.0)),
+        "_score": scoring_udf(F.col("text")),
+    })
     # the fused UDF returns NULL when the scrub was the identity so
     # unchanged text never crosses the Python→JVM boundary twice;
     # restore the original here (byte-identical to scrubbing in place)
-    df = df.withColumn(
-        "scrubbed_text", F.coalesce(F.col("scrubbed_text"), F.col("text"))
-    )
+    df = df.withColumns({
+        **{c: F.col(f"_score.{c}") for c in SCORING_SCHEMA.names},
+        "scrubbed_text": F.coalesce(F.col("_score.scrubbed_text"),
+                                    F.col("text")),
+        "lang": F.col("_score.lang_pred"),
+        "run_id": F.lit(run_id),
+    })
 
     rules = {**textfeat.rule_columns(cfg), **textfeat.model_rule_columns(cfg)}
     if cfg.repetition_rules:
@@ -163,9 +171,6 @@ def transform_pages(
         rules.update(textfeat.cc_rule_columns(cfg))
     df = textfeat.with_verdict(df, rules)
 
-    df = df.withColumn("run_id", F.lit(run_id)).withColumn(
-        "lang", F.col("lang_pred")
-    )
     rule_cols = [f"rule_{n}" for n in RULE_NAMES if f"rule_{n}" in df.columns]
     return df.select(*DOCS_COLS, *rule_cols, "dt")
 
@@ -174,32 +179,28 @@ def partition_metrics(docs: DataFrame, run_id: str) -> list[dict]:
     """Long-format per-partition metric rows of the docs read-back
     (FIXTURES.md §2 `metrics` shape, METRICS_DDL).
 
-    Spark runs two aggregations over the narrow docs projection and
-    collects their few rows per partition; the driver shapes them:
-    - pass A, one groupBy(dt): every scalar, the four perplexity
-      percentiles from ONE shared percentile_approx sketch (the same
-      deterministic sketch a per-quantile call builds), the perplexity
-      min/max and the fixed PSI bucket counts;
-    - pass B: the equi-width perplexity histogram's count per
-      (partition, bin), each partition's min and width passed in from
-      pass A as literal maps (reference semantics: 10 bins over [min,
-      max], bin i = [min+i·w, min+(i+1)·w), the last closed).
+    Spark runs ONE aggregation, a groupBy(dt) over the narrow docs
+    projection, and collects its row per partition; the driver shapes
+    them. It computes every scalar, the four perplexity percentiles
+    from ONE shared percentile_approx sketch (the same deterministic
+    sketch a per-quantile call builds), the perplexity min/max, the
+    fixed PSI bucket counts, and the equi-width perplexity histogram's
+    bin counts (reference semantics: 10 bins over [min, max], bin i =
+    [min+i·w, min+(i+1)·w), the last closed), binned by a window's
+    per-dt min/max that shares the groupBy's shuffle: one Spark job.
     Each partition gets every scalar, rule_fire_rate:* and lang_frac:*
     row and four percentile rows, NULL where there is no value; a
     ppl_bucket:b row only where its count is > 0; and one
-    perplexity_histogram row (metric_json) only where some perplexity is
-    non-NULL and max > min."""
+    perplexity_histogram row (metric_json), holding its bins with a
+    count > 0, only where some perplexity is non-NULL and max > min."""
     p_col = F.col("dt").cast("string")
-    has_text = (
-        F.col("__has_text") if "__has_text" in docs.columns
-        else F.col("scrubbed_text").isNotNull()
-    )
+    no_text = ~F.col("__has_text")
     scalars = {
         "count": F.count(F.lit(1)),
         "kept_count": F.sum(F.col("keep").cast("long")),
         "keep_rate": F.avg(F.col("keep").cast("double")),
-        "null_count": F.sum((~has_text).cast("long")),
-        "null_ratio": F.avg((~has_text).cast("double")),
+        "null_count": F.sum(no_text.cast("long")),
+        "null_ratio": F.avg(no_text.cast("double")),
         "perplexity_mean": F.avg(F.col("perplexity")),
     }
     for r in RULE_NAMES:
@@ -211,6 +212,13 @@ def partition_metrics(docs: DataFrame, run_id: str) -> list[dict]:
     pq_names = ("p25", "p50", "p75", "p95")
     x = F.col("perplexity").cast("double")
     bucket = psi_bucket_expr()
+    by_dt = Window.partitionBy(p_col)
+    docs = docs.select("*", F.min(x).over(by_dt).alias("__lo"),
+                       F.max(x).over(by_dt).alias("__hi"))
+    lo, hi = F.col("__lo"), F.col("__hi")
+    # the same double arithmetic as the driver's bin edges below
+    bin_ = F.when(hi > lo, F.least(
+        F.floor((x - lo) / ((hi - lo) / 10.0)).cast("int"), F.lit(9)))
     agg = docs.groupBy(p_col.alias("partition")).agg(
         *[e.alias(n) for n, e in scalars.items()],
         F.percentile_approx("perplexity", [0.25, 0.5, 0.75, 0.95]).alias("__pq"),
@@ -218,26 +226,9 @@ def partition_metrics(docs: DataFrame, run_id: str) -> list[dict]:
         F.max(x).alias("__max"),
         *[F.count(F.when(bucket == b, F.lit(1))).alias(f"__b{b}")
           for b in range(10)],
+        *[F.count(F.when(bin_ == b, F.lit(1))).alias(f"__h{b}")
+          for b in range(10)],
     ).collect()
-
-    # (min, width) of each partition with a histogram
-    ranges = {r["partition"]: (r["__min"], (r["__max"] - r["__min"]) / 10.0)
-              for r in agg if r["__max"] is not None and r["__max"] > r["__min"]}
-    hist: dict[str, dict[int, int]] = {}
-    if ranges:
-        def by_part(i):
-            return F.create_map(*[F.lit(v) for p, mw in ranges.items()
-                                  for v in (p, mw[i])])[p_col]
-
-        lo, w = by_part(0), by_part(1)
-        for r in (
-            docs.filter(p_col.isin(list(ranges)) & x.isNotNull())
-            .groupBy(p_col.alias("partition"),
-                     F.least(F.floor((x - lo) / w).cast("int"),
-                             F.lit(9)).alias("bin"))
-            .count().collect()
-        ):
-            hist.setdefault(r["partition"], {})[r["bin"]] = r["count"]
 
     profiled_at = dt.datetime.now(dt.timezone.utc)
     out = []
@@ -257,12 +248,13 @@ def partition_metrics(docs: DataFrame, run_id: str) -> list[dict]:
         for b in range(10):
             if r[f"__b{b}"] > 0:
                 emit(p, "perplexity", f"ppl_bucket:{b}", r[f"__b{b}"])
-    for p, bins in sorted(hist.items()):
-        m, w = ranges[p]
-        emit(p, "perplexity", "perplexity_histogram", None, json.dumps(
-            [{"bin": b, "bin_start": m + b * w, "bin_end": m + (b + 1) * w,
-              "count": c} for b, c in sorted(bins.items())],
-            separators=(",", ":")))
+        m, top = r["__min"], r["__max"]
+        if top is not None and top > m:
+            w = (top - m) / 10.0
+            emit(p, "perplexity", "perplexity_histogram", None, json.dumps(
+                [{"bin": b, "bin_start": m + b * w, "bin_end": m + (b + 1) * w,
+                  "count": r[f"__h{b}"]} for b in range(10) if r[f"__h{b}"] > 0],
+                separators=(",", ":")))
     return out
 
 
@@ -313,21 +305,6 @@ def _doc_counts(rows: list[dict], parts: list[str]) -> dict[str, tuple[int, int]
            for r in rows if r["metric_name"] in ("count", "kept_count")}
     return {p: (got.get((p, "count"), 0), got.get((p, "kept_count"), 0))
             for p in parts}
-
-
-def _write_by_partition(df: DataFrame, path: str) -> None:
-    """Write a metadata frame under `path`, one partition_key=<partition>
-    dir per partition, replacing only the partitions it holds (dynamic
-    overwrite). One writer task: the rows are metadata-scale, so the
-    commit moves one file per partition."""
-    (
-        df.withColumn("partition_key", F.col("partition"))
-        .coalesce(1)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("partition_key")
-        .parquet(path)
-    )
 
 
 #: Spark's default for each conf run_pipeline overrides, restored as an
@@ -593,13 +570,11 @@ def run_pipeline(
                 pages = pages.hint("rebalance", "dt")
             docs = transform_pages(spark, pages, cfg, run_id)
             # dynamic overwrite replaces only the dts the docs hold, so a
-            # dt whose input became empty would keep its old outputs:
-            # clear the chunk's own dts, which this chunk rewrites
+            # dt whose input became empty would keep its old docs: clear
+            # the chunk's own dts, which this chunk rewrites
             for d in chunk:
-                for sub in (os.path.join(docs_dir, f"dt={d}"),
-                            os.path.join(metrics_dir, f"partition_key={d}"),
-                            os.path.join(events_dir, f"partition_key={d}")):
-                    shutil.rmtree(sub, ignore_errors=True)
+                shutil.rmtree(os.path.join(docs_dir, f"dt={d}"),
+                              ignore_errors=True)
             catalog.write_partitioned(docs, docs_dir, "dt")
         t0 = _tick("transform_write", t0)
 
@@ -615,19 +590,18 @@ def run_pipeline(
         }
 
         # metrics from the written output (columnar projection; avoids
-        # recomputing UDF scores and avoids caching the full text at scale).
-        # No cache on the narrow read-back: its two aggregation passes
-        # (scalars+buckets, histogram) re-scan cheap columnar parquet,
-        # and a persist costs a full materialization job plus cache
-        # memory — measured 1-4s SLOWER than the double scan at 1M docs.
+        # recomputing UDF scores and caching the full text at scale),
+        # read with the docs table's known schema so no job infers it:
+        # the chunk's only Spark job after its docs write.
         with _session_conf(spark, meta_conf):
-            docs_back = spark.read.parquet(docs_dir).filter(
-                F.col("dt").cast("string").isin(chunk)
-            ).select("dt", "keep", "drop_reasons", "lang", "perplexity",
-                     F.col("scrubbed_text").isNotNull().alias("__has_text"))
+            docs_back = (
+                spark.read.schema(DOCS_READ_DDL).parquet(docs_dir)
+                .filter(F.col("dt").cast("string").isin(chunk))
+                .select("dt", "keep", "drop_reasons", "lang", "perplexity",
+                        F.col("scrubbed_text").isNotNull().alias("__has_text"))
+            )
             metric_rows = partition_metrics(docs_back, run_id)
-        _write_by_partition(
-            catalog.rows_frame(spark, metric_rows, METRICS_DDL), metrics_dir)
+        catalog.replace_partitions(metrics_dir, metric_rows, METRICS_DDL, chunk)
         t0 = _tick("metrics", t0)
 
         # Everything after the metrics write is a function of the stored
@@ -651,15 +625,14 @@ def run_pipeline(
             if e["partition"] in in_chunk
         ]
         if ci == 0:
-            ev_mod.write_schema_snapshot(spark, docs, schema_dir, run_id)
+            ev_mod.write_schema_snapshot(docs, schema_dir, run_id)
             events += ev_mod.schema_change_events(schema_dir, run_id)
         # one UTC instant per chunk, shared by the events, the hook dicts
         # and the lineage rows
         ts = dt.datetime.now(dt.timezone.utc)
         for e in events:
             e["ts"] = ts
-        _write_by_partition(
-            catalog.rows_frame(spark, events, ev_mod.EVENTS_DDL), events_dir)
+        catalog.replace_partitions(events_dir, events, ev_mod.EVENTS_DDL, chunk)
         if hooks:
             # alert on THIS run's events, not a read-back of the events
             # dir: the '__schema__' partition is only overwritten when a
@@ -678,8 +651,7 @@ def run_pipeline(
              "doc_count": counts[p][0], "kept_count": counts[p][1], "ts": ts}
             for p in chunk
         ]
-        _write_by_partition(
-            catalog.rows_frame(spark, lineage, LINEAGE_DDL), lineage_dir)
+        catalog.replace_partitions(lineage_dir, lineage, LINEAGE_DDL, chunk)
         t0 = _tick("counts_lineage", t0)
 
         now = dt.datetime.now(dt.timezone.utc)
@@ -689,7 +661,6 @@ def run_pipeline(
         # a full run once caps are lifted — a 'done' commit would
         # silently freeze the partition at ~fraction of its docs forever
         manifest.commit_partitions(
-            spark,
             output_root,
             run_id,
             [

@@ -13,9 +13,10 @@ relies on:
    `processed_partitions` parquet manifest (sources/manifest.py) and
    filesystem listing for partition discovery.
 
-Writes use dynamic partition overwrite, which is the idempotence
-primitive Iceberg's `REPLACE PARTITIONS` would give us: re-running a
-partition replaces exactly that partition's files.
+Writes replace whole partitions, the idempotence primitive Iceberg's
+`REPLACE PARTITIONS` would give us: by Spark for the docs table
+(`write_partitioned`), on the driver for metadata rows
+(`replace_partitions`).
 """
 
 from __future__ import annotations
@@ -23,6 +24,8 @@ from __future__ import annotations
 import logging
 import os
 import re
+import shutil
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -57,6 +60,17 @@ def write_partitioned(df: DataFrame, path: str, partition_col: str = "dt") -> No
     )
 
 
+def arrow_schema(ddl: str):
+    """A flat DDL (`name type, ...`) as Spark maps it to Arrow, built
+    without a session: timestamps are UTC instants."""
+    import pyarrow as pa
+
+    types = {"string": pa.string(), "long": pa.int64(), "double": pa.float64(),
+             "boolean": pa.bool_(), "timestamp": pa.timestamp("us", tz="UTC")}
+    return pa.schema([(n, types[t]) for n, t in
+                      (c.split() for c in ddl.split(","))])
+
+
 def rows_frame(spark: SparkSession, rows: list[dict], ddl: str) -> DataFrame:
     """Driver-side rows (dicts keyed by column name; a missing key is
     NULL) as a frame of schema `ddl`, through a typed Arrow table: Spark
@@ -66,12 +80,56 @@ def rows_frame(spark: SparkSession, rows: list[dict], ddl: str) -> DataFrame:
     tz-aware or naive: pyarrow keeps a datetime's wall clock and drops
     its offset."""
     import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import StructType
 
-    schema = StructType.fromDDL(ddl)
-    table = pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
-    return spark.createDataFrame(table, schema=schema)
+    table = pa.Table.from_pylist(rows, schema=arrow_schema(ddl))
+    return spark.createDataFrame(table, schema=StructType.fromDDL(ddl))
+
+
+def write_rows(path: str, rows: list[dict], ddl: str) -> None:
+    """Add one parquet file of `rows` (schema `ddl`, as rows_frame takes
+    them) to the directory `path`, renamed into place once whole.
+    Timestamps are INT96, as Spark's writer stores them, so Spark,
+    pyarrow and DuckDB read both writers' files as one column."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(path, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    # hidden and not *.parquet: no reader or glob picks up a partial file
+    tmp = os.path.join(path, f".{name}.tmp")
+    pq.write_table(pa.Table.from_pylist(rows, schema=arrow_schema(ddl)), tmp,
+                   use_deprecated_int96_timestamps=True)
+    os.rename(tmp, os.path.join(path, name))
+
+
+def replace_partitions(path: str, rows: list[dict], ddl: str,
+                       parts: list[str]) -> None:
+    """Replace the `partition_key=<p>` dir under `path` of each p in
+    `parts` or in the rows' `partition` column with one file of its rows
+    (write_rows), or none when it has no rows; other dirs are untouched.
+    Each dir is written under a hidden name (Spark and pyarrow skip
+    '.'-names), then the live one is renamed aside, the new one renamed
+    in, the old one deleted. Hidden dirs a crashed call left (a DuckDB
+    glob would read them) are deleted first."""
+    os.makedirs(path, exist_ok=True)
+    for name in os.listdir(path):
+        if name.startswith((".new-", ".old-")):
+            shutil.rmtree(os.path.join(path, name), ignore_errors=True)
+    by_part = {p: [] for p in parts}
+    for r in rows:
+        by_part.setdefault(r["partition"], []).append(r)
+    for p, part_rows in by_part.items():
+        live = os.path.join(path, f"partition_key={p}")
+        new, old = (os.path.join(path, f".{k}-{uuid.uuid4().hex}")
+                    for k in ("new", "old"))
+        if part_rows:
+            write_rows(new, part_rows, ddl)
+        if os.path.isdir(live):
+            os.rename(live, old)
+        if part_rows:
+            os.rename(new, live)
+        shutil.rmtree(old, ignore_errors=True)
 
 
 #: common partition-column name patterns, in reference order

@@ -5,8 +5,9 @@ Recasts baselinr's incremental state store
 baselinr_table_state DDL /root/reference/baselinr/storage/schema.sql:69-83)
 at partition granularity: one row per (partition, run) with status +
 counts; the *latest* row per partition wins (the reference upserts; we
-append + resolve latest by completed_at, which is the Iceberg-friendly
-append-only pattern — MERGE INTO when an Iceberg catalog is present).
+append one parquet file per commit, written on the driver, and resolve
+latest by completed_at, which is the Iceberg-friendly append-only
+pattern — MERGE INTO when an Iceberg catalog is present).
 
 Resume = the planner (plans/planner.py) reads the latest state per
 partition (`latest_rows`, on the driver) and skips the ones already
@@ -17,8 +18,6 @@ from checkpoint with per-partition lineage").
 from __future__ import annotations
 
 import os
-
-from pyspark.sql import SparkSession
 
 from . import catalog
 
@@ -33,27 +32,19 @@ def manifest_path(output_root: str) -> str:
     return os.path.join(output_root, "processed_partitions")
 
 
-def arrow_schema():
-    """MANIFEST_DDL as Spark maps it to Arrow, built without a session."""
-    import pyarrow as pa
-
-    types = {"string": pa.string(), "long": pa.int64(), "double": pa.float64(),
-             "timestamp": pa.timestamp("us", tz="UTC")}
-    return pa.schema([(n, types[t]) for n, t in
-                      (c.split() for c in MANIFEST_DDL.split(","))])
-
-
 def latest_rows(output_root: str) -> list[dict]:
     """The latest manifest row of each partition (upsert resolution), in
     partition order: greatest `completed_at`, then `run_id`, NULL last.
-    Read on the driver with pyarrow under `arrow_schema()`: a column an
-    older file lacks reads NULL; `completed_at` is a UTC datetime."""
+    Read on the driver with pyarrow under MANIFEST_DDL's Arrow schema: a
+    column an older file lacks reads NULL; `completed_at` is a UTC
+    datetime."""
     import pyarrow.dataset as ds
 
     path = manifest_path(output_root)
     if not os.path.isdir(path):
         return []
-    rows = ds.dataset(path, schema=arrow_schema(), format="parquet").to_table()
+    rows = ds.dataset(path, schema=catalog.arrow_schema(MANIFEST_DDL),
+                      format="parquet").to_table()
     latest = {}
     for r in sorted(rows.to_pylist(), key=lambda r: (
             r["completed_at"] is not None, r["completed_at"] or 0,
@@ -62,21 +53,17 @@ def latest_rows(output_root: str) -> list[dict]:
     return [latest[p] for p in sorted(latest)]
 
 
-def commit_partitions(
-    spark: SparkSession,
-    output_root: str,
-    run_id: str,
-    rows: list[dict],
-) -> None:
-    """Append manifest rows (one per completed partition). Called only
-    *after* the partition's data + metrics writes succeeded, so a crash
-    before this point leaves the partition un-manifested → re-done on
-    resume (idempotent thanks to dynamic partition overwrite). Each row
-    names `partition` and `completed_at` (a UTC instant); `status`
-    defaults to 'done', and a missing field is NULL."""
+def commit_partitions(output_root: str, run_id: str, rows: list[dict]) -> None:
+    """Append manifest rows (one per completed partition) as one parquet
+    file, written on the driver. Called only *after* the partition's
+    data + metrics writes succeeded, so a crash before this point leaves
+    the partition un-manifested → re-done on resume (idempotent thanks to
+    partition replacement). Each row names `partition` and
+    `completed_at` (a UTC instant); `status` defaults to 'done', and a
+    missing field is NULL."""
     if not rows:
         return
-    df = catalog.rows_frame(
-        spark, [{"status": "done", **r, "run_id": run_id} for r in rows],
+    catalog.write_rows(
+        manifest_path(output_root),
+        [{"status": "done", **r, "run_id": run_id} for r in rows],
         MANIFEST_DDL)
-    df.coalesce(1).write.mode("append").parquet(manifest_path(output_root))

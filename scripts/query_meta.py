@@ -435,7 +435,8 @@ def build_parser() -> argparse.ArgumentParser:
 
 def main(argv: list[str] | None = None, spark: SparkSession | None = None):
     args = build_parser().parse_args(argv)
-    own_session = spark is None
+    # `plan` reads only with pyarrow: it starts no Spark session
+    own_session = spark is None and args.command != "plan"
     if own_session:
         from baselinr_spark.session import build_session
 

@@ -87,7 +87,7 @@ def test_manifest_instants_in_non_utc_session(spark, tmp_path):
     try:
         for part, ts in (("2025-06-01", now.replace(tzinfo=None)),
                          ("2025-06-02", now)):
-            manifest.commit_partitions(spark, str(tmp_path), "run-tz", [
+            manifest.commit_partitions(str(tmp_path), "run-tz", [
                 {"partition": part, "completed_at": ts}])
         got = spark.read.parquet(manifest.manifest_path(str(tmp_path))).select(
             "partition", F.unix_micros("completed_at").alias("us")).collect()
@@ -96,12 +96,63 @@ def test_manifest_instants_in_non_utc_session(spark, tmp_path):
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import StructType
 
-    # the driver-side reader's schema is the one Spark maps the DDL to
-    assert manifest.arrow_schema() == to_arrow_schema(
-        StructType.fromDDL(manifest.MANIFEST_DDL))
+    from baselinr_spark.plans.events import EVENTS_DDL
+    from baselinr_spark.plans.pipeline import LINEAGE_DDL, METRICS_DDL
+
+    # the driver-side writers' and reader's schema is the one Spark maps
+    # each DDL to
+    for ddl in (manifest.MANIFEST_DDL, METRICS_DDL, EVENTS_DDL, LINEAGE_DDL):
+        assert catalog.arrow_schema(ddl) == to_arrow_schema(
+            StructType.fromDDL(ddl))
     assert [r["completed_at"] for r in manifest.latest_rows(str(tmp_path))] \
         == [now, now]
     want_us = int(now.timestamp()) * 1_000_000
     assert sorted(r["partition"] for r in got) == ["2025-06-01", "2025-06-02"]
     for r in got:
         assert abs(r["us"] - want_us) <= 1_000_000, r
+
+
+def test_replace_partitions_swaps_only_listed_dirs(tmp_path):
+    """Only the listed partitions and those the rows hold change: a
+    listed one without rows is removed, an unlisted one is kept. A
+    hidden dir left by an interrupted write is not read, and the next
+    replace deletes it."""
+    import datetime as dt
+
+    import pyarrow.dataset as ds
+
+    ddl = "partition string, v long, ts timestamp"
+    path = str(tmp_path / "t")
+    ts = dt.datetime(2025, 6, 1, 12, tzinfo=dt.timezone.utc)
+    catalog.replace_partitions(path, [
+        {"partition": p, "v": i, "ts": ts}
+        for i, p in enumerate(("a", "a", "b", "c"))], ddl, ["a", "b"])
+    # a crash mid-swap leaves a hidden dir behind
+    leftover = os.path.join(path, ".new-crashed")
+    os.makedirs(leftover)
+    pq.write_table(pa.table({"partition": ["z"], "v": [99]}),
+                   os.path.join(leftover, "part-0.parquet"))
+    t = ds.dataset(path, format="parquet", partitioning="hive").to_table()
+    assert sorted(t.column("v").to_pylist()) == [0, 1, 2, 3]
+    kept = sorted(os.listdir(os.path.join(path, "partition_key=c")))
+
+    catalog.replace_partitions(path, [
+        {"partition": "a", "v": 10, "ts": ts},
+        {"partition": "__schema__", "v": 11, "ts": ts}], ddl, ["a", "b"])
+
+    assert sorted(os.listdir(path)) == [
+        "partition_key=__schema__", "partition_key=a", "partition_key=c"]
+    assert sorted(os.listdir(os.path.join(path, "partition_key=c"))) == kept
+    for d in ("partition_key=a", "partition_key=__schema__"):
+        [f] = os.listdir(os.path.join(path, d))
+        assert f.startswith("part-") and f.endswith(".parquet")
+    t = ds.dataset(path, format="parquet", partitioning="hive").to_table()
+    assert sorted(zip(t.column("partition_key").to_pylist(),
+                      t.column("v").to_pylist())) == [
+        ("__schema__", 11), ("a", 10), ("c", 3)]
+    # timestamps are stored as INT96 and read back as the same instant
+    f = os.path.join(path, "partition_key=a",
+                     os.listdir(os.path.join(path, "partition_key=a"))[0])
+    assert pq.ParquetFile(f).schema.column(2).physical_type == "INT96"
+    assert pq.read_table(f).column("ts").to_pylist() == [
+        ts.replace(tzinfo=None)]

@@ -461,7 +461,7 @@ def test_event_nulls_without_arrow(spark, warehouse, tmp_path):
     out = str(tmp_path / "out")
     # an earlier run's snapshot with another schema, so this run's first
     # chunk emits schema_change events
-    write_schema_snapshot(spark, spark.createDataFrame([(1,)], "legacy long"),
+    write_schema_snapshot(spark.createDataFrame([(1,)], "legacy long"),
                           os.path.join(out, "schema"), "run-0")
     key = "spark.sql.execution.arrow.pyspark.enabled"
     old = spark.conf.get(key)
@@ -595,3 +595,41 @@ def test_small_chunk_udf_stage_on_every_core(spark, tmp_path, monkeypatch):
         files = [f for f in os.listdir(os.path.join(out, "docs", f"dt={p}"))
                  if f.endswith(".parquet")]
         assert len(files) == 1, (p, files)
+
+
+def test_one_spark_job_after_each_docs_write(spark, warehouse, tmp_path,
+                                             monkeypatch):
+    """From the end of each chunk's docs write to the next chunk's start
+    (or the run's end), a checkpoint_every=3 run makes exactly one Spark
+    job, the metrics aggregation: every metadata sink is written on the
+    driver. The jobs are counted under a job group per chunk, set when
+    its docs write returns."""
+    import uuid
+
+    from baselinr_spark.plans import pipeline
+    from baselinr_spark.sources import catalog
+
+    sc = spark.sparkContext
+    tag, groups = uuid.uuid4().hex, []
+    write, layout = catalog.write_partitioned, pipeline._chunk_layout
+
+    def after_write(df, path, *args):
+        write(df, path, *args)
+        groups.append(f"after-docs-{tag}-{len(groups)}")
+        sc.setJobGroup(groups[-1], "after the chunk's docs write")
+
+    def chunk_start(*args):
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        return layout(*args)
+
+    monkeypatch.setattr(catalog, "write_partitioned", after_write)
+    monkeypatch.setattr(pipeline, "_chunk_layout", chunk_start)
+    try:
+        summary = run_pipeline(spark, warehouse, str(tmp_path / "out"),
+                               run_id="one-job", checkpoint_every=3)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n_chunks = -(-len(summary["partitions_processed"]) // 3)
+    assert len(groups) == n_chunks > 1
+    st = sc.statusTracker()
+    assert [len(st.getJobIdsForGroup(g)) for g in groups] == [1] * n_chunks

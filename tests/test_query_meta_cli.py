@@ -89,3 +89,18 @@ def test_query_meta_recommend(spark, warehouse, out_root):
     assert {r["column_name"] for r in conf} >= cols
     assert all(r["confidence_level"] in ("high", "medium", "low")
                for r in conf)
+
+
+def test_query_meta_plan_starts_no_session(warehouse, out_root, monkeypatch):
+    """`plan` reads only with pyarrow: main builds no Spark session for
+    it (a session build here raises)."""
+    from baselinr_spark import session
+    from baselinr_spark.sources import catalog
+
+    def no_session(*args, **kwargs):
+        raise AssertionError("query_meta plan built a Spark session")
+
+    monkeypatch.setattr(session, "build_session", no_session)
+    rows = query_meta.main(["--output", out_root, "plan", "--input", warehouse])
+    assert [r["partition"] for r in rows] == catalog.list_partitions(warehouse)
+    assert {r["action"] for r in rows} == {"run"}
