@@ -10,10 +10,12 @@ One declarative pass per chunk of partitions:
       → clear the chunk's dts from docs/ (a dt whose input became empty
         keeps no stale docs)
       → write docs/ (dynamic partition overwrite = idempotent)
-    read back docs (cheap columnar projection, known schema)
+    read back the chunk's docs dirs (cheap columnar projection, known
+    schema, listed on the driver)
       → ONE collected aggregation (per-dt scalars, percentiles, PSI bucket
-        counts and histogram bin counts between each dt's min/max),
-        shaped on the driver into long-format rows → metrics/
+        counts and histogram bin counts between each dt's min/max, read
+        from the docs files' footers), shaped on the driver into
+        long-format rows → metrics/
     read the stored metric rows ONCE on the driver (pyarrow); plain
     Python over those rows derives
       → PSI drift vs predecessor cohorts, validation and anomaly
@@ -46,7 +48,7 @@ import shutil
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT_CONFIG, RULE_NAMES, FilterConfig
@@ -63,8 +65,8 @@ _log = logging.getLogger(__name__)
 #: (/root/reference/baselinr/config/schema.py:898)
 MAX_PARTITIONS_PER_RUN = 64
 
-#: shuffle width for the metrics aggregation, whose output is
-#: O(|chunk| x metrics) rows
+#: shuffle width for the metrics aggregation: its map side aggregates
+#: partially, so it shuffles and outputs O(|chunk| x metrics) rows
 META_SHUFFLE_PARTITIONS = 8
 
 DOCS_COLS = (
@@ -175,7 +177,8 @@ def transform_pages(
     return df.select(*DOCS_COLS, *rule_cols, "dt")
 
 
-def partition_metrics(docs: DataFrame, run_id: str) -> list[dict]:
+def partition_metrics(docs: DataFrame, run_id: str,
+                      bounds: dict) -> list[dict]:
     """Long-format per-partition metric rows of the docs read-back
     (FIXTURES.md §2 `metrics` shape, METRICS_DDL).
 
@@ -186,8 +189,11 @@ def partition_metrics(docs: DataFrame, run_id: str) -> list[dict]:
     sketch a per-quantile call builds), the perplexity min/max, the
     fixed PSI bucket counts, and the equi-width perplexity histogram's
     bin counts (reference semantics: 10 bins over [min, max], bin i =
-    [min+i·w, min+(i+1)·w), the last closed), binned by a window's
-    per-dt min/max that shares the groupBy's shuffle: one Spark job.
+    [min+i·w, min+(i+1)·w), the last closed), binned by each
+    partition's perplexity (min, max) in `bounds` (the docs files'
+    footer statistics: catalog.column_bounds). A partition whose bounds
+    are missing or differ from the aggregation's own min/max is binned
+    again by a second aggregation over its docs.
     Each partition gets every scalar, rule_fire_rate:* and lang_frac:*
     row and four percentile rows, NULL where there is no value; a
     ppl_bucket:b row only where its count is > 0; and one
@@ -212,13 +218,25 @@ def partition_metrics(docs: DataFrame, run_id: str) -> list[dict]:
     pq_names = ("p25", "p50", "p75", "p95")
     x = F.col("perplexity").cast("double")
     bucket = psi_bucket_expr()
-    by_dt = Window.partitionBy(p_col)
-    docs = docs.select("*", F.min(x).over(by_dt).alias("__lo"),
-                       F.max(x).over(by_dt).alias("__hi"))
-    lo, hi = F.col("__lo"), F.col("__hi")
-    # the same double arithmetic as the driver's bin edges below
-    bin_ = F.when(hi > lo, F.least(
-        F.floor((x - lo) / ((hi - lo) / 10.0)).cast("int"), F.lit(9)))
+
+    def ranges(min_max):
+        # (min, width) of each partition with a histogram
+        return {p: (m, (t - m) / 10.0) for p, (m, t) in min_max
+                if t is not None and t > m}
+
+    def bin_counts(rng):
+        # count per bin, each partition's min and width as literal maps
+        if rng:
+            lo, w = (F.create_map(*[F.lit(v) for p, mw in rng.items()
+                                    for v in (p, mw[i])])[p_col]
+                     for i in (0, 1))
+            bin_ = F.least(F.floor((x - lo) / w).cast("int"), F.lit(9))
+        else:
+            bin_ = F.lit(None)
+        return [F.count(F.when(bin_ == b, F.lit(1))).alias(f"__h{b}")
+                for b in range(10)]
+
+    guess = ranges(bounds.items())
     agg = docs.groupBy(p_col.alias("partition")).agg(
         *[e.alias(n) for n, e in scalars.items()],
         F.percentile_approx("perplexity", [0.25, 0.5, 0.75, 0.95]).alias("__pq"),
@@ -226,9 +244,20 @@ def partition_metrics(docs: DataFrame, run_id: str) -> list[dict]:
         F.max(x).alias("__max"),
         *[F.count(F.when(bucket == b, F.lit(1))).alias(f"__b{b}")
           for b in range(10)],
-        *[F.count(F.when(bin_ == b, F.lit(1))).alias(f"__h{b}")
-          for b in range(10)],
+        *bin_counts(guess),
     ).collect()
+
+    rng = ranges((r["partition"], (r["__min"], r["__max"])) for r in agg)
+    by_p = {r["partition"]: r for r in agg}
+    hist = {p: by_p[p] for p, mw in rng.items() if mw == guess.get(p)}
+    redo = {p: mw for p, mw in rng.items() if p not in hist}
+    if redo:
+        # bounds missing or stale: bin those partitions again by the
+        # aggregation's own min/max
+        hist.update((r["partition"], r) for r in (
+            docs.filter(p_col.isin(list(redo)))
+            .groupBy(p_col.alias("partition")).agg(*bin_counts(redo))
+            .collect()))
 
     profiled_at = dt.datetime.now(dt.timezone.utc)
     out = []
@@ -248,12 +277,11 @@ def partition_metrics(docs: DataFrame, run_id: str) -> list[dict]:
         for b in range(10):
             if r[f"__b{b}"] > 0:
                 emit(p, "perplexity", f"ppl_bucket:{b}", r[f"__b{b}"])
-        m, top = r["__min"], r["__max"]
-        if top is not None and top > m:
-            w = (top - m) / 10.0
+        if p in hist:
+            (m, w), h = rng[p], hist[p]
             emit(p, "perplexity", "perplexity_histogram", None, json.dumps(
                 [{"bin": b, "bin_start": m + b * w, "bin_end": m + (b + 1) * w,
-                  "count": r[f"__h{b}"]} for b in range(10) if r[f"__h{b}"] > 0],
+                  "count": h[f"__h{b}"]} for b in range(10) if h[f"__h{b}"] > 0],
                 separators=(",", ":")))
     return out
 
@@ -315,6 +343,7 @@ _CONF_DEFAULTS = {
     "spark.sql.adaptive.coalescePartitions.minPartitionSize": str(1 << 20),
     "spark.sql.shuffle.partitions": "200",
     "spark.sql.adaptive.enabled": "true",
+    "spark.sql.sources.parallelPartitionDiscovery.threshold": "32",
 }
 
 
@@ -578,29 +607,40 @@ def run_pipeline(
             catalog.write_partitioned(docs, docs_dir, "dt")
         t0 = _tick("transform_write", t0)
 
+        # metrics from the written output (columnar projection; avoids
+        # recomputing UDF scores and caching the full text at scale): the
+        # chunk's only Spark job after its docs write. Only the chunk's
+        # dt dirs are read, with the docs table's known schema, so no job
+        # infers it. The histogram is binned by the perplexity bounds the
+        # docs write stored in its footers.
+        dirs = [d for d in (os.path.join(docs_dir, f"dt={p}") for p in chunk)
+                if os.path.isdir(d)]
         # The metrics aggregation's output is metadata-scale (O(|chunk| x
         # metrics) rows): 32+ shuffle partitions and AQE's per-stage
         # re-optimization rounds are pure scheduling overhead there
         # (measured ~11s of fixed cost per chunk at local[32] regardless
         # of SF — guide §1.2 step 3). Pin a small shuffle width and plan
-        # it in one pass; the caller's values return after it.
+        # it in one pass, and list the chunk's dirs on the driver (past
+        # the threshold Spark lists them with a job); the caller's values
+        # return after it.
         meta_conf = {
             "spark.sql.shuffle.partitions": str(META_SHUFFLE_PARTITIONS),
             "spark.sql.adaptive.enabled": "false",
+            "spark.sql.sources.parallelPartitionDiscovery.threshold":
+                str(max(32, len(dirs))),
         }
-
-        # metrics from the written output (columnar projection; avoids
-        # recomputing UDF scores and caching the full text at scale),
-        # read with the docs table's known schema so no job infers it:
-        # the chunk's only Spark job after its docs write.
-        with _session_conf(spark, meta_conf):
-            docs_back = (
-                spark.read.schema(DOCS_READ_DDL).parquet(docs_dir)
-                .filter(F.col("dt").cast("string").isin(chunk))
-                .select("dt", "keep", "drop_reasons", "lang", "perplexity",
-                        F.col("scrubbed_text").isNotNull().alias("__has_text"))
-            )
-            metric_rows = partition_metrics(docs_back, run_id)
+        metric_rows = []
+        if dirs:
+            with _session_conf(spark, meta_conf):
+                docs_back = (
+                    spark.read.schema(DOCS_READ_DDL)
+                    .option("basePath", docs_dir).parquet(*dirs)
+                    .select("dt", "keep", "drop_reasons", "lang", "perplexity",
+                            F.col("scrubbed_text").isNotNull().alias("__has_text"))
+                )
+                metric_rows = partition_metrics(
+                    docs_back, run_id,
+                    catalog.column_bounds(docs_dir, "perplexity", chunk))
         catalog.replace_partitions(metrics_dir, metric_rows, METRICS_DDL, chunk)
         t0 = _tick("metrics", t0)
 

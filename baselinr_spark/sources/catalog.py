@@ -108,28 +108,53 @@ def replace_partitions(path: str, rows: list[dict], ddl: str,
     """Replace the `partition_key=<p>` dir under `path` of each p in
     `parts` or in the rows' `partition` column with one file of its rows
     (write_rows), or none when it has no rows; other dirs are untouched.
-    Each dir is written under a hidden name (Spark and pyarrow skip
-    '.'-names), then the live one is renamed aside, the new one renamed
-    in, the old one deleted. Hidden dirs a crashed call left (a DuckDB
-    glob would read them) are deleted first."""
+    Each dir is written under a hidden staging dir, `.stage-*/new/`, then
+    the live one is renamed aside into `.stage-*/old/`, the new one
+    renamed in, and the staging dir deleted. Spark and pyarrow skip
+    '.'-names, and a staged file sits two dirs below `path`, so no
+    `<path>/*/*.parquet` glob reads one either. Staging dirs a crashed
+    call left are deleted first."""
     os.makedirs(path, exist_ok=True)
     for name in os.listdir(path):
-        if name.startswith((".new-", ".old-")):
+        if name.startswith(".stage-"):
             shutil.rmtree(os.path.join(path, name), ignore_errors=True)
     by_part = {p: [] for p in parts}
     for r in rows:
         by_part.setdefault(r["partition"], []).append(r)
+    stage = os.path.join(path, f".stage-{uuid.uuid4().hex}")
     for p, part_rows in by_part.items():
-        live = os.path.join(path, f"partition_key={p}")
-        new, old = (os.path.join(path, f".{k}-{uuid.uuid4().hex}")
-                    for k in ("new", "old"))
+        name = f"partition_key={p}"
+        live = os.path.join(path, name)
+        new, old = (os.path.join(stage, k, name) for k in ("new", "old"))
         if part_rows:
             write_rows(new, part_rows, ddl)
         if os.path.isdir(live):
+            os.makedirs(os.path.dirname(old), exist_ok=True)
             os.rename(live, old)
         if part_rows:
             os.rename(new, live)
-        shutil.rmtree(old, ignore_errors=True)
+    shutil.rmtree(stage, ignore_errors=True)
+
+
+def column_bounds(path: str, column: str, parts: list[str]) -> dict[str, tuple]:
+    """(min, max) of the flat column `column` in each `dt=<p>` dir under
+    `path`, from the row-group statistics its writer stored in the
+    parquet footers: driver-side, no data read. A partition without such
+    statistics is left out. They can be partial or inexact (a row group
+    written without them, NaN), so callers check them against a computed
+    min/max."""
+    import pyarrow.dataset as ds
+
+    out = {}
+    for p in parts:
+        d = os.path.join(path, f"dt={p}")
+        if not os.path.isdir(d):
+            continue
+        stats = [s for f in ds.dataset(d, format="parquet").get_fragments()
+                 for rg in f.row_groups if (s := rg.statistics.get(column))]
+        if stats:
+            out[p] = (min(s["min"] for s in stats), max(s["max"] for s in stats))
+    return out
 
 
 #: common partition-column name patterns, in reference order

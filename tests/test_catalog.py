@@ -115,10 +115,11 @@ def test_manifest_instants_in_non_utc_session(spark, tmp_path):
 def test_replace_partitions_swaps_only_listed_dirs(tmp_path):
     """Only the listed partitions and those the rows hold change: a
     listed one without rows is removed, an unlisted one is kept. A
-    hidden dir left by an interrupted write is not read, and the next
-    replace deletes it."""
+    staging dir left by an interrupted write is not read, not even by a
+    DuckDB `*/*.parquet` glob, and the next replace deletes it."""
     import datetime as dt
 
+    import duckdb
     import pyarrow.dataset as ds
 
     ddl = "partition string, v long, ts timestamp"
@@ -127,13 +128,16 @@ def test_replace_partitions_swaps_only_listed_dirs(tmp_path):
     catalog.replace_partitions(path, [
         {"partition": p, "v": i, "ts": ts}
         for i, p in enumerate(("a", "a", "b", "c"))], ddl, ["a", "b"])
-    # a crash mid-swap leaves a hidden dir behind
-    leftover = os.path.join(path, ".new-crashed")
-    os.makedirs(leftover)
-    pq.write_table(pa.table({"partition": ["z"], "v": [99]}),
-                   os.path.join(leftover, "part-0.parquet"))
+    # a crash mid-swap leaves a staging dir behind
+    for k in ("new", "old"):
+        leftover = os.path.join(path, ".stage-crashed", k, "partition_key=a")
+        os.makedirs(leftover)
+        pq.write_table(pa.table({"partition": ["a"], "v": [99]}),
+                       os.path.join(leftover, "part-0.parquet"))
     t = ds.dataset(path, format="parquet", partitioning="hive").to_table()
     assert sorted(t.column("v").to_pylist()) == [0, 1, 2, 3]
+    assert duckdb.sql(f"select sum(v) from read_parquet('{path}/*/*.parquet')"
+                      ).fetchall() == [(6,)]
     kept = sorted(os.listdir(os.path.join(path, "partition_key=c")))
 
     catalog.replace_partitions(path, [
@@ -156,3 +160,29 @@ def test_replace_partitions_swaps_only_listed_dirs(tmp_path):
     assert pq.ParquetFile(f).schema.column(2).physical_type == "INT96"
     assert pq.read_table(f).column("ts").to_pylist() == [
         ts.replace(tzinfo=None)]
+
+
+def test_column_bounds_from_footers(tmp_path):
+    """A partition's (min, max) from its files' row-group statistics:
+    row groups without a value or without statistics, and hidden files,
+    are skipped; a partition with no statistics or no dir is left out."""
+    root = str(tmp_path)
+    for p in "abce":
+        os.makedirs(os.path.join(root, f"dt={p}"))
+
+    def put(p, name, table, **kw):
+        pq.write_table(table, os.path.join(root, f"dt={p}", name), **kw)
+
+    put("a", "p1.parquet", pa.table({"x": [1.0, 5.0, 7.0],
+                                     "perplexity": [3.0, None, 8.5]}),
+        row_group_size=1)
+    put("a", "p2.parquet", pa.table({"x": [1.0], "perplexity": [-2.5]}))
+    put("a", ".p3.parquet", pa.table({"x": [1.0], "perplexity": [99.0]}))
+    put("b", "p.parquet", pa.table({"perplexity": [1.0, 2.0]}),
+        write_statistics=False)
+    put("c", "p.parquet", pa.table({"perplexity": pa.array([None], pa.float64())}))
+    put("e", "p1.parquet", pa.table({"perplexity": [4.0, 4.0]}))
+    put("e", "p2.parquet", pa.table({"perplexity": [9.0]}),
+        write_statistics=False)
+    assert catalog.column_bounds(root, "perplexity", list("abcde")) == {
+        "a": (-2.5, 8.5), "e": (4.0, 4.0)}

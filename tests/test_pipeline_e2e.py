@@ -597,13 +597,11 @@ def test_small_chunk_udf_stage_on_every_core(spark, tmp_path, monkeypatch):
         assert len(files) == 1, (p, files)
 
 
-def test_one_spark_job_after_each_docs_write(spark, warehouse, tmp_path,
-                                             monkeypatch):
-    """From the end of each chunk's docs write to the next chunk's start
-    (or the run's end), a checkpoint_every=3 run makes exactly one Spark
-    job, the metrics aggregation: every metadata sink is written on the
-    driver. The jobs are counted under a job group per chunk, set when
-    its docs write returns."""
+def _jobs_after_docs_writes(spark, monkeypatch, wh, out, **kw):
+    """Run the pipeline; return its summary and, per chunk, the number
+    of Spark jobs from the end of the chunk's docs write to the next
+    chunk's start (or the run's end), counted under a job group set
+    when the docs write returns."""
     import uuid
 
     from baselinr_spark.plans import pipeline
@@ -625,11 +623,93 @@ def test_one_spark_job_after_each_docs_write(spark, warehouse, tmp_path,
     monkeypatch.setattr(catalog, "write_partitioned", after_write)
     monkeypatch.setattr(pipeline, "_chunk_layout", chunk_start)
     try:
-        summary = run_pipeline(spark, warehouse, str(tmp_path / "out"),
-                               run_id="one-job", checkpoint_every=3)
+        summary = run_pipeline(spark, wh, out, **kw)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    n_chunks = -(-len(summary["partitions_processed"]) // 3)
-    assert len(groups) == n_chunks > 1
     st = sc.statusTracker()
-    assert [len(st.getJobIdsForGroup(g)) for g in groups] == [1] * n_chunks
+    return summary, [len(st.getJobIdsForGroup(g)) for g in groups]
+
+
+def test_one_spark_job_after_each_docs_write(spark, warehouse, tmp_path,
+                                             monkeypatch):
+    """A checkpoint_every=3 run makes exactly one Spark job after each
+    chunk's docs write, the metrics aggregation: every metadata sink is
+    written on the driver, and the read-back lists only the chunk's
+    dirs, however many dts the docs table already holds (past 32 dirs
+    Spark would list them with a job)."""
+    out = str(tmp_path / "out")
+    for i in range(40):
+        day = dt.date(2020, 1, 1) + dt.timedelta(days=i)
+        os.makedirs(os.path.join(out, "docs", f"dt={day}"))
+    summary, jobs = _jobs_after_docs_writes(
+        spark, monkeypatch, warehouse, out, run_id="one-job",
+        checkpoint_every=3)
+    n_chunks = -(-len(summary["partitions_processed"]) // 3)
+    assert len(jobs) == n_chunks > 1
+    assert jobs == [1] * n_chunks
+
+
+def test_one_spark_job_after_a_wide_chunk_write(spark, warehouse, tmp_path,
+                                                monkeypatch):
+    """A single chunk of more than 32 dts also makes one Spark job after
+    its docs write: its dirs are listed on the driver."""
+    import shutil
+
+    from baselinr_spark.sources import catalog
+
+    wh = str(tmp_path / "pages")
+    src = catalog.list_partitions(warehouse)
+    for i in range(36):
+        # one input file per dt, each copied under 3-4 dates
+        d = os.path.join(warehouse, f"dt={src[i % len(src)]}")
+        f = sorted(x for x in os.listdir(d) if x.endswith(".parquet"))[0]
+        day = dt.date(2023, 1, 1) + dt.timedelta(days=i)
+        os.makedirs(os.path.join(wh, f"dt={day}"))
+        shutil.copy(os.path.join(d, f), os.path.join(wh, f"dt={day}", f))
+    summary, jobs = _jobs_after_docs_writes(
+        spark, monkeypatch, wh, str(tmp_path / "out"), run_id="wide")
+    assert len(summary["partitions_processed"]) == 36
+    assert jobs == [1]
+
+
+def test_histogram_bounds_are_checked(spark, pipeline_result):
+    """partition_metrics bins the histogram by the bounds it is given
+    only where they equal its own perplexity min/max, so footer, missing
+    and stale bounds give the same rows; only the footer bounds do it in
+    one Spark job (AQE off, as run_pipeline runs it)."""
+    import uuid
+
+    from baselinr_spark.plans.pipeline import (
+        DOCS_READ_DDL,
+        _session_conf,
+        partition_metrics,
+    )
+    from baselinr_spark.sources import catalog
+
+    _, out_root, docs, _ = pipeline_result
+    docs_dir = os.path.join(out_root, "docs")
+    parts = sorted(docs["dt"].astype(str).unique())
+    back = spark.read.schema(DOCS_READ_DDL).parquet(docs_dir).select(
+        "dt", "keep", "drop_reasons", "lang", "perplexity",
+        F.col("scrubbed_text").isNotNull().alias("__has_text"))
+    footer = catalog.column_bounds(docs_dir, "perplexity", parts)
+    assert sorted(footer) == parts
+    stale = dict(footer, **{parts[0]: (footer[parts[0]][0] - 1.0,
+                                       footer[parts[0]][1])})
+    sc = spark.sparkContext
+    got = []
+    for bounds in (footer, {}, stale):
+        group = f"bounds-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "partition_metrics")
+        try:
+            with _session_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
+                rows = partition_metrics(back, "r", bounds)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        got.append((jobs, sorted(
+            (r["partition"], r["metric_name"], r["column_name"],
+             r["metric_value"], r["metric_json"]) for r in rows)))
+    assert [j for j, _ in got] == [1, 2, 2]
+    assert got[0][1] == got[1][1] == got[2][1]
+    assert sum(r[1] == "perplexity_histogram" for r in got[0][1]) == len(parts)
