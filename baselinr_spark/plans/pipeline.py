@@ -7,9 +7,8 @@ One declarative pass per chunk of partitions:
       → ONE fused scoring UDF: langid, perplexity, word/line features,
         scrub (broadcast models, Arrow batches)
       → rule booleans → keep/drop_reasons; scrubbed_text coalesced JVM-side
-      → clear the chunk's dts from docs/ (a dt whose input became empty
-        keeps no stale docs)
-      → write docs/ (dynamic partition overwrite = idempotent)
+      → write docs/ staged, then swap each chunk dt's dir in (a failed
+        write leaves docs/ as it was; an emptied dt keeps no stale docs)
     read back the chunk's docs dirs (cheap columnar projection, known
     schema, listed on the driver)
       → ONE collected aggregation (per-dt scalars, percentiles, PSI bucket
@@ -25,7 +24,9 @@ One declarative pass per chunk of partitions:
 
 The metrics aggregation is a chunk's only Spark job after its docs
 write: every metadata table is written on the driver with pyarrow
-(catalog.replace_partitions; the manifest appends one file).
+(catalog.replace_partitions; the manifest appends one file). A failure
+after the docs swap leaves new docs beside old metadata and fingerprint,
+until a reprocess_changed run redoes the dt.
 
 This mirrors the reference lifecycle (profile → write results → enrich →
 drift → events → state update, /root/reference/baselinr/cli.py:275-362 and
@@ -44,7 +45,6 @@ import json
 import logging
 import math
 import os
-import shutil
 import time
 import uuid
 
@@ -598,13 +598,7 @@ def run_pipeline(
             if chunk_skew != "split":
                 pages = pages.hint("rebalance", "dt")
             docs = transform_pages(spark, pages, cfg, run_id)
-            # dynamic overwrite replaces only the dts the docs hold, so a
-            # dt whose input became empty would keep its old docs: clear
-            # the chunk's own dts, which this chunk rewrites
-            for d in chunk:
-                shutil.rmtree(os.path.join(docs_dir, f"dt={d}"),
-                              ignore_errors=True)
-            catalog.write_partitioned(docs, docs_dir, "dt")
+            catalog.write_partitioned(docs, docs_dir, chunk)
         t0 = _tick("transform_write", t0)
 
         # metrics from the written output (columnar projection; avoids

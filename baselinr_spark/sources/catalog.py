@@ -13,10 +13,9 @@ relies on:
    `processed_partitions` parquet manifest (sources/manifest.py) and
    filesystem listing for partition discovery.
 
-Writes replace whole partitions, the idempotence primitive Iceberg's
-`REPLACE PARTITIONS` would give us: by Spark for the docs table
-(`write_partitioned`), on the driver for metadata rows
-(`replace_partitions`).
+Writes replace whole partitions (Iceberg's `REPLACE PARTITIONS`, the
+idempotence primitive): each table's new dirs are staged, by Spark or on
+the driver, then renamed in over the live ones (`_swap`).
 """
 
 from __future__ import annotations
@@ -47,17 +46,40 @@ def list_partitions(path: str, partition_col: str = "dt") -> list[str]:
     return sorted(out)
 
 
-def write_partitioned(df: DataFrame, path: str, partition_col: str = "dt") -> None:
-    """Dynamic partition overwrite — only partitions present in `df` are
-    replaced; everything else is untouched (Iceberg REPLACE PARTITIONS
-    semantics). A per-write option: the session's own
-    partitionOverwriteMode is left as the caller set it."""
-    (
-        df.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partition_col)
-        .parquet(path)
-    )
+def _swap(path: str, stage: str, names: list[str]) -> None:
+    """Replace each partition dir `names` under the table `path` by
+    `stage/new/<name>`, or by nothing when none was staged: the live dir
+    is renamed into `stage/old/`, the new one in, and `stage` deleted.
+    No reader or `<path>/*/*.parquet` glob sees a '.'-named stage's
+    files. Leftover stages are deleted first, after renaming back each
+    live dir a crashed swap had moved aside but not replaced."""
+    os.makedirs(path, exist_ok=True)
+    for s in (os.path.join(path, n) for n in os.listdir(path)
+              if n.startswith(".stage-") and os.path.join(path, n) != stage):
+        old = os.path.join(s, "old")
+        for name in os.listdir(old) if os.path.isdir(old) else ():
+            if not os.path.exists(os.path.join(path, name)):
+                os.rename(os.path.join(old, name), os.path.join(path, name))
+        shutil.rmtree(s, ignore_errors=True)
+    for name in names:
+        live = os.path.join(path, name)
+        new, old = (os.path.join(stage, k, name) for k in ("new", "old"))
+        if os.path.isdir(live):
+            os.makedirs(os.path.dirname(old), exist_ok=True)
+            os.rename(live, old)
+        if os.path.isdir(new):
+            os.rename(new, live)
+    shutil.rmtree(stage, ignore_errors=True)
+
+
+def write_partitioned(df: DataFrame, path: str, parts: list[str],
+                      partition_col: str = "dt") -> None:
+    """Replace the `<partition_col>=<p>` dir under `path` of each p in
+    `parts` with `df`'s rows of p, or none: a plain Spark write into a
+    staging dir, then `_swap`, whatever the session's overwrite mode."""
+    stage = os.path.join(path, f".stage-{uuid.uuid4().hex}")
+    df.write.partitionBy(partition_col).parquet(os.path.join(stage, "new"))
+    _swap(path, stage, [f"{partition_col}={p}" for p in parts])
 
 
 def arrow_schema(ddl: str):
@@ -108,32 +130,16 @@ def replace_partitions(path: str, rows: list[dict], ddl: str,
     """Replace the `partition_key=<p>` dir under `path` of each p in
     `parts` or in the rows' `partition` column with one file of its rows
     (write_rows), or none when it has no rows; other dirs are untouched.
-    Each dir is written under a hidden staging dir, `.stage-*/new/`, then
-    the live one is renamed aside into `.stage-*/old/`, the new one
-    renamed in, and the staging dir deleted. Spark and pyarrow skip
-    '.'-names, and a staged file sits two dirs below `path`, so no
-    `<path>/*/*.parquet` glob reads one either. Staging dirs a crashed
-    call left are deleted first."""
-    os.makedirs(path, exist_ok=True)
-    for name in os.listdir(path):
-        if name.startswith(".stage-"):
-            shutil.rmtree(os.path.join(path, name), ignore_errors=True)
+    Each file is written into a staging dir, then swapped in (`_swap`)."""
     by_part = {p: [] for p in parts}
     for r in rows:
         by_part.setdefault(r["partition"], []).append(r)
     stage = os.path.join(path, f".stage-{uuid.uuid4().hex}")
     for p, part_rows in by_part.items():
-        name = f"partition_key={p}"
-        live = os.path.join(path, name)
-        new, old = (os.path.join(stage, k, name) for k in ("new", "old"))
         if part_rows:
-            write_rows(new, part_rows, ddl)
-        if os.path.isdir(live):
-            os.makedirs(os.path.dirname(old), exist_ok=True)
-            os.rename(live, old)
-        if part_rows:
-            os.rename(new, live)
-    shutil.rmtree(stage, ignore_errors=True)
+            write_rows(os.path.join(stage, "new", f"partition_key={p}"),
+                       part_rows, ddl)
+    _swap(path, stage, [f"partition_key={p}" for p in by_part])
 
 
 def column_bounds(path: str, column: str, parts: list[str]) -> dict[str, tuple]:

@@ -14,8 +14,8 @@ commit time, and the planner (plans/planner.py) compares it with the
 current one: a match is ``snapshot_match``, a mismatch is
 ``change_detected``. By default a done partition stays done even if an
 upstream backfill rewrites its input; with ``reprocess_changed=True``
-exactly the partitions whose fingerprint changed re-run (idempotent
-thanks to dynamic partition overwrite).
+exactly the partitions whose fingerprint changed re-run (idempotent:
+sources/catalog.py replaces their output dirs whole).
 """
 
 from __future__ import annotations

@@ -1,14 +1,16 @@
 """Warehouse metadata reads and the partitioned write.
 
 Footer reads fall back to the bytes/1KB row estimate on an unreadable
-file and say so in the log; the dynamic-overwrite write leaves the
-session's overwrite mode alone."""
+file and say so in the log; the partitioned writes replace whole
+partition dirs by a staged swap, and roll back one a crash left half
+done."""
 
 import logging
 import os
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 
 from baselinr_spark.plans.planner import partition_stats
 from baselinr_spark.sources import catalog
@@ -52,22 +54,37 @@ def test_collect_table_metadata_unreadable_footer_logged(spark, tmp_path,
 
 
 def test_write_partitioned_keeps_session_overwrite_mode(spark, tmp_path):
+    """The write replaces the listed dts, staged and swapped, whatever
+    the session's overwrite mode: an unlisted dt is kept, a listed dt
+    without rows loses its dir, and a staging dir a crash left is never
+    read and is removed."""
     key = "spark.sql.sources.partitionOverwriteMode"
     prior = spark.conf.get(key)
     path = str(tmp_path / "t")
     spark.conf.set(key, "static")
     try:
         catalog.write_partitioned(
-            spark.createDataFrame([(1, "a"), (2, "b")], "v int, dt string"),
-            path)
-        # dynamic for this write: dt=b is replaced, dt=a is kept
+            spark.createDataFrame([(1, "a"), (2, "b"), (4, "c")],
+                                  "v int, dt string"),
+            path, ["a", "b", "c"])
+        # a crash mid-swap leaves a staging dir behind
+        for k in ("new", "old"):
+            leftover = os.path.join(path, ".stage-crashed", k, "dt=a")
+            os.makedirs(leftover)
+            pq.write_table(pa.table({"v": [99]}),
+                           os.path.join(leftover, "part-0.parquet"))
+        got = sorted((r["v"], r["dt"]) for r in spark.read.parquet(path).collect())
+        assert got == [(1, "a"), (2, "b"), (4, "c")]
+        # dt=b is replaced, dt=c is listed without rows, dt=a is kept
         catalog.write_partitioned(
-            spark.createDataFrame([(3, "b")], "v int, dt string"), path)
+            spark.createDataFrame([(3, "b")], "v int, dt string"), path,
+            ["b", "c"])
         assert spark.conf.get(key) == "static"
     finally:
         spark.conf.set(key, prior)
     got = sorted((r["v"], r["dt"]) for r in spark.read.parquet(path).collect())
     assert got == [(1, "a"), (3, "b")]
+    assert sorted(os.listdir(path)) == ["dt=a", "dt=b"]
 
 
 def test_manifest_instants_in_non_utc_session(spark, tmp_path):
@@ -160,6 +177,50 @@ def test_replace_partitions_swaps_only_listed_dirs(tmp_path):
     assert pq.ParquetFile(f).schema.column(2).physical_type == "INT96"
     assert pq.read_table(f).column("ts").to_pylist() == [
         ts.replace(tzinfo=None)]
+
+
+def test_replace_partitions_rolls_back_a_half_finished_swap(tmp_path,
+                                                           monkeypatch):
+    """A crash between the swap's two renames (live dir aside, new dir
+    in) leaves a partition's only copy in the staging dir: the next call
+    renames it back into place instead of deleting it."""
+    import datetime as dt
+
+    import duckdb
+
+    ddl = "partition string, v long, ts timestamp"
+    path = str(tmp_path / "t")
+    ts = dt.datetime(2025, 6, 1, 12, tzinfo=dt.timezone.utc)
+    catalog.replace_partitions(path, [
+        {"partition": p, "v": i, "ts": ts}
+        for i, p in enumerate(("a", "a", "b"))], ddl, [])
+
+    def files():
+        return {os.path.join(d, f): open(os.path.join(path, d, f), "rb").read()
+                for d in os.listdir(path) if not d.startswith(".")
+                for f in os.listdir(os.path.join(path, d))}
+
+    glob = f"select count(*) from read_parquet('{path}/*/*.parquet')"
+    before, count = files(), duckdb.sql(glob).fetchall()
+    rename = os.rename
+
+    def crash_on_swap_in(src, dst):
+        # the swap's second rename moves `.stage-*/new/<name>` to live
+        if os.path.basename(os.path.dirname(src)) == "new":
+            raise OSError("crash")
+        rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", crash_on_swap_in)
+    with pytest.raises(OSError, match="crash"):
+        catalog.replace_partitions(
+            path, [{"partition": "a", "v": 10, "ts": ts}], ddl, ["a"])
+    monkeypatch.setattr(os, "rename", rename)
+    assert not os.path.exists(os.path.join(path, "partition_key=a"))
+
+    catalog.replace_partitions(path, [], ddl, [])
+    assert duckdb.sql(glob).fetchall() == count == [(3,)]
+    assert files() == before
+    assert sorted(os.listdir(path)) == ["partition_key=a", "partition_key=b"]
 
 
 def test_column_bounds_from_footers(tmp_path):

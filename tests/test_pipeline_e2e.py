@@ -556,6 +556,72 @@ def test_emptied_partition_keeps_no_stale_outputs(spark, warehouse, tmp_path):
         ("emptied", 0, 0)]
 
 
+def test_failed_docs_write_keeps_the_dt_outputs(spark, warehouse, tmp_path,
+                                               monkeypatch):
+    """A --reprocess-changed rerun whose docs write fails inside its
+    Spark job leaves the changed dt's docs, metrics, events and lineage
+    files byte-identical and the manifest as it was; the next rerun
+    ends as the same rerun does without the failure."""
+    import shutil
+
+    import pyarrow.dataset as ds
+
+    from baselinr_spark.plans import pipeline
+    from baselinr_spark.sources import manifest
+
+    wh = str(tmp_path / "pages")
+    shutil.copytree(warehouse, wh)
+    out, ref = str(tmp_path / "out"), str(tmp_path / "ref")
+    run_pipeline(spark, wh, out, run_id="full")
+    shutil.copytree(out, ref)
+    day = "2025-06-03"
+    day_dir = os.path.join(wh, f"dt={day}")
+    os.remove(os.path.join(day_dir, sorted(
+        f for f in os.listdir(day_dir) if f.endswith(".parquet"))[0]))
+
+    def day_files():
+        dirs = [os.path.join(out, "docs", f"dt={day}")] + [
+            os.path.join(out, t, f"partition_key={day}")
+            for t in ("metrics", "events", "lineage")]
+        return {os.path.join(d, f): open(os.path.join(d, f), "rb").read()
+                for d in dirs for f in os.listdir(d)}
+
+    before, state = day_files(), manifest.latest_rows(out)
+    transform = pipeline.transform_pages
+
+    def failing_transform(*args, **kwargs):
+        docs = transform(*args, **kwargs)
+        return docs.withColumn("keep", F.when(
+            F.col("dt").cast("string") == day,
+            F.raise_error(F.lit("injected docs-write failure"))
+        ).otherwise(F.col("keep")))
+
+    monkeypatch.setattr(pipeline, "transform_pages", failing_transform)
+    with pytest.raises(Exception, match="injected docs-write failure"):
+        run_pipeline(spark, wh, out, run_id="failed", reprocess_changed=True)
+    monkeypatch.undo()
+    assert day_files() == before
+    assert manifest.latest_rows(out) == state
+
+    for root in (out, ref):
+        summary = run_pipeline(spark, wh, root, run_id="redo",
+                               reprocess_changed=True)
+        assert summary["partitions_processed"] == [day]
+
+    def table(root, name, drop):
+        t = ds.dataset(os.path.join(root, name), format="parquet",
+                       partitioning="hive").to_table().drop_columns(list(drop))
+        # ref's lineage rows of the dts the rerun kept name out's docs
+        return sorted(json.dumps(r, sort_keys=True, default=str)
+                      .replace(out, "").replace(ref, "") for r in t.to_pylist())
+
+    for name, drop in (("docs", ()), ("metrics", ("profiled_at",)),
+                       ("events", ("ts",)), ("lineage", ("ts",))):
+        assert table(out, name, drop) == table(ref, name, drop), name
+    assert [dict(r, completed_at=None) for r in manifest.latest_rows(out)] == [
+        dict(r, completed_at=None) for r in manifest.latest_rows(ref)]
+
+
 def test_small_chunk_udf_stage_on_every_core(spark, tmp_path, monkeypatch):
     """A 10-dt, 2k-doc chunk is far under par advisory partitions: its
     fused-UDF stage runs as at least min(par, 4) tasks instead of one,
