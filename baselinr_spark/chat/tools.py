@@ -340,18 +340,13 @@ def setup_tools(
 
     # -- get_lineage (tools.py:788-876) -----------------------------------
     def get_lineage(table: str, direction: str = "upstream") -> list[dict]:
-        from ..query.lineage import get_downstream_tables, get_upstream_tables
+        from ..query.lineage import (get_downstream_tables,
+                                     get_upstream_tables, pipeline_edges)
 
-        lin = spark.read.parquet(os.path.join(output_root, "lineage"))
-        edges = lin.select(
-            F.col("input_path").alias("upstream_table"),
-            F.col("output_path").alias("downstream_table"),
-            F.lit("pipeline").alias("lineage_type"),
-            F.lit(1.0).alias("confidence_score"),
-        )
         fn = (get_upstream_tables if direction == "upstream"
               else get_downstream_tables)
-        return _rows(fn(edges, table).orderBy("depth", "table"))
+        return _rows(fn(pipeline_edges(spark, output_root), table)
+                     .orderBy("depth", "table"))
 
     registry.register(Tool(
         name="get_lineage",

@@ -12,7 +12,8 @@ planner (plans/planner.py `plan_partitions` with ``reprocess_changed``)
 — new dts AND fingerprint-changed backfills — and the asset runs the
 pipeline with the same flag, so the asset processes exactly the
 partitions the sensor requested, and once it has, the sensor goes
-quiet. The cursor is the input's (partition → fingerprint) map.
+quiet. The cursor is the input's (partition → fingerprint) map, read
+off the same plan rows: a tick walks each input partition once.
 """
 
 from __future__ import annotations
@@ -59,17 +60,14 @@ def detect_partitions_to_run(
     """(partitions to process, new cursor): the planner's ``run`` rows
     with ``reprocess_changed=True`` — partitions never profiled, and done
     ones whose input fingerprint changed (upstream backfill). Cursor =
-    the fingerprint map actually observed."""
+    the fingerprint map the plan observed (its rows' ``fingerprint``)."""
     from ..plans import planner
-    from ..sources import catalog, change_detection
 
-    parts = catalog.list_partitions(input_path)
-    fps = {p: change_detection.partition_fingerprint(input_path, p)
-           for p in parts}
     plan = planner.plan_partitions(input_path, output_root,
-                                   partitions=parts, reprocess_changed=True)
+                                   reprocess_changed=True)
     todo = [r["partition"] for r in plan if r["action"] == "run"]
-    return todo, serialize_cursor(fps)
+    return todo, serialize_cursor({r["partition"]: r["fingerprint"]
+                                   for r in plan})
 
 
 def build_profile_asset(

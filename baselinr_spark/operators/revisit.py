@@ -21,9 +21,9 @@ key exactly once; the domain rollup is a map-side-combined groupBy.
 No global window, no driver collect.
 
 Reference parity: the reference's change detection is table-level
-fingerprinting (`/root/reference/baselinr/profiling/change_detection
-.py`, recast in sources/change_detection.py); this operator is the
-row-grain analogue the web corpus needs.
+fingerprinting (its `incremental/change_detection.py`, recast per input
+partition by sources/change_detection.py over the planner's file
+listing); this operator is the row-grain analogue the web corpus needs.
 """
 
 from __future__ import annotations

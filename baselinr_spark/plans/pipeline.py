@@ -2,7 +2,9 @@
 
 One declarative pass per chunk of partitions:
 
-    read pages (partition-pruned to the planner's run list)
+    size the chunk, pick its skew mode and take its input fingerprints
+    from the planner's rows (the run's one walk of each input partition)
+      → read pages (partition-pruned to the planner's run list)
       → native-expression features (WholeStageCodegen)
       → ONE fused scoring UDF: langid, perplexity, word/line features,
         scrub (broadcast models, Arrow batches)
@@ -42,7 +44,6 @@ from __future__ import annotations
 import contextlib
 import datetime as dt
 import json
-import logging
 import math
 import os
 import time
@@ -55,11 +56,9 @@ from ..config import DEFAULT_CONFIG, RULE_NAMES, FilterConfig
 from ..functions import textfeat
 from ..functions.langid import CLASSES
 from ..operators.drift import PSI_FLOOR, psi_band
-from ..sources import catalog, change_detection, manifest
+from ..sources import catalog, manifest
 from . import events as ev_mod
 from . import planner
-
-_log = logging.getLogger(__name__)
 
 #: reference partial-profiling cap: max partitions per run
 #: (/root/reference/baselinr/config/schema.py:898)
@@ -409,32 +408,11 @@ def chunk_conf(nbytes: int, par: int, skew_mode: str) -> dict:
 _AUTO_SPLIT_MIN_BYTES = 2 << 20
 
 
-def _chunk_layout(input_path: str, chunk) -> tuple[int, list, str]:
-    """One driver-side walk of the chunk's dt partitions — O(files), no
-    Spark job. Returns (on-disk bytes, [(parquet path, bytes)], error):
-    `error` names the first file that could not be stat'ed ('' if none);
-    such a file is logged and left out of the byte total."""
-    total, parquet, error = 0, [], ""
-    for p in chunk:
-        d = os.path.join(input_path, f"dt={p}")
-        for root, _, files in os.walk(d):
-            for f in files:
-                full = os.path.join(root, f)
-                try:
-                    size = os.path.getsize(full)
-                except OSError as e:
-                    _log.warning("chunk sizing: cannot stat %s: %s", full, e)
-                    error = error or f"cannot stat {full}: {e}"
-                    continue
-                total += size
-                if f.endswith(".parquet"):
-                    parquet.append((full, size))
-    return total, parquet, error
-
-
-def _resolve_skew_mode(layout: tuple[int, list, str], par: int) -> tuple[str, str]:
-    """skew_mode='auto' for a chunk with `layout` (from _chunk_layout) on
-    `par` slots. Returns (mode, reason); the reason is '' for split.
+def _resolve_skew_mode(rows: list[dict], par: int) -> tuple[str, str]:
+    """skew_mode='auto' for a chunk of the plan `rows` (planner.
+    partition_stats: bytes, row groups, largest granule and the first
+    listing error of each partition) on `par` slots. Returns (mode,
+    reason); the reason is '' for split.
 
     Split pays only when every split carries enough work to amortise the
     fixed per-task Python cost (split_partition_bytes). So a chunk under
@@ -452,30 +430,21 @@ def _resolve_skew_mode(layout: tuple[int, list, str], par: int) -> tuple[str, st
 
     Past the gate the parquet footers decide: scan splits cannot be
     smaller than a row group, so split needs >= 4·par row groups and no
-    row-group granule (file bytes / row groups) over 64 MB. Footers are
-    read only past the byte gate, driver-side. A file that cannot be
-    stat'ed, or whose footer cannot be read, falls back to rebalance; it
-    is logged and named in the reason."""
-    nbytes, files, error = layout
+    row-group granule (file bytes / row groups) over 64 MB. A file that
+    could not be stat'ed, or whose footer could not be read, falls back
+    to rebalance whatever the bytes; the listing logged it, and the
+    reason names it."""
+    error = next((r["listing_error"] for r in rows if r["listing_error"]), "")
     if error:
         return "rebalance", error
+    nbytes = sum(r["estimated_bytes"] for r in rows)
     gate = 3 * par * _AUTO_SPLIT_MIN_BYTES
     if nbytes < gate:
         return "rebalance", f"chunk {nbytes} B below split gate {gate} B"
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    max_granule = n_granules = 0
-    for full, size in files:
-        try:
-            rgs = max(pq.ParquetFile(full).metadata.num_row_groups, 1)
-        except (OSError, pa.ArrowInvalid) as e:
-            _log.warning("skew_mode auto: unreadable footer %s: %s", full, e)
-            return "rebalance", f"unreadable footer {full}: {e}"
-        max_granule = max(max_granule, size // rgs)
-        n_granules += rgs
+    n_granules = sum(r["row_groups"] for r in rows)
     if n_granules < 4 * par:
         return "rebalance", f"{n_granules} row groups < 4·par ({4 * par})"
+    max_granule = max(r["max_granule"] for r in rows)
     if max_granule > (64 << 20):
         return "rebalance", f"row-group granule {max_granule} B > 64 MB"
     return "split", ""
@@ -505,14 +474,15 @@ def run_pipeline(
     reference incremental/change_detection.py semantics); `scheduling`
     and `cost` are the planner's freshness interval and cost caps."""
     run_id = run_id or f"run-{uuid.uuid4().hex[:12]}"
-    all_parts = catalog.list_partitions(input_path)
     # decision cascade (freshness interval → snapshot match → cost caps →
-    # sample/defer/full fallback); one row per partition
+    # sample/defer/full fallback); one row per partition, with the stats
+    # of the run's one listing of its input
     plan_rows = planner.plan_partitions(
-        input_path, output_root, partitions=all_parts,
+        input_path, output_root,
         scheduling=scheduling, cost=cost,
         reprocess_changed=reprocess_changed,
     )
+    by_part = {r["partition"]: r for r in plan_rows}
     todo = [r["partition"] for r in plan_rows
             if r["action"] in ("run", "sample")][:max_partitions]
     fractions = {r["partition"]: r["sample_fraction"] for r in plan_rows
@@ -521,8 +491,8 @@ def run_pipeline(
 
     summary = {
         "run_id": run_id,
-        "partitions_total": len(all_parts),
-        "partitions_skipped": len(all_parts) - len(todo),
+        "partitions_total": len(plan_rows),
+        "partitions_skipped": len(plan_rows) - len(todo),
         "partitions_processed": [],
         "doc_count": 0,
         "kept_count": 0,
@@ -560,23 +530,15 @@ def run_pipeline(
     for ci, chunk in enumerate(chunks):
         t0 = time.time()
         par = spark.sparkContext.defaultParallelism
-        layout = _chunk_layout(input_path, chunk)
-        nbytes = layout[0]
+        chunk_plan = [by_part[p] for p in chunk]
         chunk_skew = skew_mode
         if skew_mode == "auto":
-            chunk_skew, why = _resolve_skew_mode(layout, par)
+            chunk_skew, why = _resolve_skew_mode(chunk_plan, par)
             key = ",".join(chunk)
             summary.setdefault("skew_mode_used", {})[key] = chunk_skew
             summary.setdefault("skew_mode_reason", {})[key] = why
-        conf = chunk_conf(nbytes, par, chunk_skew)
-        # fingerprint the inputs BEFORE reading them: a backfill landing
-        # while the chunk is processing must be detected by the NEXT
-        # reprocess_changed run, so the manifest must record what was
-        # actually read, not whatever is on disk at commit time
-        chunk_fps = {
-            p: change_detection.partition_fingerprint(input_path, p)
-            for p in chunk
-        }
+        conf = chunk_conf(sum(r["estimated_bytes"] for r in chunk_plan), par,
+                          chunk_skew)
         with _session_conf(spark, conf):
             pages = spark.read.parquet(input_path).filter(
                 F.col("dt").cast("string").isin(chunk)
@@ -705,7 +667,10 @@ def run_pipeline(
                     "kept_count": counts[p][1],
                     "completed_at": now,
                     "snapshot_id": f"{run_id}:{ci}",
-                    "fingerprint": chunk_fps[p],
+                    # listed BEFORE the chunk's read: a backfill landing
+                    # while it runs is detected by the NEXT
+                    # reprocess_changed run
+                    "fingerprint": by_part[p]["fingerprint"],
                     "sample_fraction": chunk_frac,
                 }
                 for p in chunk

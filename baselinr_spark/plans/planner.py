@@ -25,23 +25,25 @@ granularity:
    ``change_detected`` / ``never_profiled``).
 
 The cascade runs as plain Python on the driver, over rows the driver
-holds anyway: bytes from file stats and rows from parquet footers (never
-a data scan, mirroring the reference's metadata-only contract), input
-fingerprints from the file listing, and the manifest's latest state
-(read with pyarrow). All of it is O(partitions) driver work: planning
-launches no Spark job and needs no session.
+holds anyway: one walk of each partition's files
+(`catalog.list_data_files`) gives its bytes from file stats, its rows
+from parquet footers (never a data scan, mirroring the reference's
+metadata-only contract) and its input fingerprint, and the manifest's
+latest state is read with pyarrow. All of it is O(partitions) driver
+work: planning launches no Spark job and needs no session. The plan
+rows carry the listing's figures on, so a run lists each input
+partition once: `run_pipeline` sizes each chunk, resolves its skew mode
+and records its fingerprints from them, and the Dagster sensor builds
+its cursor from them.
 """
 
 from __future__ import annotations
 
-import logging
 import os
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
 
-from ..sources import change_detection, manifest
-
-_log = logging.getLogger(__name__)
+from ..sources import catalog, change_detection, manifest
 
 
 @dataclass(frozen=True)
@@ -70,61 +72,34 @@ class CostControls:
     sample_fraction: float = 0.1
 
 
-def partition_stats(input_path: str, partitions: list[str]) -> list[tuple]:
-    """(partition, bytes, rows) from file stats + parquet footers only.
-
-    Reference `_estimate_cost` (planner.py:269-274) uses warehouse
-    metadata (bytes_scanned, else rows·1KB); the parquet-warehouse
-    analog is the file listing for bytes and the footer `num_rows` for
-    rows — O(files) driver-side metadata reads, never a data scan. A
-    footer that cannot be read is logged and its file's bytes fall back
-    to the reference's bytes/1KB heuristic.
-    """
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    def one(p: str) -> tuple:
-        d = os.path.join(input_path, f"dt={p}")
-        nbytes = 0
-        nrows = 0
-        rows_known = False
-        unread_bytes = 0  # files whose footer failed: estimate, don't drop
-        if os.path.isdir(d):
-            for root, _, files in os.walk(d):
-                for f in sorted(files):
-                    if f.startswith(("_", ".")):
-                        continue
-                    full = os.path.join(root, f)
-                    try:
-                        sz = os.stat(full).st_size
-                    except OSError:
-                        continue
-                    nbytes += sz
-                    if f.endswith(".parquet"):
-                        try:
-                            nrows += pq.ParquetFile(full).metadata.num_rows
-                            rows_known = True
-                        except (OSError, pa.ArrowInvalid) as e:
-                            # a single bad footer must not silently
-                            # undercount the partition below the rows
-                            # cap: fall back to the ~1KB/row heuristic
-                            # for THIS file's bytes
-                            _log.warning("partition_stats: unreadable "
-                                         "footer %s: %s", full, e)
-                            unread_bytes += sz
-        if not rows_known:
-            nrows = nbytes // 1024  # reference heuristic: ~1KB/row
-        else:
-            nrows += unread_bytes // 1024
-        return (p, nbytes, nrows)
-
-    # footer/stat reads are I/O-bound; a thread pool keeps planning at
-    # ~constant wall time into the thousands-of-partitions regime (on an
-    # object store each stat is a round-trip, so this matters more there)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=16) as ex:
-        return list(ex.map(one, partitions))
+def partition_stats(input_path: str, partitions: list[str]) -> list[dict]:
+    """Per-partition stats from ONE `catalog.list_data_files` walk of
+    each `dt=<p>` dir: file stats and parquet footers only, never a data
+    scan. Keys: partition; estimated_bytes (the data files' bytes) and
+    estimated_rows (`catalog.estimated_rows`: footer rows, else the
+    reference's bytes/1KB heuristic, as its `_estimate_cost`,
+    planner.py:269-274, falls back from warehouse metadata); the input
+    ``fingerprint`` (sources/change_detection.py); ``row_groups`` and
+    ``max_granule`` (the most file bytes per row group), which decide
+    skew_mode='auto' (plans/pipeline.py); and ``listing_error``, the
+    first file that could not be stat'ed or whose footer could not be
+    read ('' if none)."""
+    listings = catalog.list_data_files(
+        [os.path.join(input_path, f"dt={p}") for p in partitions])
+    out = []
+    for p, (files, errors) in zip(partitions, listings):
+        groups = [(f.size, max(f.row_groups, 1)) for f in files
+                  if f.row_groups is not None]
+        out.append({
+            "partition": p,
+            "estimated_bytes": sum(f.size for f in files),
+            "estimated_rows": catalog.estimated_rows(files),
+            "fingerprint": change_detection.partition_fingerprint(files),
+            "row_groups": sum(g for _, g in groups),
+            "max_granule": max((size // g for size, g in groups), default=0),
+            "listing_error": errors[0] if errors else "",
+        })
+    return out
 
 
 def _stored_state(output_root: str) -> dict:
@@ -147,21 +122,22 @@ def plan_partitions(
 ) -> list[dict]:
     """One decision dict per input partition, sorted by partition.
 
-    Keys: partition, action (run|sample|skip|defer), reason,
-    estimated_bytes, estimated_rows, sample_fraction (non-None only for
+    Keys: partition, action (run|sample|skip|defer), reason, the
+    `partition_stats` of the partition's input (estimated_bytes,
+    estimated_rows, fingerprint, row_groups, max_granule,
+    listing_error), and sample_fraction (non-None only for
     action=sample). ``skip``/``defer`` rows have should-not-run
     semantics; ``defer`` specifically means "wanted to run, cost caps
-    said no" (reference planner.py:291-293).
+    said no" (reference planner.py:291-293). The input is walked once
+    per call: a run sizes, resolves and fingerprints its chunks from
+    these rows.
     """
-    from ..sources import catalog
-
     scheduling = scheduling or AdaptiveScheduling()
     cost = cost or CostControls()
     now_s = (now or datetime.now(timezone.utc)).timestamp()
     parts = partitions if partitions is not None else catalog.list_partitions(input_path)
 
     stats = partition_stats(input_path, parts)
-    fps = [change_detection.partition_fingerprint(input_path, p) for p in parts]
     state = _stored_state(output_root)
 
     # per-partition interval in minutes, clamped to [lo, hi] (reference _is_due)
@@ -213,14 +189,14 @@ def plan_partitions(
         return "run", "never_profiled"
 
     plan = []
-    for (p, nbytes, nrows), fp in zip(stats, fps):
-        action, reason = decide(p, nbytes, nrows, fp)
+    for st in stats:
+        action, reason = decide(st["partition"], st["estimated_bytes"],
+                                st["estimated_rows"], st["fingerprint"])
         plan.append({
-            "partition": p,
+            "partition": st["partition"],
             "action": action,
             "reason": reason,
-            "estimated_bytes": nbytes,
-            "estimated_rows": nrows,
+            **st,
             "sample_fraction": fraction if action == "sample" else None,
         })
     return sorted(plan, key=lambda r: r["partition"])

@@ -27,8 +27,22 @@ direct dependencies have depth 0, their dependencies depth 1, etc.;
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import os
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+
+def pipeline_edges(spark: SparkSession, output_root: str) -> DataFrame:
+    """The pipeline's lineage table under `output_root` as an edge
+    frame: each input partition path feeds its output partition path."""
+    lin = spark.read.parquet(os.path.join(output_root, "lineage"))
+    return lin.select(
+        F.col("input_path").alias("upstream_table"),
+        F.col("output_path").alias("downstream_table"),
+        F.lit("pipeline").alias("lineage_type"),
+        F.lit(1.0).alias("confidence_score"),
+    )
 
 
 def _traverse(

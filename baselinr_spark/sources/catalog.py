@@ -25,6 +25,7 @@ import os
 import re
 import shutil
 import uuid
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -44,6 +45,80 @@ def list_partitions(path: str, partition_col: str = "dt") -> list[str]:
         if m and os.path.isdir(os.path.join(path, name)):
             out.append(m.group(1))
     return sorted(out)
+
+
+class DataFile(NamedTuple):
+    """A data file under a listed dir: its path relative to that dir,
+    its stat size and mtime, and its parquet footer's row and row-group
+    counts (None unless the file is a `*.parquet` whose footer reads)."""
+
+    rel: str
+    size: int
+    mtime_ns: int
+    rows: int | None
+    row_groups: int | None
+
+
+def list_data_files(dirs: list[str]) -> list[tuple[list[DataFile], list[str]]]:
+    """(data files, errors) of each of `dirs`: the one driver-side walk
+    of a partition's or a table's files, O(files) stat and footer reads,
+    never a data scan. Files and dirs named `_*` or `.*` are skipped, as
+    Spark's reader skips them (`_SUCCESS`, `.crc`, `_temporary/`, a
+    crashed replace's `.stage-*/`). A file that cannot be stat'ed is left
+    out; one whose footer cannot be read is kept with rows None. Each
+    such failure is logged once and named in the errors. A missing dir
+    lists as empty."""
+    # stat/footer reads are I/O-bound; a thread pool keeps planning at
+    # ~constant wall time into the thousands-of-partitions regime (on an
+    # object store each stat is a round-trip, so this matters more there)
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(max_workers=16) as ex:
+        return list(ex.map(_list_dir, dirs))
+
+
+def _list_dir(d: str) -> tuple[list[DataFile], list[str]]:
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    files, errors = [], []
+
+    def fail(msg):
+        _log.warning("%s", msg)
+        errors.append(msg)
+
+    for root, subdirs, names in os.walk(d):
+        subdirs[:] = sorted(s for s in subdirs if not s.startswith(("_", ".")))
+        for f in sorted(n for n in names if not n.startswith(("_", "."))):
+            full = os.path.join(root, f)
+            try:
+                st = os.stat(full)
+            except OSError as e:
+                fail(f"cannot stat {full}: {e}")
+                continue
+            rows = row_groups = None
+            if f.endswith(".parquet"):
+                try:
+                    with pq.ParquetFile(full) as pf:
+                        rows = pf.metadata.num_rows
+                        row_groups = pf.metadata.num_row_groups
+                except (OSError, pa.ArrowInvalid) as e:
+                    fail(f"unreadable footer {full}: {e}")
+            files.append(DataFile(os.path.relpath(full, d), st.st_size,
+                                  st.st_mtime_ns, rows, row_groups))
+    return files, errors
+
+
+def estimated_rows(files: list[DataFile]) -> int:
+    """Row count of `files` from their footers; a parquet file whose
+    footer could not be read adds its bytes at the reference's ~1 KB per
+    row (its `_estimate_cost`), and with no footer read at all every
+    file's bytes count that way."""
+    if all(f.rows is None for f in files):
+        return sum(f.size for f in files) // 1024
+    unread = sum(f.size for f in files
+                 if f.rows is None and f.rel.endswith(".parquet"))
+    return sum(f.rows or 0 for f in files) + unread // 1024
 
 
 def _swap(path: str, stage: str, names: list[str]) -> None:
@@ -188,21 +263,29 @@ def infer_partition_key(df: DataFrame) -> str | None:
     return None
 
 
-def collect_table_metadata(
-    spark: SparkSession,
-    tables: dict[str, str],
-    now=None,
-) -> DataFrame:
+def collect_table_metadata(spark: SparkSession, tables: dict[str, str],
+                           now=None) -> DataFrame:
+    """`table_metadata` as a frame."""
+    return rows_frame(
+        spark, table_metadata(tables, now),
+        "table string, row_count long, size_bytes long, "
+        "last_modified_time timestamp, days_since_modified double, "
+        "has_partitions boolean, partition_key string",
+    )
+
+
+def table_metadata(tables: dict[str, str], now=None) -> list[dict]:
     """Filesystem recast of the reference MetadataCollector
-    (/root/reference/baselinr/smart_selection/metadata_collector.py:74-681).
+    (reference baselinr/smart_selection/metadata_collector.py:74-681).
     The reference fans out per-dialect system-table SQL (Snowflake
     ACCOUNT_USAGE, BigQuery INFORMATION_SCHEMA, pg_stat tables, ...) —
     the per-warehouse fan-out SURVEY.md flags as an anti-pattern to
     collapse. The parquet/Iceberg analog reads the same signals from
-    storage metadata: bytes from file stats, rows from parquet footers,
+    storage metadata, over one `list_data_files` walk of each table:
+    bytes from file stats, rows from parquet footers (`estimated_rows`),
     modification time from mtimes, partitioning from the directory
-    layout — O(files) metadata reads, never a data scan. A footer that
-    cannot be read is logged, and its file counts as bytes // 1024 rows.
+    layout — O(files) metadata reads, never a data scan, and no file a
+    reader skips (a crashed replace's `.stage-*` dir) counted.
 
     ``tables`` maps table name → directory. Query statistics
     (query_count, last_query_time) live in the query ENGINE's log, not
@@ -210,43 +293,20 @@ def collect_table_metadata(
     their absence as the neutral 50 the reference uses for unknown
     metadata.
 
-    Returns (table, row_count, size_bytes, last_modified_time,
-    days_since_modified, has_partitions, partition_key)."""
+    Returns one dict per table: (table, row_count, size_bytes,
+    last_modified_time, days_since_modified, has_partitions,
+    partition_key)."""
     import datetime as _dt
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
 
     now = now or _dt.datetime.now(_dt.timezone.utc)
     if now.tzinfo is not None:
         now = now.astimezone(_dt.timezone.utc).replace(tzinfo=None)
 
+    names = sorted(tables)
     rows = []
-    for name, path in sorted(tables.items()):
-        nbytes, nrows, mtime, rows_known = 0, 0, None, False
-        if os.path.isdir(path):
-            for root, _, files in os.walk(path):
-                for f in sorted(files):
-                    if f.startswith(("_", ".")):
-                        continue
-                    full = os.path.join(root, f)
-                    try:
-                        st = os.stat(full)
-                    except OSError:
-                        continue
-                    nbytes += st.st_size
-                    if mtime is None or st.st_mtime > mtime:
-                        mtime = st.st_mtime
-                    if f.endswith(".parquet"):
-                        try:
-                            nrows += pq.ParquetFile(full).metadata.num_rows
-                            rows_known = True
-                        except (OSError, pa.ArrowInvalid) as e:
-                            _log.warning("collect_table_metadata: unreadable "
-                                         "footer %s: %s", full, e)
-                            nrows += st.st_size // 1024
-        if not rows_known and nrows == 0:
-            nrows = nbytes // 1024
+    for name, (files, _) in zip(names, list_data_files(
+            [tables[n] for n in names])):
+        path = tables[name]
         parts = list_partitions(path)
         pkey = None
         if parts:
@@ -254,17 +314,13 @@ def collect_table_metadata(
                 n for n in os.listdir(path)
                 if "=" in n and os.path.isdir(os.path.join(path, n)))
             pkey = first.split("=", 1)[0]
-        last_mod = (_dt.datetime.utcfromtimestamp(mtime)
-                    if mtime is not None else None)
+        last_mod = (_dt.datetime.utcfromtimestamp(
+            max(f.mtime_ns for f in files) / 1e9) if files else None)
         days = ((now - last_mod).total_seconds() / 86400.0
                 if last_mod is not None else None)
-        rows.append({"table": name, "row_count": nrows, "size_bytes": nbytes,
+        rows.append({"table": name, "row_count": estimated_rows(files),
+                     "size_bytes": sum(f.size for f in files),
                      "last_modified_time": last_mod,
                      "days_since_modified": days,
                      "has_partitions": bool(parts), "partition_key": pkey})
-    return rows_frame(
-        spark, rows,
-        "table string, row_count long, size_bytes long, "
-        "last_modified_time timestamp, days_since_modified double, "
-        "has_partitions boolean, partition_key string",
-    )
+    return rows

@@ -174,7 +174,7 @@ def write_pages_warehouse(spark, out_dir: str, n_docs: int, seed: int = 42) -> N
            .repartition(80, F.col("dt"), salt)
            .write.mode("overwrite").partitionBy("dt")
            # a scan split is never smaller than a row group: 4 MB groups
-           # give split mode (and _resolve_skew_mode's footer probe) real
+           # give split mode (and auto's row-group rule) real
            # granularity, as Iceberg's target file size does
            .option("parquet.block.size", str(4 * 1024 * 1024))
            .parquet(out_dir))

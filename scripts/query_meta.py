@@ -57,18 +57,6 @@ def _print_rows(rows: list[dict]) -> list[dict]:
     return rows
 
 
-def _lineage_edges(spark: SparkSession, output_root: str) -> DataFrame:
-    """Pipeline lineage rows as a generic edge table: input partition
-    path feeds output partition path."""
-    lin = spark.read.parquet(os.path.join(output_root, "lineage"))
-    return lin.select(
-        F.col("input_path").alias("upstream_table"),
-        F.col("output_path").alias("downstream_table"),
-        F.lit("pipeline").alias("lineage_type"),
-        F.lit(1.0).alias("confidence_score"),
-    )
-
-
 def cmd_runs(spark, out_root, args) -> list[dict]:
     from baselinr_spark.sources import catalog, manifest
 
@@ -146,9 +134,10 @@ def cmd_lineage(spark, out_root, args) -> list[dict]:
         get_downstream_tables,
         get_lineage_path,
         get_upstream_tables,
+        pipeline_edges,
     )
 
-    edges = _lineage_edges(spark, out_root)
+    edges = pipeline_edges(spark, out_root)
     if args.lineage_command == "upstream":
         return _emit(get_upstream_tables(edges, args.table, args.max_depth))
     if args.lineage_command == "downstream":

@@ -35,7 +35,9 @@ def test_partition_stats_unreadable_footer_logged(tmp_path, caplog):
     rows, bad_bytes, bad = _good_and_garbage(
         os.path.join(root, "dt=2025-06-01"))
     with caplog.at_level(logging.WARNING):
-        [(p, nbytes, nrows)] = partition_stats(root, ["2025-06-01"])
+        [st] = partition_stats(root, ["2025-06-01"])
+    p, nbytes, nrows = (st[k] for k in ("partition", "estimated_bytes",
+                                        "estimated_rows"))
     assert p == "2025-06-01"
     assert nrows == rows + bad_bytes // 1024
     assert nbytes == sum(e.stat().st_size for e in os.scandir(
@@ -51,6 +53,20 @@ def test_collect_table_metadata_unreadable_footer_logged(spark, tmp_path,
         [r] = catalog.collect_table_metadata(spark, {"t": d}).collect()
     assert r["row_count"] == rows + bad_bytes // 1024
     assert bad in caplog.text
+
+
+def test_table_metadata_skips_a_crashed_stage(tmp_path):
+    """The files of a `.stage-*` dir a crashed replace left are not table
+    rows or bytes: no reader sees them. Spark-free."""
+    path = str(tmp_path / "t")
+    live = os.path.join(path, "dt=a", "part-0.parquet")
+    for d in ("dt=a", ".stage-x/new/dt=a", ".stage-x/old/dt=a"):
+        os.makedirs(os.path.join(path, d))
+        pq.write_table(pa.table({"v": list(range(10))}),
+                       os.path.join(path, d, "part-0.parquet"))
+    [r] = catalog.table_metadata({"t": path})
+    assert (r["row_count"], r["size_bytes"]) == (10, os.path.getsize(live))
+    assert r["has_partitions"] and r["partition_key"] == "dt"
 
 
 def test_write_partitioned_keeps_session_overwrite_mode(spark, tmp_path):

@@ -12,8 +12,7 @@ from baselinr_spark.operators.table_matcher import (
     wildcard_to_regex,
 )
 from baselinr_spark.plans.pipeline import run_pipeline
-from baselinr_spark.plans.planner import plan_partitions
-from baselinr_spark.sources.change_detection import partition_fingerprint
+from baselinr_spark.plans.planner import partition_stats, plan_partitions
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -55,6 +54,11 @@ def test_resolve_priority():
     assert resolve_priority([]) == []
 
 
+def partition_fingerprint(root, partition):
+    [st] = partition_stats(root, [partition])
+    return st["fingerprint"]
+
+
 def test_fingerprint_tracks_file_changes(tmp_path):
     root = str(tmp_path)
     d = os.path.join(root, "dt=2024-01-01")
@@ -74,6 +78,46 @@ def test_fingerprint_tracks_file_changes(tmp_path):
     # missing partition hashes to the empty fingerprint, deterministically
     assert (partition_fingerprint(root, "nope")
             == partition_fingerprint(root, "also-nope"))
+
+
+#: the fingerprint every manifest on disk stores for GOLDEN_FILES: md5
+#: of one `rel|size|mtime_ns` line per data file, sorted
+GOLDEN_FP = "063d0f81831998719e7dc45ae4e2aba0"
+GOLDEN_FILES = (("part-00000.bin", b"a" * 3000, 1_700_000_000_123_456_789),
+                ("part-00001.bin", b"b" * 1500, 1_700_000_100_000_000_001),
+                ("sub/part-00002.bin", b"c" * 100, 1_700_000_200_000_000_000))
+
+
+def test_fingerprint_format_pinned(tmp_path):
+    """A partition's fingerprint, bytes and rows are a function of its
+    data files alone: commit markers, checksums and the hidden dirs of an
+    in-flight or crashed write change none of them, and the fingerprint
+    of fixed files is the md5 older manifests hold (else every stored
+    partition would read as change_detected)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    root = str(tmp_path)
+    d = os.path.join(root, "dt=2024-01-01")
+    for rel, data, ns in GOLDEN_FILES:
+        os.makedirs(os.path.dirname(os.path.join(d, rel)), exist_ok=True)
+        with open(os.path.join(d, rel), "wb") as f:
+            f.write(data)
+        os.utime(os.path.join(d, rel), ns=(ns, ns))
+    [clean] = partition_stats(root, ["2024-01-01"])
+    assert clean["fingerprint"] == GOLDEN_FP
+    assert (clean["estimated_bytes"], clean["estimated_rows"]) == (4600, 4)
+
+    open(os.path.join(d, "_SUCCESS"), "w").close()
+    with open(os.path.join(d, ".part-00000.bin.crc"), "wb") as f:
+        f.write(b"crc" * 10)
+    for sub in ("_temporary/0", ".stage-x/new"):
+        os.makedirs(os.path.join(d, sub))
+        pq.write_table(pa.table({"v": list(range(7))}),
+                       os.path.join(d, sub, "part-00009.parquet"))
+    [noisy] = partition_stats(root, ["2024-01-01"])
+    for k in ("fingerprint", "estimated_bytes", "estimated_rows"):
+        assert noisy[k] == clean[k], k
 
 
 def _changed(warehouse, out_root):

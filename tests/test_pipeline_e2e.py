@@ -626,7 +626,8 @@ def test_small_chunk_udf_stage_on_every_core(spark, tmp_path, monkeypatch):
     """A 10-dt, 2k-doc chunk is far under par advisory partitions: its
     fused-UDF stage runs as at least min(par, 4) tasks instead of one,
     and the docs write still leaves one file per dt."""
-    from baselinr_spark.plans.pipeline import _chunk_layout, chunk_conf
+    from baselinr_spark.plans.pipeline import chunk_conf
+    from baselinr_spark.plans.planner import plan_partitions
     from baselinr_spark.sources import catalog
     from baselinr_spark.sources.pages import write_pages_warehouse
 
@@ -636,8 +637,9 @@ def test_small_chunk_udf_stage_on_every_core(spark, tmp_path, monkeypatch):
     assert len(parts) == 10
     sc = spark.sparkContext
     par = sc.defaultParallelism
+    nbytes = sum(r["estimated_bytes"] for r in plan_partitions(wh, out))
     assert "spark.sql.adaptive.coalescePartitions.minPartitionSize" in \
-        chunk_conf(_chunk_layout(wh, parts)[0], par, "rebalance")
+        chunk_conf(nbytes, par, "rebalance")
 
     write = catalog.write_partitioned
 
@@ -675,7 +677,7 @@ def _jobs_after_docs_writes(spark, monkeypatch, wh, out, **kw):
 
     sc = spark.sparkContext
     tag, groups = uuid.uuid4().hex, []
-    write, layout = catalog.write_partitioned, pipeline._chunk_layout
+    write, conf = catalog.write_partitioned, pipeline.chunk_conf
 
     def after_write(df, path, *args):
         write(df, path, *args)
@@ -684,10 +686,10 @@ def _jobs_after_docs_writes(spark, monkeypatch, wh, out, **kw):
 
     def chunk_start(*args):
         sc.setLocalProperty("spark.jobGroup.id", None)
-        return layout(*args)
+        return conf(*args)
 
     monkeypatch.setattr(catalog, "write_partitioned", after_write)
-    monkeypatch.setattr(pipeline, "_chunk_layout", chunk_start)
+    monkeypatch.setattr(pipeline, "chunk_conf", chunk_start)
     try:
         summary = run_pipeline(spark, wh, out, **kw)
     finally:
@@ -713,6 +715,38 @@ def test_one_spark_job_after_each_docs_write(spark, warehouse, tmp_path,
     n_chunks = -(-len(summary["partitions_processed"]) // 3)
     assert len(jobs) == n_chunks > 1
     assert jobs == [1] * n_chunks
+
+
+def test_one_listing_per_input_partition(spark, warehouse, tmp_path,
+                                         monkeypatch):
+    """A checkpoint_every=3 run walks each input partition's files once,
+    in the planner: every chunk takes its bytes, skew mode and manifest
+    fingerprints from the plan rows."""
+    from collections import Counter
+
+    from baselinr_spark.sources import catalog
+
+    dirs = [os.path.join(warehouse, f"dt={p}")
+            for p in catalog.list_partitions(warehouse)]
+    listed, walked = Counter(), Counter()
+    list_data_files, walk = catalog.list_data_files, os.walk
+
+    def counted_listing(ds):
+        listed.update(ds)
+        return list_data_files(ds)
+
+    def counted_walk(top, *args, **kw):
+        walked[os.fspath(top)] += 1
+        return walk(top, *args, **kw)
+
+    monkeypatch.setattr(catalog, "list_data_files", counted_listing)
+    monkeypatch.setattr(os, "walk", counted_walk)
+    summary = run_pipeline(spark, warehouse, str(tmp_path / "out"),
+                           run_id="one-walk", checkpoint_every=3)
+    monkeypatch.undo()
+    assert len(summary["skew_mode_used"]) == -(-len(dirs) // 3) > 1
+    assert listed == Counter(dirs)
+    assert {d: walked[d] for d in dirs} == dict.fromkeys(dirs, 1)
 
 
 def test_one_spark_job_after_a_wide_chunk_write(spark, warehouse, tmp_path,

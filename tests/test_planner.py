@@ -74,7 +74,8 @@ def test_freshness_and_snapshot_cascade(spark, warehouse, out_root):
 
 def test_cost_cap_fallbacks(spark, warehouse, out_root):
     parts = catalog.list_partitions(warehouse)
-    stats = {p: (b, r) for p, b, r in partition_stats(warehouse, parts)}
+    stats = {s["partition"]: (s["estimated_bytes"], s["estimated_rows"])
+             for s in partition_stats(warehouse, parts)}
     # threshold splitting the partitions: some capped, some not
     sizes = sorted(b for b, _ in stats.values())
     cap = sizes[len(sizes) // 2]
@@ -107,7 +108,8 @@ def test_cost_cap_fallbacks(spark, warehouse, out_root):
 def test_pipeline_sample_downgrade_and_defer(spark, warehouse, out_root,
                                              tmp_path_factory):
     parts = catalog.list_partitions(warehouse)
-    stats = {p: (b, r) for p, b, r in partition_stats(warehouse, parts)}
+    stats = {s["partition"]: (s["estimated_bytes"], s["estimated_rows"])
+             for s in partition_stats(warehouse, parts)}
     sizes = sorted(b for b, _ in stats.values())
     cap = sizes[len(sizes) // 2]
     big = {p for p, (b, _) in stats.items() if b > cap}
@@ -158,7 +160,8 @@ def test_sampled_partitions_promote_to_full(spark, warehouse, out_root):
     from baselinr_spark.sources import manifest as mf
 
     parts = catalog.list_partitions(warehouse)
-    stats = {p: (b, r) for p, b, r in partition_stats(warehouse, parts)}
+    stats = {s["partition"]: (s["estimated_bytes"], s["estimated_rows"])
+             for s in partition_stats(warehouse, parts)}
     sizes = sorted(b for b, _ in stats.values())
     cap = sizes[len(sizes) // 2]
     big = {p for p, (b, _) in stats.items() if b > cap}

@@ -1,5 +1,6 @@
-"""skew_mode='auto' resolution on small pyarrow-written layouts, and the
-chunk's SQL conf — no Spark.
+"""skew_mode='auto' resolution on small pyarrow-written layouts, listed
+by the planner's one walk (`partition_stats`), and the chunk's SQL conf
+— no Spark.
 
 A chunk under 3·par·2 MB takes the rebalance shuffle whatever its row
 groups look like; past that gate the mode and split bytes are the ones
@@ -17,23 +18,28 @@ import pyarrow.parquet as pq
 import pytest
 
 from baselinr_spark.plans.pipeline import (
-    _chunk_layout,
     _resolve_skew_mode,
     chunk_conf,
     split_partition_bytes,
 )
+from baselinr_spark.plans.planner import partition_stats
 
 MB = 1 << 20
 
 
-def _footer_rule(layout, par):
+def _parquet_files(root, dts):
+    return [os.path.join(root, f"dt={dt}", f) for dt in dts
+            for f in sorted(os.listdir(os.path.join(root, f"dt={dt}")))
+            if f.endswith(".parquet")]
+
+
+def _footer_rule(root, dts, par):
     """The layout-only rule auto applied before the byte gate."""
-    _, files, _ = layout
     n_granules = max_granule = 0
-    for path, size in files:
+    for path in _parquet_files(root, dts):
         rgs = max(pq.ParquetFile(path).metadata.num_row_groups, 1)
         n_granules += rgs
-        max_granule = max(max_granule, size // rgs)
+        max_granule = max(max_granule, os.path.getsize(path) // rgs)
     if n_granules >= 4 * par and max_granule <= 64 * MB:
         return "split"
     return "rebalance"
@@ -65,17 +71,21 @@ def _write_layout(root, dts, files_per_dt, file_bytes, row_groups):
 
 DTS = ["2024-01-01", "2024-01-02"]
 
+#: the logger of the shared listing (sources/catalog.list_data_files)
+LISTING_LOG = "baselinr_spark.sources.catalog"
+
 
 def test_many_tiny_files_under_gate_rebalance(tmp_path):
     par = 2
     root = _write_layout(str(tmp_path), DTS, files_per_dt=20,
                          file_bytes=32 << 10, row_groups=1)
-    layout = _chunk_layout(root, DTS)
-    nbytes, files, error = layout
-    assert len(files) == 40 and error == ""
+    layout = partition_stats(root, DTS)
+    nbytes = sum(r["estimated_bytes"] for r in layout)
+    assert sum(r["row_groups"] for r in layout) == 40
+    assert all(r["listing_error"] == "" for r in layout)
     assert nbytes < 3 * par * 2 * MB
     # the footer rule alone would split: plenty of small row groups
-    assert _footer_rule(layout, par) == "split"
+    assert _footer_rule(root, DTS, par) == "split"
     mode, why = _resolve_skew_mode(layout, par)
     assert mode == "rebalance"
     assert "gate" in why
@@ -91,17 +101,17 @@ def big_layout(tmp_path_factory):
 
 def test_above_gate_split_bytes_unchanged(big_layout):
     par = 1
-    layout = _chunk_layout(big_layout, DTS)
-    nbytes = layout[0]
+    layout = partition_stats(big_layout, DTS)
+    nbytes = sum(r["estimated_bytes"] for r in layout)
     assert nbytes >= 3 * par * 4 * MB
-    assert _footer_rule(layout, par) == "split"
+    assert _footer_rule(big_layout, DTS, par) == "split"
     assert _resolve_skew_mode(layout, par) == ("split", "")
     assert split_partition_bytes(nbytes, par) == _formula(nbytes, par)
     # one dt (≈ 6.6 MB, 4 row groups): past the 6 MB gate, under the cap
-    half = _chunk_layout(big_layout, DTS[:1])
-    assert 6 * MB <= half[0] < 12 * MB
+    half = partition_stats(big_layout, DTS[:1])
+    assert 6 * MB <= half[0]["estimated_bytes"] < 12 * MB
     assert _resolve_skew_mode(half, par) == ("split", "") \
-        and _footer_rule(half, par) == "split"
+        and _footer_rule(big_layout, DTS[:1], par) == "split"
 
 
 def test_above_gate_too_few_row_groups_rebalance(tmp_path):
@@ -109,10 +119,10 @@ def test_above_gate_too_few_row_groups_rebalance(tmp_path):
     # single granule cannot be split across 4 waves — same as the footer rule
     root = _write_layout(str(tmp_path), DTS[:1], files_per_dt=1,
                          file_bytes=13 * MB, row_groups=1)
-    layout = _chunk_layout(root, DTS)
-    assert layout[0] >= 6 * MB
+    layout = partition_stats(root, DTS)
+    assert layout[0]["estimated_bytes"] >= 6 * MB
     mode, why = _resolve_skew_mode(layout, 1)
-    assert mode == _footer_rule(layout, 1) == "rebalance"
+    assert mode == _footer_rule(root, DTS[:1], 1) == "rebalance"
     assert "row groups" in why
 
 
@@ -141,13 +151,15 @@ def test_unreadable_footer_rebalance_with_reason(big_layout, tmp_path, caplog):
     bad = os.path.join(root, f"dt={DTS[1]}", "part-bad.parquet")
     with open(bad, "wb") as fh:
         fh.write(b"not a parquet file")
-    layout = _chunk_layout(root, DTS)
-    assert layout[0] >= 6 * MB and layout[2] == ""
-    with caplog.at_level(logging.WARNING, logger="baselinr_spark.plans.pipeline"):
-        mode, why = _resolve_skew_mode(layout, 1)
+    with caplog.at_level(logging.WARNING, logger=LISTING_LOG):
+        layout = partition_stats(root, DTS)
+    assert sum(r["estimated_bytes"] for r in layout) >= 6 * MB
+    assert layout[0]["listing_error"] == ""
+    mode, why = _resolve_skew_mode(layout, 1)
     assert mode == "rebalance"
     assert "unreadable footer" in why and bad in why
-    assert any(bad in r.getMessage() for r in caplog.records)
+    assert [r.getMessage() for r in caplog.records
+            if bad in r.getMessage()] == [why]
 
 
 def test_unstatable_file_rebalance_with_reason(big_layout, tmp_path, caplog):
@@ -160,11 +172,14 @@ def test_unstatable_file_rebalance_with_reason(big_layout, tmp_path, caplog):
                        os.path.join(d, f"{dt}-{f}"))
     dangling = os.path.join(d, "part-gone.parquet")
     os.symlink(os.path.join(root, "missing"), dangling)
-    with caplog.at_level(logging.WARNING, logger="baselinr_spark.plans.pipeline"):
-        layout = _chunk_layout(root, DTS)
-    nbytes, files, error = layout
+    with caplog.at_level(logging.WARNING, logger=LISTING_LOG):
+        layout = partition_stats(root, DTS)
+    error = layout[0]["listing_error"]
     assert dangling in error
-    assert dangling not in [p for p, _ in files]
+    # the dangling file is left out of the bytes
+    assert layout[0]["estimated_bytes"] == sum(
+        os.path.getsize(p) for p in _parquet_files(root, DTS[:1])
+        if p != dangling)
     assert any(dangling in r.getMessage() for r in caplog.records)
     assert _resolve_skew_mode(layout, 1) == ("rebalance", error)
 
