@@ -8,17 +8,14 @@ applies all of them in one pass and returns a struct, so the text
 crosses once.
 
 The WORD/LINE features (n_words, mean_word_length, stopword_fraction,
-n_lines, dup_line_fraction) moved here in round 6: their JVM forms —
-even as codegen regexps — cost ~180 µs/doc·core for the anchored
-60-word stopword alternation alone (Java regex tries the pattern at
-every char position), while a Python split + set-membership pass over
-text that is ALREADY on this side of the boundary costs ~25 µs/doc.
-``feature_batch`` replicates the exact textfeat/with_features
-semantics (Java-\\s tokenization, ASCII-only case folding, space-only
-trim for lines, same division order); parity with
-`textfeat.with_features` is asserted by tests over the corpus and
-whitespace/unicode edges. n_chars and symbol_ratio stay JVM-side (plain
-length/regexp_replace — cheap, and symbol counting is faster there).
+n_lines, dup_line_fraction) are computed here, on text that is already
+on this side of the boundary for the model scores: a Python split +
+set-membership pass costs ~25 µs/doc, where the JVM's anchored 60-word
+stopword regexp cost ~180 µs/doc·core. ``feature_batch``'s docstring is
+the one written spec of these features; the oracle
+(``oracle/pandas_ref.doc_features``) implements it independently and
+tests assert exact equality. n_chars and symbol_ratio stay JVM-side
+(``plans/pipeline.transform_pages``: plain length/regexp_replace).
 
 Each score comes from the same pure-python kernel the oracle uses
 (``langid.langid_batch``, ``perplexity.perplexity_batch``,
@@ -43,10 +40,11 @@ from .perplexity import perplexity_batch
 from .scrub import scrub_python
 
 #: Java regex \s — ASCII-only [ \t\n\x0B\f\r]; python's \s would also
-#: split on unicode whitespace and diverge from the JVM tokenization
+#: split on unicode whitespace and diverge from the JVM's \s (symbol_ratio,
+#: textfeat._words)
 _WS = re.compile(r"[ \t\n\x0B\f\r]+")
-#: A-Z → a-z only: Java (?i) without UNICODE_CASE folds ASCII letters
-#: only, so e.g. U+212A KELVIN SIGN must not fold to 'k' here either
+#: A-Z → a-z only: str.lower() would also fold e.g. U+212A KELVIN SIGN
+#: to 'k', which the spec (feature_batch) does not
 _ASCII_LOWER = str.maketrans(string.ascii_uppercase, string.ascii_lowercase)
 
 SCORING_SCHEMA = T.StructType([
@@ -61,27 +59,33 @@ SCORING_SCHEMA = T.StructType([
     T.StructField("scrubbed_text", T.StringType()),
 ])
 
-FEATURE_FIELDS = (
-    "n_words", "mean_word_length", "stopword_fraction",
-    "n_lines", "dup_line_fraction",
-)
-
 
 def feature_batch(texts, stopset) -> dict:
-    """Word/line features for a batch, value-identical to the JVM
-    expressions in textfeat.with_features:
+    """Word/line features for a batch. This is the spec of the
+    product's document features; the oracle and the JVM-side
+    n_chars/symbol_ratio in ``transform_pages`` follow it:
 
-      words             = non-empty [Java-\\s]+-split substrings
+      words             = non-empty runs between Java-\\s separators,
+                          i.e. split on [ \\t\\n\\x0B\\f\\r]+ (no
+                          Unicode whitespace: NBSP, EM SPACE and
+                          \\x1c-\\x1f are word characters)
+      n_words           = len(words)
       mean_word_length  = sum(len(w)) / n_words        (0.0 if none)
-      stopword_fraction = #(ascii_lower(w) in stopset) / n_words
-      lines             = space-trimmed non-empty '\\n' segments
-      dup_line_fraction = 1 - n_distinct/n_lines       (0.0 if none)
+      stopword_fraction = #(fold(w) in stopset) / n_words  (0.0 if none),
+                          fold maps ASCII A-Z to a-z only (U+212A
+                          KELVIN SIGN stays as it is)
+      lines             = '\\n' segments trimmed of ' ' only, kept
+                          if non-empty ('\\r' and '\\t' are kept)
+      n_lines           = len(lines)
+      dup_line_fraction = 1 - n_distinct_lines / n_lines  (0.0 if none)
+      n_chars           = len(text) in code points
+      symbol_ratio      = #(chars outside [A-Za-z0-9 \\t\\n\\x0B\\f\\r])
+                          / n_chars                     (0.0 if none)
 
-    Stopword hits are counted on the folded text's tokens: folding
-    A-Z never creates or removes a [Java-\\s] separator, so token k of
-    fold(t) is fold(token k of t) and the count equals the per-word
-    fold(w)∈set form. Only A-Z are folded, like the JVM's (?i).
-    Null/empty text → zeros, matching the JVM coalesce('') path."""
+    Null text counts as the empty string. Stopword hits are counted on
+    the folded text's tokens: folding A-Z never creates or removes a
+    separator, so token k of fold(t) is fold(token k of t) and the count
+    equals the per-word form above."""
     n_words = []
     mwl = []
     swf = []

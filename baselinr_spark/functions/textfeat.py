@@ -1,23 +1,15 @@
-"""Per-document text features as native Catalyst expressions.
+"""Document features and rule predicates as native Catalyst expressions.
 
-Zero Python in this module's hot path: every feature is a JVM-side
-`pyspark.sql.functions` expression (split / filter / aggregate /
-array_distinct / regexp_replace), so the whole feature stage stays inside
-WholeStageCodegen and scales linearly with executors.
+The default filter's word/line features (n_words, mean_word_length,
+stopword_fraction, n_lines, dup_line_fraction) are computed in the fused
+scoring UDF; their one spec is ``functions/scoring.feature_batch``'s
+docstring, and ``oracle/pandas_ref.doc_features`` implements it
+independently. This module holds what stays JVM-side: the rule
+fail-predicates and verdict over those columns, and the opt-in Gopher
+repetition, C4 line-shape and Luhn card families, each a zero-shuffle,
+zero-Python projection.
 
-Feature semantics (shared with oracle/pandas_ref.py, which implements the
-same definitions independently in pure pandas — the unit tests assert
-equality):
-
-    words               = non-empty substrings of text split on /\\s+/
-    n_words             = len(words)
-    mean_word_length    = sum(len(w)) / n_words            (0.0 if no words)
-    symbol_ratio        = count(chars not in [A-Za-z0-9 \\s]) / len(text)
-    stopword_fraction   = count(lower(w) in STOPWORDS) / n_words
-    lines               = non-empty trimmed substrings of text split on \\n
-    dup_line_fraction   = 1 - n_distinct_lines / n_lines   (0.0 if no lines)
-
-These recast baselinr's validator predicates (SURVEY.md §2.10; e.g.
+The rules recast baselinr's validator predicates (SURVEY.md §2.10; e.g.
 /root/reference/baselinr/validation/validators/range_validator.py:375's
 `col IS NOT NULL AND (col < min OR col > max)` shape) as Gopher/C4
 document heuristics.
@@ -29,18 +21,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..config import FilterConfig
-from . import synthlang as sl
-
-#: columns added by with_features
-FEATURE_COLS = (
-    "n_words",
-    "n_chars",
-    "mean_word_length",
-    "symbol_ratio",
-    "stopword_fraction",
-    "n_lines",
-    "dup_line_fraction",
-)
 
 
 def _words(text: Column) -> Column:
@@ -51,74 +31,6 @@ def _lines(text: Column) -> Column:
     return F.filter(
         F.transform(F.split(text, "\n"), lambda ln: F.trim(ln)),
         lambda ln: F.length(ln) > 0,
-    )
-
-
-def _stopword_count_pattern(stopwords) -> str:
-    """Whole-token case-insensitive alternation: a match must span an
-    entire whitespace-delimited token (lookbehind/lookahead anchors), so
-    `regexp_count` over the raw text equals counting split tokens whose
-    lower() is in the list. (?i) is ASCII case folding, which is exact
-    for these a-z lists; the anchored-both-sides alternation makes match
-    order irrelevant (a prefix alternative fails the lookahead and the
-    engine backtracks to the full-token one)."""
-    return r"(?i)(?:^|(?<=\s))(?:" + "|".join(sorted(stopwords)) + r")(?=\s|$)"
-
-
-#: one \n-delimited segment whose space-trimmed form is non-empty:
-#: (?d) pins ^ to \n boundaries (Java multiline otherwise also breaks at
-#: \r), then optional leading spaces, one non-space, rest of the line.
-#: Deliberately dot-free — Spark compiles regexp_* patterns with dot
-#: matching newlines, so `.` would glue lines together.
-_NONEMPTY_LINE_PATTERN = r"(?dm)^ *[^ \n][^\n]*"
-
-
-def with_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Append the FEATURE_COLS to df. One projection, no shuffle.
-
-    Every per-WORD quantity is computed by a codegen'd regexp over the
-    raw text (count of \\S+ runs, non-whitespace char count, anchored
-    stopword alternation) instead of the split → higher-order
-    filter/aggregate/array_contains chain: HOFs are CodegenFallback, so
-    the old form interpreted ~n_words × n_stopwords expression nodes per
-    document — the dominant JVM cost of the feature stage (guide §1/§4:
-    prefer built-ins inside codegen). Values are identical (equivalences
-    asserted by the pandas-oracle parity tests); only the per-LINE
-    distinct count still builds an array, over ~10× fewer elements."""
-    text = F.coalesce(F.col(text_col), F.lit(""))
-
-    lines = _lines(text)
-
-    n_words = F.regexp_count(text, F.lit(r"\S+"))
-    n_chars = F.length(text)
-    total_word_chars = F.length(F.regexp_replace(text, r"\s+", ""))
-    n_symbols = F.length(F.regexp_replace(text, r"[A-Za-z0-9\s]", ""))
-    n_stop = F.regexp_count(
-        text, F.lit(_stopword_count_pattern(sl.all_stopwords()))
-    )
-    n_lines = F.regexp_count(text, F.lit(_NONEMPTY_LINE_PATTERN))
-    n_distinct_lines = F.size(F.array_distinct(lines))
-
-    return (
-        df.withColumn("n_words", n_words)
-        .withColumn("n_chars", n_chars)
-        .withColumn(
-            "mean_word_length",
-            F.when(n_words > 0, total_word_chars / n_words).otherwise(F.lit(0.0)),
-        )
-        .withColumn(
-            "symbol_ratio",
-            F.when(n_chars > 0, n_symbols / n_chars).otherwise(F.lit(0.0)),
-        )
-        .withColumn(
-            "stopword_fraction",
-            F.when(n_words > 0, n_stop / n_words).otherwise(F.lit(0.0)),
-        )
-        .withColumn("n_lines", n_lines)
-        .withColumn(
-            "dup_line_fraction",
-            F.when(n_lines > 0, 1.0 - n_distinct_lines / n_lines).otherwise(F.lit(0.0)),
-        )
     )
 
 

@@ -86,7 +86,7 @@ def drift_task(
 
     from pyspark.sql import functions as F
 
-    from ..severity import severity_rank_expr
+    from ..severity import severity_rank, severity_rank_expr
 
     ev = spark.read.parquet(os.path.join(output_root, "events")).filter(
         F.col("event_type") == "distribution_drift"
@@ -97,7 +97,7 @@ def drift_task(
             ev.orderBy(F.desc("ts"), "event_id").limit(limit).collect()]
     result = {"drift_events": len(rows), "events": rows}
     if fail_on is not None:
-        rank = {"low": 1, "medium": 2, "high": 3}[fail_on]
+        rank = severity_rank(fail_on)
         worst = ev.agg(
             F.max(severity_rank_expr(F.col("severity")))
         ).collect()[0][0] or 0

@@ -1,11 +1,13 @@
 """Pure-python/pandas reference implementation of the full quality filter.
 
 This is the "reference labels" generator (SURVEY.md §5: slow, obviously
-correct, driver-side). It re-implements the feature definitions of
-functions/textfeat.py *independently* (python string ops, not Spark
-expressions) so the pytest F1/byte-identity comparison is a genuine
-cross-check, mirroring the reference's hand-computed-expectation test
-style (/root/reference/tests/test_drift_strategies.py:33-60).
+correct, driver-side). ``doc_features`` implements the document-feature
+spec written in ``functions/scoring.feature_batch``'s docstring
+*independently* (its own regexes and a per-word ASCII fold, nothing
+imported from ``scoring``), so the pytest parity and byte-identity
+comparisons are a genuine cross-check, mirroring the reference's
+hand-computed-expectation test style
+(/root/reference/tests/test_drift_strategies.py:33-60).
 
 Model scores (langid, perplexity) reuse the shared deterministic scorer
 functions — they *are* the reference models.
@@ -23,14 +25,21 @@ from ..functions.langid import score_text
 from ..functions.perplexity import perplexity
 from ..functions.scrub import scrub_python
 
-_WS = re.compile(r"\s+")
-_SYM = re.compile(r"[^A-Za-z0-9\s]")
+#: a word: a run of anything but Java's \s, which is ASCII-only
+_WORD = re.compile(r"[^ \t\n\x0B\f\r]+")
+#: a symbol: anything but an ASCII letter or digit or Java's \s
+_SYM = re.compile(r"[^A-Za-z0-9 \t\n\x0B\f\r]")
+_ASCII_UPPER = re.compile(r"[A-Z]")
+
+
+def _ascii_lower(word: str) -> str:
+    return _ASCII_UPPER.sub(lambda m: chr(ord(m.group()) + 32), word)
 
 
 def doc_features(text: str | None) -> dict:
     text = text or ""
-    words = [w for w in _WS.split(text) if w]
-    lines = [ln.strip() for ln in text.split("\n")]
+    words = _WORD.findall(text)
+    lines = [ln.strip(" ") for ln in text.split("\n")]
     lines = [ln for ln in lines if ln]
     n_words = len(words)
     n_chars = len(text)
@@ -41,7 +50,8 @@ def doc_features(text: str | None) -> dict:
         "mean_word_length": (sum(len(w) for w in words) / n_words) if n_words else 0.0,
         "symbol_ratio": (len(_SYM.findall(text)) / n_chars) if n_chars else 0.0,
         "stopword_fraction": (
-            sum(1 for w in words if w.lower() in stop) / n_words if n_words else 0.0
+            sum(1 for w in words if _ascii_lower(w) in stop) / n_words
+            if n_words else 0.0
         ),
         "n_lines": len(lines),
         "dup_line_fraction": (

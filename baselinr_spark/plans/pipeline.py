@@ -137,11 +137,11 @@ def transform_pages(
         df = textfeat.with_line_features(df)
     if cfg.cc_rule:
         df = textfeat.with_cc_features(df)
-    # n_chars/symbol_ratio are cheap JVM expressions; the word/line
-    # features ride the fused UDF (functions/scoring.py — the text is
-    # already crossing the boundary for the model scores, and a python
-    # split+set pass beats the anchored stopword regexp ~7x). Values are
-    # identical to textfeat.with_features (parity-tested).
+    # n_chars/symbol_ratio are cheap JVM expressions (Java's \s is ASCII
+    # [ \t\n\x0B\f\r]); the word/line features ride the fused UDF, the
+    # text already crossing the boundary for the model scores. Both follow
+    # the one spec in functions/scoring.feature_batch's docstring, which
+    # oracle/pandas_ref.doc_features implements independently.
     text = F.coalesce(F.col("text"), F.lit(""))
     n_chars = F.length(text)
     n_symbols = F.length(F.regexp_replace(text, r"[A-Za-z0-9\s]", ""))

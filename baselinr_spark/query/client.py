@@ -25,6 +25,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from ..severity import severity_rank_expr
+
 
 def _paginate(df: DataFrame, order: list, limit: int, offset: int) -> DataFrame:
     # orderBy().limit() compiles to TakeOrderedAndProject — per-partition
@@ -154,14 +156,6 @@ def query_table_history(
     ).orderBy(F.col("profiled_at").desc(), F.col("run_id"))
 
 
-def severity_priority(col: Column) -> Column:
-    """high > medium > low > none (client.py:516) — the shared
-    ordering from ``baselinr_spark.severity``."""
-    from ..severity import severity_rank_expr
-
-    return severity_rank_expr(col)
-
-
 def drift_type_of_metric(metric: Column) -> Column:
     """Infer drift type from a metric name (client.py:540-553):
     schema/column → schema; count/row → volume; mean/stddev/
@@ -206,7 +200,8 @@ def query_active_drift_summary(
         .otherwise(F.lit(0))
     )
     agg = ev.groupBy("table_name").agg(
-        F.max(severity_priority(F.col("drift_severity"))).alias("_sev"),
+        # high > medium > low > none (client.py:516)
+        F.max(severity_rank_expr(F.col("drift_severity"))).alias("_sev"),
         F.max(type_rank).alias("_trank"),
         F.min("timestamp").alias("started_at"),
         F.count("*").alias("event_count"),

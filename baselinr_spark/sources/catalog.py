@@ -307,13 +307,13 @@ def table_metadata(tables: dict[str, str], now=None) -> list[dict]:
     for name, (files, _) in zip(names, list_data_files(
             [tables[n] for n in names])):
         path = tables[name]
-        parts = list_partitions(path)
-        pkey = None
-        if parts:
-            first = next(
-                n for n in os.listdir(path)
-                if "=" in n and os.path.isdir(os.path.join(path, n)))
-            pkey = first.split("=", 1)[0]
+        # partitioning from the key=value dirs a reader sees (any key,
+        # not only dt=: the metadata tables are partition_key=)
+        keys = sorted(
+            n.split("=", 1)[0] for n in (
+                os.listdir(path) if os.path.isdir(path) else ())
+            if "=" in n and not n.startswith(("_", "."))
+            and os.path.isdir(os.path.join(path, n)))
         last_mod = (_dt.datetime.utcfromtimestamp(
             max(f.mtime_ns for f in files) / 1e9) if files else None)
         days = ((now - last_mod).total_seconds() / 86400.0
@@ -322,5 +322,6 @@ def table_metadata(tables: dict[str, str], now=None) -> list[dict]:
                      "size_bytes": sum(f.size for f in files),
                      "last_modified_time": last_mod,
                      "days_since_modified": days,
-                     "has_partitions": bool(parts), "partition_key": pkey})
+                     "has_partitions": bool(keys),
+                     "partition_key": keys[0] if keys else None})
     return rows

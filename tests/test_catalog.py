@@ -69,6 +69,21 @@ def test_table_metadata_skips_a_crashed_stage(tmp_path):
     assert r["has_partitions"] and r["partition_key"] == "dt"
 
 
+def test_table_metadata_partition_key_layout(tmp_path):
+    """A metadata table's `partition_key=<p>` layout is partitioned by
+    `partition_key`; a crashed replace's `.stage-*` dir is not a
+    partition. Spark-free."""
+    path = str(tmp_path / "metrics")
+    for d in ("partition_key=a", "partition_key=b",
+              ".stage-x/new/partition_key=a"):
+        os.makedirs(os.path.join(path, d))
+        pq.write_table(pa.table({"v": [1]}),
+                       os.path.join(path, d, "part-0.parquet"))
+    [r] = catalog.table_metadata({"metrics": path})
+    assert (r["has_partitions"], r["partition_key"]) == (True, "partition_key")
+    assert r["row_count"] == 2
+
+
 def test_write_partitioned_keeps_session_overwrite_mode(spark, tmp_path):
     """The write replaces the listed dts, staged and swapped, whatever
     the session's overwrite mode: an unlisted dt is kept, a listed dt

@@ -137,6 +137,31 @@ def test_airflow_tasks_and_dummy_operator(spark, warehouse, out_root):
         op.execute({})
 
 
+def test_airflow_drift_fail_on_uses_shared_severity(spark, tmp_path):
+    """fail_on ranks through severity.severity_rank: case-insensitive,
+    and a typo is a ValueError naming the choices."""
+    import datetime as dt
+
+    from baselinr_spark.integrations import airflow as af
+    from baselinr_spark.plans.events import EVENTS_DDL
+    from baselinr_spark.sources import catalog
+
+    ts = dt.datetime(2025, 6, 1, tzinfo=dt.timezone.utc)
+    catalog.replace_partitions(str(tmp_path / "events"), [
+        {"event_id": f"e{i}", "event_type": "distribution_drift",
+         "partition": "2025-06-01", "severity": sev, "ts": ts}
+        for i, sev in enumerate(("low", "medium"))], EVENTS_DDL,
+        ["2025-06-01"])
+    out = str(tmp_path)
+    assert af.drift_task(spark, out, fail_on="HIGH") == \
+        af.drift_task(spark, out, fail_on="high")
+    assert af.drift_task(spark, out, fail_on="HIGH")["worst_severity_rank"] == 2
+    with pytest.raises(RuntimeError, match="severity"):
+        af.drift_task(spark, out, fail_on="Medium")
+    with pytest.raises(ValueError, match="expected one of"):
+        af.drift_task(spark, out, fail_on="hgih")
+
+
 def test_dagster_sensor_logic(spark, warehouse, tmp_path):
     from baselinr_spark.integrations import dagster as dg
     from baselinr_spark.plans.pipeline import run_pipeline

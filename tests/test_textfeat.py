@@ -1,46 +1,106 @@
-"""Spark native-expression features vs the independent pandas oracle."""
+"""Document features: the fused UDF's feature_batch (the spec) against
+the independent pandas oracle, and the opt-in JVM feature families."""
 
-import math
+import datetime as dt
 
-from pyspark.sql import functions as F
+import pandas as pd
+import pytest
 
-from baselinr_spark.functions.textfeat import FEATURE_COLS, with_features
+from baselinr_spark.functions import synthlang as sl
+from baselinr_spark.functions.scoring import feature_batch
 from baselinr_spark.oracle.pandas_ref import doc_features
 from baselinr_spark.sources.pages import PAGES_DDL, generate_pages_pandas
 
+#: whitespace, line and case-folding edges of the spec; the last rows are
+#: the classes where Python's \s, str.lower() or str.strip() would differ
+EDGE_TEXTS = [
+    None, "", "   \n\n  ", "a", "one", " the ", "x\t\ty", "l1\n\nl2\n \n\t\nx",
+    "a\rb", "\r", "THE the The", "one\ntwo\ntwo\n", "\ta\t", "a\na\na\nb",
+    "a\x0bb\x0cc", "\x0b\n\x0c",
+    # U+212A KELVIN SIGN lowers to 'k' in Python but the spec folds
+    # ASCII A-Z only: 'ketgu' is a stopword, the Kelvin spelling is not
+    "\u212aetgu", "ketgu \u212aETGU KETGU \u00e9",
+    # Unicode whitespace and the \x1c-\x1f separators are word chars
+    "a\xa0b c", "x\u2003y", "a\x1cb", "a\x1db", "a\x1eb", "a\x1fb",
+    "\xa0", "p\u3000q\u2028r\x85s",
+    # CRLF and LF lines: 'a\r' and 'a' are different lines
+    "a\r\na\n", "a\r\na\na\r\nb\n", " a \r\n a\n\r\n",
+]
 
-def test_features_match_oracle(spark):
-    pdf = generate_pages_pandas(150, seed=11)
-    df = spark.createDataFrame(pdf, schema=PAGES_DDL)
-    got = {r["url"]: r.asDict() for r in with_features(df).collect()}
-    assert len(got) == len(pdf)
-    for _, row in pdf.iterrows():
-        exp = doc_features(row["text"])
-        g = got[row["url"]]
-        for k in FEATURE_COLS:
-            assert math.isclose(float(g[k]), float(exp[k]), rel_tol=1e-12, abs_tol=1e-12), (
-                row["url"], k, g[k], exp[k])
 
-
-def test_features_edge_cases(spark):
-    rows = [
-        ("u1", ""),            # empty
-        ("u2", "   \n\n  "),   # whitespace only
-        ("u3", "one"),
-        ("u4", None),          # null text
-        ("u5", "a\na\na\nb"),  # dup lines 2/4 distinct
-    ]
-    df = spark.createDataFrame(rows, "url string, text string")
-    got = {r["url"]: r.asDict() for r in with_features(df).collect()}
-    assert got["u1"]["n_words"] == 0 and got["u1"]["mean_word_length"] == 0.0
-    assert got["u2"]["n_words"] == 0 and got["u2"]["dup_line_fraction"] == 0.0
-    assert got["u3"]["n_words"] == 1 and got["u3"]["mean_word_length"] == 3.0
-    assert got["u4"]["n_words"] == 0
-    assert abs(got["u5"]["dup_line_fraction"] - 0.5) < 1e-12
-    for u, t in rows:
+def _assert_batch_equals_oracle(texts):
+    got = feature_batch(texts, frozenset(sl.all_stopwords()))
+    for i, t in enumerate(texts):
         exp = doc_features(t)
-        for k in FEATURE_COLS:
-            assert math.isclose(float(got[u][k]), float(exp[k]), abs_tol=1e-12)
+        for f, col in got.items():
+            assert col[i] == exp[f], (i, f, t, col[i], exp[f])
+
+
+def test_features_match_oracle():
+    _assert_batch_equals_oracle(list(generate_pages_pandas(150, seed=11)["text"]))
+
+
+def test_features_edge_cases():
+    rows = ["", "   \n\n  ", "one", None, "a\na\na\nb"]
+    f = [doc_features(t) for t in rows]
+    assert f[0]["n_words"] == 0 and f[0]["mean_word_length"] == 0.0
+    assert f[1]["n_words"] == 0 and f[1]["dup_line_fraction"] == 0.0
+    assert f[2]["n_words"] == 1 and f[2]["mean_word_length"] == 3.0
+    assert f[3]["n_words"] == 0
+    assert abs(f[4]["dup_line_fraction"] - 0.5) < 1e-12
+    _assert_batch_equals_oracle(rows)
+
+
+@pytest.mark.parametrize("text, field, value", [
+    ("a\xa0b c", "n_words", 2),
+    ("a\xa0b c", "symbol_ratio", 0.2),
+    ("x\u2003y", "n_words", 1),
+    ("a\x1cb", "n_words", 1),
+    ("a\r\na\n", "dup_line_fraction", 0.0),
+    ("l1\n\nl2\n \n\t\nx", "n_lines", 4),
+    ("\u212aetgu ketgu", "stopword_fraction", 0.5),
+])
+def test_oracle_follows_the_spec_on_unicode_edges(text, field, value):
+    assert doc_features(text)[field] == value
+
+
+def test_feature_batch_matches_oracle_on_edges(pages_pdf):
+    """Exact equality of every feature_batch field, over the corpus and
+    every whitespace/line/folding edge row."""
+    _assert_batch_equals_oracle(list(pages_pdf["text"].head(300)) + EDGE_TEXTS)
+
+
+def test_transform_pages_edge_verdicts_match_reference(spark):
+    """Edge docs through transform_pages keep/drop exactly as the pandas
+    reference says: this also holds the JVM-side n_chars/symbol_ratio to
+    the oracle. Each joined doc is a kept corpus doc's first 60 words
+    (over min_words) glued by a Unicode space or a \x1c-\x1f separator,
+    which the spec counts as one word."""
+    from baselinr_spark.oracle.pandas_ref import reference_labels
+    from baselinr_spark.plans.pipeline import transform_pages
+
+    corpus = generate_pages_pandas(40, seed=11)
+    kept = reference_labels(corpus)["expected_keep"]
+    base = corpus["text"][kept.to_numpy()].iloc[0]
+    words = base.split()[:60]
+    lines = [ln for ln in base.split("\n") if ln.strip()]
+    texts = EDGE_TEXTS + [base] + [
+        sep.join(words) for sep in ("\xa0", "\u2003", "\x1c", "\x1f")
+    ] + [
+        # every line twice, once CRLF- and once LF-terminated
+        "".join(f"{ln}\r\n{ln}\n" for ln in lines),
+        base.replace("k", "\u212a"),
+    ]
+    ts = dt.datetime(2024, 1, 1)
+    rows = [(f"u{i}", ts, None, t, "aa") for i, t in enumerate(texts)]
+    df = spark.createDataFrame(rows, schema=PAGES_DDL)
+    got = {r["url"]: (r["keep"], list(r["drop_reasons"]))
+           for r in transform_pages(spark, df).collect()}
+    ref = reference_labels(pd.DataFrame({"url": [r[0] for r in rows],
+                                         "text": texts}))
+    exp = {u: (k, list(d)) for u, k, d in zip(
+        ref["url"], ref["expected_keep"], ref["expected_drop_reasons"])}
+    assert got == exp
 
 
 def test_repetition_features_hand_computed(spark):
@@ -144,28 +204,3 @@ def test_repetition_fold_matches_counter_reference(spark):
         for n in (2, 5):
             _, dup = ref(t, n)
             assert abs(out[i][f"dup_{n}gram_char_fraction"] - dup) < 1e-12, (i, n, t)
-
-
-def test_udf_features_match_jvm_features(spark, pages_pdf):
-    """The fused-UDF word/line features (functions/scoring.feature_batch)
-    must equal textfeat.with_features' JVM expressions value-for-value —
-    the pipeline computes them python-side since round 6."""
-    from pyspark.sql import functions as F
-
-    from baselinr_spark.functions import synthlang as sl
-    from baselinr_spark.functions.scoring import FEATURE_FIELDS, feature_batch
-    from baselinr_spark.functions.textfeat import with_features
-
-    rows = list(pages_pdf["text"].head(300)) + [
-        None, "", "   \n\n  ", "a", " the ", "x\t\ty", "l1\n\nl2\n \n\t\nx",
-        "a\rb", "\r", "THE the The", "one\ntwo\ntwo\n", "\ta\t", "a\na\na\nb",
-        # U+212A KELVIN SIGN lowers to 'k' in Python but not under Java's
-        # ASCII-only (?i): 'ketgu' is a stopword, the Kelvin spelling is not
-        "\u212aetgu", "ketgu \u212aETGU KETGU \u00e9",
-    ]
-    df = spark.createDataFrame([(t,) for t in rows], "text string")
-    jvm = with_features(df).select("text", *FEATURE_FIELDS).collect()
-    py = feature_batch(rows, frozenset(sl.all_stopwords()))
-    for i, r in enumerate(jvm):
-        for f in FEATURE_FIELDS:
-            assert r[f] == py[f][i], (i, f, r["text"], r[f], py[f][i])
